@@ -20,6 +20,7 @@ object Explain {
       .config("spark.ui.enabled", "false")
     Tables.requiredConfs.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
+    graft.functions.GraftFunctions.register(spark)
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.queries(name)(spark, sfDir)
     if (mode != "time-only") df.explain(mode)

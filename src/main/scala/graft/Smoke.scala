@@ -13,6 +13,7 @@ object Smoke {
       .config("spark.ui.enabled", "false")
     Tables.requiredConfs.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
+    graft.functions.GraftFunctions.register(spark)
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.entry(spark)
     df.printSchema()

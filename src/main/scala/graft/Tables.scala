@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Per-(session, key) single-evaluation memo, generalized over the value
   * type so the DataFrame memo, the IVF centroid grid and the trained
@@ -67,10 +68,27 @@ private[graft] final class SessionMemo[V] {
   * through these helpers so the scan always starts from the raw parquet —
   * Catalyst then gets a full view for column pruning / filter pushdown
   * (verified via `.explain`: `PushedFilters` + minimal `ReadSchema`).
+  *
+  * Each table's schema is resolved once per session: a plain
+  * `spark.read.parquet` infers it with a Spark job (footer reads in
+  * `mergeSchemasInParallel`) on every call, and for a dashboard request
+  * that loads several tables those jobs are most of its build time
+  * (they queue behind other requests' tasks). The inferred schema is
+  * memoized per (session, [[pathFingerprint]]) and handed back as the
+  * read's schema, so every call after the first runs no job. Each call still resolves a fresh
+  * relation — new attribute ids (self-joins stay unambiguous) and a
+  * fresh file listing — and a regenerated file changes the fingerprint,
+  * so its schema is inferred again.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val schema = schemaMemo.get(spark, pathFingerprint(spark, path).toString)(
+      spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
+
+  private val schemaMemo = new SessionMemo[StructType]
 
   /** Session configs every graft session needs. `nanosAsLong` covers the
     * encoding `events.parquet` carried through round 6 — TIMESTAMP(NANOS),
@@ -122,6 +140,7 @@ object Tables {
     * times up to 7× (observed: q69 3.4 s standalone vs 23.7 s mid-bench
     * before this hook). */
   def clearMemo(spark: SparkSession): Unit = {
+    schemaMemo.drain(spark)
     memo.drain(spark).foreach { df =>
       try df.unpersist(blocking = false) catch { case _: Throwable => () }
     }
@@ -155,24 +174,21 @@ object Tables {
   /** (path, latest mtime, total size) — the cache key that makes a
     * same-JVM regeneration of a table invalidate anything derived from
     * it (row counts here; index artifacts like the q154 bloom key on
-    * this too). */
+    * this too; the per-session schema memo behind [[table]]). */
   def pathFingerprint(spark: SparkSession, path: String): (String, Long, Long) = {
     val (_, parts) = parquetParts(spark, path)
     (path, parts.map(_.getModificationTime).maxOption.getOrElse(0L), parts.map(_.getLen).sum)
   }
 
-  def parquetRowCount(spark: SparkSession, path: String): Long = {
-    val (conf, parts) = parquetParts(spark, path)
-    val fingerprint =
-      (path, parts.map(_.getModificationTime).maxOption.getOrElse(0L), parts.map(_.getLen).sum)
-    rowCounts.getOrElseUpdate(fingerprint, {
+  def parquetRowCount(spark: SparkSession, path: String): Long =
+    rowCounts.getOrElseUpdate(pathFingerprint(spark, path), {
+      val (conf, parts) = parquetParts(spark, path)
       parts.map { f =>
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf)
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         try r.getRecordCount finally r.close()
       }.sum
     })
-  }
 
   def region(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "nation")

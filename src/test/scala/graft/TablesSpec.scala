@@ -1,0 +1,86 @@
+package graft
+
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions._
+
+/** The loaders resolve each table's schema once per session: repeat
+  * calls start no Spark job, yet still build fresh relations, and a
+  * regenerated file is re-inferred. */
+class TablesSpec extends SparkSpec {
+  /** Spark jobs `body` starts on this thread, counted by a listener on
+    * the body's job group. A flush job in a second group runs after the
+    * body; the bus delivers events in order, so once the flush job's
+    * start is seen every job of the body has been counted. */
+  private def jobsStartedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"tables-spec-${java.util.UUID.randomUUID()}"
+    val counted = new AtomicInteger
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => counted.incrementAndGet()
+          case g if g == s"$group-flush" => flushed.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-flush", "flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, TimeUnit.SECONDS), "listener bus did not deliver the flush job")
+      counted.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def tempDir(): String =
+    java.nio.file.Files.createTempDirectory("graft_tables").toString
+
+  test("a repeat load of the same file starts no Spark job") {
+    val dir = tempDir()
+    spark.range(100).toDF("user_id").write.parquet(s"$dir/t.parquet")
+    assert(jobsStartedBy(Tables.table(spark, dir, "t")) >= 1)
+    assert(jobsStartedBy(Tables.table(spark, dir, "t")) === 0)
+    assert(Tables.table(spark, dir, "t").count() === 100L)
+  }
+
+  test("two events loads self-join on fresh attribute ids") {
+    val dir = tempDir()
+    spark.range(60).select((col("id") % 7).as("user_id"), timestamp_seconds(col("id")).as("ts"))
+      .write.parquet(s"$dir/events.parquet")
+    val a = Tables.events(spark, dir)
+    val b = Tables.events(spark, dir)
+    val joined = a.join(b, a("user_id") === b("user_id"))
+      .select(a("user_id"), a("ts").as("ts_a"), b("ts").as("ts_b"))
+    // the same pairs as two schema-inferring reads, and as many as the
+    // per-user counts predict (a shared attribute id would collapse the
+    // condition to true and return the cross product)
+    val plainA = Tables.normalizeEventTs(spark.read.parquet(s"$dir/events.parquet"))
+    val plainB = Tables.normalizeEventTs(spark.read.parquet(s"$dir/events.parquet"))
+    val plain = plainA.join(plainB, plainA("user_id") === plainB("user_id"))
+      .select(plainA("user_id"), plainA("ts").as("ts_a"), plainB("ts").as("ts_b"))
+    val pairs = a.groupBy("user_id").count()
+      .agg(sum(col("count") * col("count"))).head().getLong(0)
+    assert(joined.count() === pairs)
+    assert(joined.count() < a.count() * a.count())
+    assert(joined.exceptAll(plain).isEmpty && plain.exceptAll(joined).isEmpty)
+  }
+
+  test("overwriting a table with a new schema is seen by the next load") {
+    val dir = tempDir()
+    val path = s"$dir/t.parquet"
+    spark.range(10).toDF("id").write.parquet(path)
+    assert(Tables.table(spark, dir, "t").columns.toSeq === Seq("id"))
+    spark.range(5).select(col("id").cast("string").as("name"), lit(7).as("score"))
+      .write.mode("overwrite").parquet(path)
+    val t = Tables.table(spark, dir, "t")
+    assert(t.schema.fieldNames.toSeq === Seq("name", "score"))
+    assert(t.schema("score").dataType === org.apache.spark.sql.types.IntegerType)
+    assert(t.collect().map(_.getString(0)).sorted.toSeq === (0 until 5).map(_.toString))
+  }
+}
