@@ -295,19 +295,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val smallDir = WarmupDir
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    Tables.requiredConfs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // functions + custom strategy/rule up front: rank-filter queries must
-    // hit the bounded-heap rewrite in EVERY pass, not only after the
-    // query that happens to install it has run once
-    graft.functions.GraftFunctions.register(spark)
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // Targeted mode (presnapshot's perf gate): args are query-name
     // prefixes; a non-empty selection benches only those queries and
     // writes `bench_partial.json` — NEVER `bench_last.json`, so a

@@ -1,11 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Batch plan dumper for the optimization-round deliverables: writes
   * `plans/<tag>/<query>_<suffix>.txt` with the `explain("formatted")`
-  * output of each named query, all in ONE session (the per-JVM cost of
-  * [[Explain]] × N queries is what this exists to avoid). Usage:
+  * output of each named query, all in ONE session (one JVM per query is
+  * what this exists to avoid); `graft.Prof <query> <sfDir> 1` times one.
+  * Usage:
   *   runMain graft.PlanDump <tag> <suffix> <q1,q2,...> [sfDir]
   */
 object PlanDump {
@@ -14,16 +13,7 @@ object PlanDump {
     val suffix = args(1)
     val names = args(2).split(',').filter(_.nonEmpty)
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    Tables.requiredConfs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     val outDir = java.nio.file.Paths.get("plans", tag)
     java.nio.file.Files.createDirectories(outDir)
     names.foreach { name =>

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Throwaway profiling harness: times one query N times in a session
   * configured exactly like Bench, optionally after the warm-up loop.
   * Usage: runMain graft.Prof <query> [sfDir] [reps] [warmupAll] [warmupDir]
@@ -18,16 +16,7 @@ object Prof {
     val reps = if (args.length > 2) args(2).toInt else 3
     val warmupAll = args.length > 3 && args(3) == "true"
     val warmupDir = if (args.length > 4) args(4) else Bench.WarmupDir
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    Tables.requiredConfs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     if (warmupAll) {
       if (!new java.io.File(warmupDir).isDirectory)
         println(s"[prof] WARNING: warm-up dir $warmupDir missing — warm-up is a no-op")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -18,15 +18,7 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val rate = if (args.length > 0) args(0).toInt else 200000
     val runSec = if (args.length > 1) args(1).toInt else 20
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    Tables.requiredConfs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
+    val spark = GraftSession.local(32)
     import spark.implicits._
 
     def rateSrc(rowsPerSec: Int): DataFrame =

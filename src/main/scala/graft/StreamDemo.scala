@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -14,14 +13,7 @@ import org.apache.spark.sql.streaming.Trigger
 object StreamDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val builder = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    Tables.requiredConfs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(8)
 
     // the file-stream source needs a DIRECTORY; stage each single-file
     // table into a temp dir (testdata is read-only)
@@ -103,7 +95,6 @@ object StreamDemo {
     val docsDir = staged("documents")
     val dSchema = spark.read.parquet(s"$sfDir/documents.parquet").schema
     val chunksOut = s"$stage/chunks_table"
-    graft.functions.GraftFunctions.register(spark)
     val corpusArr = spark.read.parquet(s"$sfDir/documents.parquet")
       .filter(col("doc_id") < 250L)
       .repartition(spark.sparkContext.defaultParallelism)

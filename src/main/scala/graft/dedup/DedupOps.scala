@@ -62,7 +62,6 @@ object DedupOps {
     * downstream shuffle narrow; collision probability over ~30k distinct
     * shingles is ≈ 2e-11, documented as accepted. */
   private[graft] def docShingleArr(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // memo-cached: one row per doc, consumed by several subtrees per plan
     // and by multiple registered queries in one session
     Tables.memoCache(spark, s"shingles/$dir") {
@@ -92,7 +91,6 @@ object DedupOps {
     * 100 TB key the gram shuffle on a 64-bit gram hash instead of the
     * string (the q25 collision rule); strings keep oracle parity here. */
   def sourceOverlap(spark: SparkSession, dir: String, n: Int = 5): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     sourceOverlapCore(
       Tables.documents(spark, dir)
         .repartition(spark.sparkContext.defaultParallelism), n)
@@ -136,7 +134,6 @@ object DedupOps {
     * binomial envelope SketchBounds gates on (the no_oracle pattern of
     * q75/q102 — xxhash64 shingles are not DuckDB-replayable). */
   def lshScurveEval(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val nBands = NumHashes / BandRows
     def bandKeys(sigCol: String) =
       s"transform(sequence(0, ${nBands - 1}), b -> concat_ws('_', " +
@@ -344,7 +341,6 @@ object DedupOps {
   def incrementalDedup(spark: SparkSession, dir: String,
                        splitAt: Long = 250L,
                        threshold: Double = 0.7): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     val corpus = docs.filter(col("doc_id") < splitAt)
     val fresh = docs.filter(col("doc_id") >= splitAt)
@@ -406,7 +402,6 @@ object DedupOps {
   def incrementalDedupBloom(spark: SparkSession, dir: String,
                             splitAt: Long = 250L,
                             threshold: Double = 0.7): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     val corpus = docs.filter(col("doc_id") < splitAt)
     val fresh = docs.filter(col("doc_id") >= splitAt)
@@ -533,7 +528,6 @@ object DedupOps {
   /** doc_id, simhash (64-char bit string), simhash_word (same bits
     * packed into a long for cheap Hamming via bit_count(xor)). */
   private def simhashFull(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // one-pass custom expression (graft.functions.SimHash64) — the HOF
     // formulation re-ran the md5 transform per bit (64×/doc) after
     // CollapseProject inlining; 40 s → <1 s for q34 at sf0.1/local[4]
@@ -612,7 +606,6 @@ object DedupOps {
     * friendly. */
   def keepBestPerCluster(spark: SparkSession, dir: String,
                          threshold: Double = 0.7): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val clusters = dedupClusters(spark, dir, threshold)
     val toks = Tables.documents(spark, dir)
       .select(col("doc_id"), expr("graft_text_stats(text).n_tokens").as("n_tokens"))

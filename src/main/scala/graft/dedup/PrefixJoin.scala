@@ -329,7 +329,6 @@ object PrefixJoin {
     * representatives, the MEMOIZED q204 pair frame for the near side
     * (skinny doc_b id set), one bounded per-source rollup. */
   def dedupRoi(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // Opt r19 (guide §2.4): the narrow per-doc proxy feeds two consumers
     // that prune differently (reps drops source/n_tokens), so the text
     // scan + per-doc stats + md5 ran twice per execution. The eager

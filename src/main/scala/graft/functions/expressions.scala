@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -501,14 +502,11 @@ case class CmsEstimate(left: Expression, right: Expression)
 }
 
 /** Session registration for the custom expressions (idempotent), exposing
-  * them to `expr(...)`/SQL as `graft_dot` and `graft_minhash_sig`. */
+  * them to `expr(...)`/SQL as `graft_dot`, `graft_minhash_sig`, ... */
 object GraftFunctions {
 
-  /** Single source of truth for the function surface: (name, usage,
-    * builder). BOTH registration paths — the per-session runtime
-    * [[register]] and the deployment-grade [[GraftExtensions]] — iterate
-    * this list, so they can never drift apart (an extension-configured
-    * session once missed a function added only to the runtime path). */
+  /** The function surface: (name, usage, builder). The usage string is
+    * what `DESCRIBE FUNCTION <name>` prints. */
   val all: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
     ("graft_dot",
       "graft_dot(a, b) - sequential-left-fold dot product of two double arrays",
@@ -568,14 +566,14 @@ object GraftFunctions {
     // not observe the flag while the registry is still half-populated
     if (registered.containsKey(spark)) return
     val reg = spark.sessionState.functionRegistry
-    all.foreach { case (name, _, builder) =>
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
+    all.foreach { case (name, usage, builder) =>
+      val info = new ExpressionInfo(getClass.getName, null, name, usage,
+        "", "", "", "", "", "", "built-in")
+      reg.registerFunction(FunctionIdentifier(name), info, builder)
     }
-    // the custom operator's strategy + rewrite rule ride along: before
-    // this, runtime sessions only got them when q63 happened to run
-    // first (GroupTopK.install inside topSpendersPerNationCustom), so
-    // whether q04/q16/q42/q52-style rank filters hit the bounded-heap
-    // plan depended on query ORDER within the session
+    // the custom operator's strategy + rewrite rule install with the
+    // functions, so whether a rank filter hits the bounded-heap plan never
+    // depends on which query ran first in the session
     graft.plans.GroupTopK.install(spark)
     registered.put(spark, java.lang.Boolean.TRUE)
   }

@@ -304,7 +304,6 @@ object Publisher {
     * Shares q42's DuckDB oracle — the custom physical operator is held
     * to the identical bit-exact result. */
   def topSpendersPerNationCustom(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
-    graft.plans.GroupTopK.install(spark)
     val base = spendWithNation(spark, dir)
       .select(col("n_name").as("nation"), col("user_id"), col("spend"))
     graft.plans.GroupTopK(base, Seq("nation"),
@@ -478,7 +477,6 @@ object Publisher {
     * overestimate at eps·N. Rows-only check (sketch layout is
     * engine-specific), exact twin in the same output. */
   def heavyHittersSketch(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val ev = Tables.events(spark, dir)
     val sk = ev.agg(expr("count_min_sketch(event_type, 0.0001d, 0.99d, 42)").as("sk"))
     ev.groupBy("event_type").agg(count(lit(1)).as("exact_ct"))

@@ -29,10 +29,9 @@ object Sketches {
   val K = 256
 
   def kmvOverlap(spark: SparkSession, dir: String): DataFrame =
-    kmvOverlapCore(Tables.events(spark, dir), spark)
+    kmvOverlapCore(Tables.events(spark, dir))
 
-  private[graft] def kmvOverlapCore(events: DataFrame, spark: SparkSession): DataFrame = {
-    graft.plans.GroupTopK.install(spark)
+  private[graft] def kmvOverlapCore(events: DataFrame): DataFrame = {
     // distinct (type, hash) before the heap — duplicate users collapse
     // map-side, so the heap sees each distinct hash once
     val uh = events
@@ -82,7 +81,7 @@ object Sketches {
     * only the xxhash64-dependent estimate columns to the rows-only check
     * + SketchesSpec error bound. */
   def kmvExactTwin(spark: SparkSession, dir: String): DataFrame =
-    kmvOverlapCore(Tables.events(spark, dir), spark)
+    kmvOverlapCore(Tables.events(spark, dir))
       .select(col("type_a"), col("type_b"), col("ka"), col("kb"),
         col("exact_inter"))
       .orderBy("type_a", "type_b")

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.LongType
 /** Grouped top-k as a CUSTOM whole operator — the extension tier the
   * engine otherwise avoids (SURVEY §7 "built-in vs custom"): a logical
   * node, a planner strategy, and a two-phase physical operator, wired
-  * through `spark.experimental.extraStrategies` / the session extension.
+  * through `spark.experimental.extraStrategies`.
   *
   * Why a custom operator: the declarative formulation
   * (`row_number().over(Window.partitionBy(g).orderBy(o)) <= k`, q42)
@@ -70,8 +70,7 @@ object GroupTopK {
   }
 
   /** Idempotently install the planner strategy AND the rank-limit
-    * rewrite rule on a session (the extensions path installs both for
-    * extension-configured sessions). */
+    * rewrite rule on a session. */
   def install(spark: SparkSession): Unit = synchronized {
     if (!spark.experimental.extraStrategies.contains(GroupTopKStrategy)) {
       spark.experimental.extraStrategies =

@@ -43,7 +43,6 @@ object TrainingPipeline {
                    stopRatioMax: Double = 0.6,
                    corpusIndex: Option[(Array[Byte], DataFrame)] = None,
                    nearDupIndex: Option[(DataFrame, DataFrame)] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val gated = docs
       .withColumn("st", expr("graft_text_stats(text)"))
       .filter(col("st.n_tokens") >= minTokens &&
@@ -189,7 +188,6 @@ object TrainingPipeline {
     val spark = fresh.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    graft.functions.GraftFunctions.register(spark)
     val withHs = fresh.select(col("doc_id"), col("source"), col("text"),
       expr("graft_shingle_hashes(text, 3)").as("hs"))
     val payload = withHs.select(col("doc_id"), col("source"), col("text"),
@@ -255,7 +253,6 @@ object TrainingPipeline {
 
   def overlapScreen(docs: DataFrame, corpusPostings: DataFrame,
                     minShared: Int = 2): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.select(col("doc_id"), explode(expr("graft_winnow(text).fps")).as("fp"))
       .join(corpusPostings.select(col("fp"), col("doc_id").as("corpus_doc")),
         Seq("fp"))
@@ -301,7 +298,6 @@ object TrainingPipeline {
     val spark = freshVecs.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    graft.functions.GraftFunctions.register(spark)
     val payload = freshVecs.select(col("vec_id"), col("label"), col("v"),
       lit(false).as("dup"), lit(true).as("payload"))
     val cand = graft.vector.VectorOps
@@ -348,7 +344,6 @@ object TrainingPipeline {
     val spark = freshVecs.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    graft.functions.GraftFunctions.register(spark)
     val payload = freshVecs.select(col("vec_id"), col("label"), col("v"),
       lit(false).as("dup"), lit(true).as("payload"))
     val cand = graft.vector.VectorOps
@@ -389,7 +384,6 @@ object TrainingPipeline {
     val spark = freshVecs.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    graft.functions.GraftFunctions.register(spark)
     val payload = freshVecs.select(col("vec_id"), col("label"), col("v"),
       lit(false).as("dup"), lit(true).as("payload"))
     val cand = graft.vector.VectorOps
@@ -434,7 +428,6 @@ object TrainingPipeline {
     val spark = freshVecs.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    graft.functions.GraftFunctions.register(spark)
     val payload = freshVecs.select(col("vec_id"), col("label"), col("v"),
       lit(false).as("dup"), lit(true).as("payload"))
     val cand = graft.vector.VectorOps
@@ -555,7 +548,6 @@ object TrainingPipeline {
       org.apache.spark.sql.Dataset[OovStat] = {
     import org.apache.spark.sql.{Encoder, Encoders}
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     implicit val inEnc: Encoder[OovObs] = Encoders.product[OovObs]
     implicit val outEnc: Encoder[OovStat] = Encoders.product[OovStat]
     implicit val stateEnc: Encoder[(Long, Long, Long)] =
@@ -604,7 +596,6 @@ object TrainingPipeline {
       org.apache.spark.sql.Dataset[ByteFertStat] = {
     import org.apache.spark.sql.{Encoder, Encoders}
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     implicit val inEnc: Encoder[ByteFertObs] = Encoders.product[ByteFertObs]
     implicit val outEnc: Encoder[ByteFertStat] = Encoders.product[ByteFertStat]
     implicit val stateEnc: Encoder[(Long, Long)] =
@@ -649,7 +640,6 @@ object TrainingPipeline {
       org.apache.spark.sql.Dataset[UniFertStat] = {
     import org.apache.spark.sql.{Encoder, Encoders}
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     implicit val inEnc: Encoder[UniFertObs] = Encoders.product[UniFertObs]
     implicit val outEnc: Encoder[UniFertStat] = Encoders.product[UniFertStat]
     implicit val stateEnc: Encoder[(Long, Long)] =
@@ -1371,7 +1361,6 @@ object TrainingPipeline {
       org.apache.spark.sql.Dataset[Admitted] = {
     import org.apache.spark.sql.{Encoder, Encoders}
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     implicit val inEnc: Encoder[QuotaDoc] = Encoders.product[QuotaDoc]
     implicit val outEnc: Encoder[Admitted] = Encoders.product[Admitted]
     implicit val stateEnc: Encoder[Long] = Encoders.scalaLong

@@ -74,7 +74,6 @@ object Curation {
     * keyed by bigram, then one per-doc sum. Docs under 2 tokens have no
     * bigrams and are absent on both sides. */
   def docPerplexity(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // memoized END-TO-END (the q129 bigramLmScore rule): the scored
     // frame feeds q239 itself, the q244 curriculum and the q257 keep
     // list in one session — without this each re-ran the LM build +
@@ -139,7 +138,6 @@ object Curation {
     * bounded artifacts); scoring is the q239 bigram-keyed join; the
     * report is a bounded (source × split) partial agg. */
   def splitGap(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = graft.Tables.documents(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
       .withColumn("split", graft.text.TextOps.splitCol)
@@ -1335,7 +1333,6 @@ object Curation {
     * partial-agg shuffle keyed by (source, verdict) — a bounded domain.
     */
   def filterCascade(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     filterCascadeCore(
       Tables.documents(spark, dir)
         .repartition(spark.sparkContext.defaultParallelism))
@@ -1373,7 +1370,6 @@ object Curation {
     * percentiles, mirrored op-for-op in the oracle SQL (q122's idiom).
     */
   def lengthBandFilter(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     lengthBandCore(
       Tables.documents(spark, dir)
         .repartition(spark.sparkContext.defaultParallelism)
@@ -1431,7 +1427,6 @@ object Curation {
     * [[boilerplateProfile]] and [[topBoilerplate]]. */
   private def gramTable(spark: SparkSession, dir: String, n: Int): DataFrame =
     Tables.memoCache(spark, s"grams$n/$dir") {
-      graft.functions.GraftFunctions.register(spark)
       Tables.documents(spark, dir)
         .repartition(spark.sparkContext.defaultParallelism)
         .select(col("doc_id"), col("source"),
@@ -1659,7 +1654,6 @@ object Curation {
     * unpartitioned windows remain the bounded band-domain frames. */
   def trainingManifest(spark: SparkSession, dir: String,
                        frac: Double = 0.30, nShards: Int = 8): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // Opt r19 (guide §1.2/§5): the four-stage funnel was re-derived on
     // EVERY pass by BOTH q200 and q314 (manifestTokenized consumes the
     // manifest twice more) — session-cache the manifest frame per

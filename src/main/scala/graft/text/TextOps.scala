@@ -52,7 +52,6 @@ object TextOps {
   /** Quality scoring: length, stopword ratio, mean token length, and a
     * boolean gate — the standard cheap pre-filter for LLM training data. */
   def qualityScore(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // one-pass custom expression (graft_text_stats) — the HOF formulation
     // re-evaluated the interpreted filter/aggregate lambdas once per
     // downstream reference after projection collapapse
@@ -316,7 +315,6 @@ object TextOps {
     * falls back to a shuffle join on `term` (the same key the tf side
     * already aggregated on) when it doesn't. */
   def tfidfTopTerms(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // per-doc term counts come pre-aggregated from the one-pass
     // graft_token_counts expression: the explode emits one row per
     // DISTINCT term per doc instead of one per token occurrence, so no
@@ -348,7 +346,6 @@ object TextOps {
     * greedy concat-then-slice packing. */
   def packChunks(spark: SparkSession, dir: String,
                  capacity: Int = 2048): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("source").orderBy("doc_id")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
@@ -386,7 +383,6 @@ object TextOps {
     * broadcast totals; TakeOrdered top-k. */
   def pmiCollocations(spark: SparkSession, dir: String,
                       minCount: Long = 5L, k: Int = 25): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
     val bigramCounts = docs
@@ -427,7 +423,6 @@ object TextOps {
     * cut) → broadcast membership join → per-source integer rates. */
   def oovRate(spark: SparkSession, dir: String,
               vocabSize: Int = 30): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
     val occ = docs
@@ -456,7 +451,6 @@ object TextOps {
     * is the q217 expression. Ranks are per-source windows (parallel by
     * source); the slope is per-point arithmetic + one 6-sum aggregate. */
   def zipfSlope(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.expressions.Window
     val freq = Tables.documents(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
@@ -496,7 +490,6 @@ object TextOps {
     * rollup OF THAT RESULT (never a second corpus scan), a broadcast
     * join back, and one per-source sum. */
   def conditionalEntropy(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // Opt r19 (guide §2.4): derive the bigram histogram ONCE. The frame
     // feeds three consumers (the join probe, the per-(source,w1) sums,
     // the per-source totals) that each prune different columns, so
@@ -540,7 +533,6 @@ object TextOps {
   /** Corpus n-gram counting over any frame with a `text` column (shared
     * with ScaleProbe so the probe times the exact operator shape). */
   private[graft] def topBigramsCore(docs: DataFrame, n: Int = 2, k: Int = 25): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .select(explode(expr(s"graft_ngram_counts(text, $n)")).as("g"))
       .groupBy(col("g.gram").as("bigram"))
@@ -556,7 +548,6 @@ object TextOps {
     * report shows the per-language balance of both splits (doc and token
     * volumes), which is what the split is checked for in practice. */
   def trainEvalSplit(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .select(col("lang"), splitCol.as("split"),
         expr("graft_text_stats(text).n_tokens").as("n_tokens"))
@@ -572,7 +563,6 @@ object TextOps {
     * marginals, no grand total). Still one Expand + one two-phase hash
     * aggregate; gid is computed map-side by the Expand node. */
   def corpusGroupingSets(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .select(col("lang"), col("source"),
         expr("graft_text_stats(text).n_tokens").as("n_tokens"))
@@ -762,7 +752,6 @@ object TextOps {
     * projection — zero shuffles, no explode, nothing but the final
     * orderBy, at any corpus size. */
   def repetitionStats(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     withTokens(Tables.documents(spark, dir))
       .withColumn("tc", expr("graft_token_counts(text)"))
       .select(
@@ -849,7 +838,6 @@ object TextOps {
     * partial-combined, and the top-k is a TakeOrdered — no global sort
     * of the term dictionary. */
   def zipfCurve(spark: SparkSession, dir: String, k: Int = 100): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // rank assignment runs AFTER the top-k cut, so the single-partition
     // window only ever sees k rows (the TakeOrdered did the global work)
     val w = org.apache.spark.sql.expressions.Window
@@ -899,7 +887,6 @@ object TextOps {
     * it (advisor, round 6 — two pinned corpus-sized artifacts for one
     * consumed frame). */
   private def bigramTable(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
       .select(col("doc_id"), explode(expr("graft_ngram_counts(text, 2)")).as("g"))
@@ -930,7 +917,6 @@ object TextOps {
     // consumes the identical scored frame, so without this it re-ran the
     // model build + scoring join on every invocation (judge r5 #2)
     Tables.memoCache(spark, s"bigram-lm-scored/$dir") {
-      graft.functions.GraftFunctions.register(spark)
       // corpus vocabulary size: distinct unigrams from the SAME tokenizer
       // (tfTable memo — shared with q52/q118, so the scan is already warm);
       // a driver-side scalar like tfidfTopTerms' nDocs
@@ -1088,7 +1074,6 @@ object TextOps {
     * The df table is corpus-vocabulary-bounded and reusable as an
     * index artifact. */
   def hapaxRisk(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docTok = Tables.documents(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
       .select(col("doc_id"), col("source"),
@@ -1124,7 +1109,6 @@ object TextOps {
     * a bounded domain (alphabet², a few hundred live keys) — and
     * TakeOrdered(k). The corpus is scanned once. */
   def bpePairs(spark: SparkSession, dir: String, k: Int = 25): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
       .select(explode(expr(s"$TokensExpr")).as("tok"))
@@ -1151,7 +1135,6 @@ object TextOps {
     * pass over a bounded domain (|sources| × |langs| × bands) — fact
     * rows never shuffle beyond the map-side combine. */
   def kAnonymityStrata(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val strata = Tables.documents(spark, dir)
       .select(col("source"), col("lang"),
         expr(s"CAST(graft_text_stats(text).n_tokens AS BIGINT) div 100").as("len_band"))
@@ -1337,7 +1320,6 @@ object TextOps {
     * array — O(tokens²) interpreted md5 calls per document (judge r8);
     * the expression is one O(tokens·w) loop. */
   private def winnowedDocs(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
       .withColumn("wn", expr("graft_winnow(text)"))
   }
@@ -1412,7 +1394,6 @@ object TextOps {
     * .CharDiversity]] for why no entropy/logarithm); one narrow map over
     * the scan, no shuffle. */
   def charDiversity(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
       .select(col("doc_id"), expr("graft_char_diversity(text)").as("cd"))

@@ -45,7 +45,6 @@ object VectorOps {
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
 
   private[graft] def vecs(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // embeddings.parquet is a single row group -> one scan task; spread
     // rows before the per-row array work so downstream dot products and
     // explodes parallelize (same fix as TextOps.withTokens)
@@ -749,7 +748,6 @@ object VectorOps {
     * so ScaleProbe times the EXACT operator shape on amplified inputs
     * (mirrors AsOf.asofCore; an inline probe copy drifts silently). */
   private[graft] def knnJoinCore(e: DataFrame, nQueries: Long, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(e.sparkSession)
     val queries = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
     val corpus = e.filter(col("vec_id") >= nQueries)
@@ -822,7 +820,6 @@ object VectorOps {
     * rank filter ever sees them. */
   def hardNegatives(spark: SparkSession, dir: String,
                     nQueries: Long = 10L, k: Int = 3): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val e = vecs(spark, dir)
     val queries = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("label").as("qlabel"),

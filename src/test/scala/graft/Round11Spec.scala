@@ -368,7 +368,6 @@ class Round11Spec extends SparkSpec {
 
   test("plan pins: round-11 joins stay equi-keyed, never cartesian") {
     import graft.dedup.{DedupOps, PrefixJoin}
-    graft.functions.GraftFunctions.register(spark)
     def noCartesian(plan: String, label: String): Unit = {
       assert(!plan.contains("CartesianProduct"), s"$label plans a cartesian product")
       // BroadcastNestedLoopJoin is legal only for the deliberate 1-row
@@ -550,7 +549,6 @@ class Round11Spec extends SparkSpec {
   }
 
   test("nearDupGate batch face reconciles with the q236 pair list") {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     val withArr = DedupOps.docShingleArr(spark, dir)
     val corpusArr = withArr.filter(col("doc_id") < splitAt)

@@ -58,7 +58,7 @@ class Round3dSpec extends SparkSpec {
     val rows = ((1L to 10L).map(u => (u, "a")) ++ (6L to 305L).map(u => (u, "b")))
       .map { case (u, t) => (u * 7L, new java.sql.Timestamp(1700000000000L + u), t, u) }
       .toDF("event_id", "ts", "event_type", "user_id")
-    val out = ops.Sketches.kmvOverlapCore(rows, spark).collect()
+    val out = ops.Sketches.kmvOverlapCore(rows).collect()
     assert(out.length === 1)
     val r = out.head
     assert(r.getAs[Double]("est_a") === 10.0, "sub-K sketch must be exact")

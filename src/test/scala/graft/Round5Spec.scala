@@ -14,7 +14,6 @@ class Round5Spec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("graft_char_diversity counts code points, not UTF-16 units") {
-    graft.functions.GraftFunctions.register(spark)
     val rows = Seq(Some("aab"), Some("𝄞𝄞a"), Some(""), None)
       .toDF("text")
       .select(expr("graft_char_diversity(text)").as("cd"))
@@ -101,7 +100,6 @@ class Round5Spec extends SparkSpec {
   }
 
   test("filter cascade applies rules in priority order, first failure wins") {
-    graft.functions.GraftFunctions.register(spark)
     // short AND stopword-free AND repetitive → too_short (priority 1);
     // long + stopword-free → no_stopwords; long + stopwords but only 2
     // distinct terms in 30 → low_diversity; a normal doc → kept
@@ -123,7 +121,6 @@ class Round5Spec extends SparkSpec {
     val out = graft.text.Curation.lengthBandFilter(spark, sf).collect()
     assert(out.nonEmpty)
     // recompute per-lang from the raw token counts, driver-side
-    graft.functions.GraftFunctions.register(spark)
     val toks = Tables.documents(spark, sf)
       .select(col("lang"), expr("graft_text_stats(text).n_tokens").as("n"))
       .collect().map(r => (r.getString(0), r.getLong(1)))

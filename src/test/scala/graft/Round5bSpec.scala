@@ -155,7 +155,6 @@ class Round5bSpec extends SparkSpec {
     assert(key.toSeq === key.sortBy(identity).toSeq)
     // df is a distinct-doc count: recompute for the top gram independently
     val (g0, df0, _) = top.head
-    graft.functions.GraftFunctions.register(spark)
     val n = Tables.documents(spark, sf)
       .select(col("doc_id"), explode(expr("graft_ngram_counts(text, 5)")).as("g"))
       .filter(col("g.gram") === g0)

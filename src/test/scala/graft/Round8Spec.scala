@@ -95,7 +95,6 @@ class Round8Spec extends SparkSpec {
     assert(plain === bloomed)
     // drive the registered function surface directly: bloom over the
     // corpus fingerprints, membership-test the fresh batch
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     val corpusFp = docs.filter(col("doc_id") < 250)
       .select(md5(col("text")).as("fp")).distinct()

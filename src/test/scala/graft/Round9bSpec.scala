@@ -167,7 +167,6 @@ class Round9bSpec extends SparkSpec {
   test("sourceOverlap set-based plan equals the naive gram self-join") {
     val fast = graft.dedup.DedupOps.sourceOverlap(spark, dir)
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    graft.functions.GraftFunctions.register(spark)
     val grams = Tables.documents(spark, dir)
       .select(col("source"), explode(expr("graft_ngram_counts(text, 5)")).as("g"))
       .select(col("source"), col("g.gram").as("gram")).distinct()

@@ -175,7 +175,6 @@ class Round9eSpec extends SparkSpec {
     assert(manifest.map(_._1).distinct.length === manifest.length)
     assert(manifest.forall(t => t._3 >= 0 && t._3 < 8))
     // the kept (post-dedup, post-quality) frame this funnel cut from
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     val keepIds = docs.groupBy(md5(col("text")).as("fp"))
       .agg(min(col("doc_id")).as("doc_id")).select("doc_id")

@@ -174,7 +174,6 @@ class ScaleLeversSpec extends SparkSpec {
   }
 
   test("LSH skew guard: hot buckets capped, surfaced exactly, small buckets intact") {
-    graft.functions.GraftFunctions.register(spark)
     // a 200-doc exact-duplicate flood: identical shingle arrays → identical
     // signatures → all 16 band buckets hold all 200 docs (the degenerate
     // band key the guard exists for). Plus one genuine near-dup pair

@@ -12,20 +12,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** The same factory every entry point uses, so the suite plans what
+    * the mains and the benchmark run. */
   lazy val session: SparkSession = {
-    val builder = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      // the deployment-grade registration path — the whole suite runs on
-      // extension-injected functions (mains use GraftFunctions.register)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    Tables.requiredConfs.foreach { case (k, v) => builder.config(k, v) }
-    val s = builder.getOrCreate()
+    val s = GraftSession.local(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -978,7 +978,6 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming n-gram counts accumulate across batches (update mode)") {
     implicit val sq = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val input = MemoryStream[Doc]
     val counts = input.toDF()
       .select(org.apache.spark.sql.functions.explode(
@@ -1035,7 +1034,6 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming near-dup admission: prefix-index matches die at exact threshold, sub-threshold docs survive") {
     implicit val sq = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     // frozen corpus: a 12-token doc (10 shingles, prefix length
     // 10 - ceil(7) + 1 = 4) and an unrelated filler doc
     val corpusArr = Seq(
@@ -1084,7 +1082,6 @@ class StreamingSpec extends SparkSpec {
     // RocksDB produce the same admitted set for the same input — and
     // (b) bounded by DISTINCT ADMITTED fingerprints, never by docs seen
     implicit val sq = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val corpusArr = Seq(
       (100L, "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima"))
       .toDF("doc_id", "text")
@@ -1143,7 +1140,6 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming ANN admission: frozen-IVF probe rejects at the exact micro threshold, admits sub-threshold and unprobed-cell misses") {
     implicit val sq = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     // frozen index fixture (2-D so every cosine is exact rational
     // integer arithmetic): quantizer cells c0=(1,0), c1=(0,1); corpus
     // vector 100=(3,4) pinned to cell 0, 101=(0,5) to cell 1.
@@ -1233,7 +1229,6 @@ class StreamingSpec extends SparkSpec {
 
   test("near-dup gate + fp-dedup state survive a checkpointed restart") {
     import org.apache.spark.sql.streaming.Trigger
-    graft.functions.GraftFunctions.register(spark)
     val base = java.nio.file.Files.createTempDirectory("graft_gate_ckpt").toString
     val srcDir = s"$base/src"; val ckpt = s"$base/ckpt"; val out = s"$base/out"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
@@ -1276,7 +1271,6 @@ class StreamingSpec extends SparkSpec {
 
   test("ANN admission gate survives a checkpointed restart against the frozen index") {
     import org.apache.spark.sql.streaming.Trigger
-    graft.functions.GraftFunctions.register(spark)
     val base = java.nio.file.Files.createTempDirectory("graft_anngate_ckpt").toString
     val srcDir = s"$base/src"; val ckpt = s"$base/ckpt"; val out = s"$base/out"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
@@ -1314,7 +1308,6 @@ class StreamingSpec extends SparkSpec {
 
   test("ANN gate picks up an ATOMICALLY re-balanced index across a restart; crash-mid-swap still loads a complete old index") {
     import org.apache.spark.sql.streaming.Trigger
-    graft.functions.GraftFunctions.register(spark)
     val base = java.nio.file.Files.createTempDirectory("graft_ivfswap").toString
     val srcDir = s"$base/src"; val ckpt = s"$base/ckpt"; val out = s"$base/out"
     val idx = s"$base/ivf_index"
@@ -1430,7 +1423,6 @@ class StreamingSpec extends SparkSpec {
   test("decontamination gate admits EXACTLY the train docs q161 does not drop (stream-batch parity on real data)") {
     implicit val sq = spark.sqlContext
     val dir = "/root/testdata/sf0.001"
-    graft.functions.GraftFunctions.register(spark)
     val dropped = graft.text.TextOps.decontaminate(spark, dir)
       .filter(col("dropped") === 1L)
       .select("doc_id").collect().map(_.getLong(0)).toSet
@@ -1498,7 +1490,6 @@ class StreamingSpec extends SparkSpec {
 
   test("PQ-compressed ADC gate admits the IDENTICAL set under default and RocksDB state stores") {
     implicit val sq = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     // 2-D fixture, m=2 (subDim 1), c=2: corpus 100=(5,4) has codes
     // [1,1] -> recon (5,4) EXACTLY, so ADC cosine arithmetic is exact
     val cents = Seq(Seq(1.0, 0.0))
@@ -1542,7 +1533,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("SQ8 gate index + SPANS swap atomically; crash-mid-swap loads a complete, mutually CONSISTENT old version") {
-    graft.functions.GraftFunctions.register(spark)
     val base = java.nio.file.Files.createTempDirectory("graft_sq8swap").toString
     val idx = s"$base/sq8_index"
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -1591,7 +1581,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("OPQ gate index + ROTATION swap atomically; crash-mid-swap loads a complete, mutually CONSISTENT old version") {
-    graft.functions.GraftFunctions.register(spark)
     val base = java.nio.file.Files.createTempDirectory("graft_opqswap").toString
     val idx = s"$base/opq_index"
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -1654,7 +1643,6 @@ class StreamingSpec extends SparkSpec {
 
   test("PQ gate index + CODEBOOK swap atomically; crash-mid-swap loads a complete, mutually CONSISTENT old version") {
     import org.apache.spark.sql.streaming.Trigger
-    graft.functions.GraftFunctions.register(spark)
     val base = java.nio.file.Files.createTempDirectory("graft_pqswap").toString
     val srcDir = s"$base/src"; val ckpt = s"$base/ckpt"; val out = s"$base/out"
     val idx = s"$base/pq_index"
@@ -1787,7 +1775,6 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming corpus ingest with a corpus index: historical dups die in-stream, novel docs survive") {
     implicit val sq = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     // the ALREADY-INGESTED corpus: its fingerprints + a bloom built by
     // the same expressions the batch operator (q154) uses
     val corpusTexts = Seq("the quick brown fox jumps over the lazy dog",
@@ -1853,7 +1840,6 @@ class StreamingSpec extends SparkSpec {
 
   test("byte fertility monitor: stream cumulative equals the batch aggregate, with NO vocabulary and NO fallback branch") {
     implicit val sq = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val mergeSeq = Seq(("116", "104", "116-104"), ("105", "110", "105-110"))
     val d1 = Doc(1, "web", "en", "the thin thing")
     val d2 = Doc(2, "web", "en", "in the bin")
@@ -1891,7 +1877,6 @@ class StreamingSpec extends SparkSpec {
 
   test("gate THRESHOLD versions with the index: a published threshold change flips verdicts only after the swap; crash-mid-swap never mixes new threshold with old codes") {
     import org.apache.spark.sql.streaming.Trigger
-    graft.functions.GraftFunctions.register(spark)
     val base = java.nio.file.Files.createTempDirectory("graft_thrswap").toString
     val srcDir = s"$base/src"; val ckpt = s"$base/ckpt"; val out = s"$base/out"
     val idx = s"$base/pq_index"

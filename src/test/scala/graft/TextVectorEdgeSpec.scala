@@ -23,7 +23,6 @@ class TextVectorEdgeSpec extends SparkSpec {
   }
 
   test("ngram counts handle null, empty, and sub-n texts") {
-    graft.functions.GraftFunctions.register(spark)
     val rows = Seq(Some("one"), Some(""), Some("   "), None)
       .toDF("text")
       .select(expr("graft_ngram_counts(text, 2)").as("g")).collect()
@@ -34,7 +33,6 @@ class TextVectorEdgeSpec extends SparkSpec {
   }
 
   test("cms estimate is null-safe and rejects unsupported item types") {
-    graft.functions.GraftFunctions.register(spark)
     val sk = spark.sql(
       "SELECT count_min_sketch(x, 0.001d, 0.99d, 42) AS sk FROM VALUES ('a'),('a'),('b') t(x)")
     val est = sk.select(
