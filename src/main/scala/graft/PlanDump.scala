@@ -13,7 +13,7 @@ object PlanDump {
     val suffix = args(1)
     val names = args(2).split(',').filter(_.nonEmpty)
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     val outDir = java.nio.file.Paths.get("plans", tag)
     java.nio.file.Files.createDirectories(outDir)
     names.foreach { name =>

@@ -16,7 +16,7 @@ object Prof {
     val reps = if (args.length > 2) args(2).toInt else 3
     val warmupAll = args.length > 3 && args(3) == "true"
     val warmupDir = if (args.length > 4) args(4) else Bench.WarmupDir
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     if (warmupAll) {
       if (!new java.io.File(warmupDir).isDirectory)
         println(s"[prof] WARNING: warm-up dir $warmupDir missing — warm-up is a no-op")

@@ -190,6 +190,27 @@ object Tables {
       }.sum
     })
 
+  /** Footer key under which Spark's parquet writer stores the written
+    * schema as JSON (field metadata included). */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** Driver-side schema of a Spark-written parquet table, read from one
+    * part file's footer — no Spark job, where a schema-inferring
+    * `spark.read.parquet` starts one. Not memoized: a table rewritten
+    * every micro-batch is read from its current file each call. The
+    * footer keeps the writer's `nullable = false` fields; a read with
+    * this schema relaxes them as inference does, so the relation's
+    * schema equals the inferred one. `None` when the table has no part
+    * file or its footer lacks the key (a file Spark did not write). */
+  def parquetSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val (conf, parts) = parquetParts(spark, path)
+    parts.headOption.flatMap { f =>
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try Option(r.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)) finally r.close()
+    }.map(json => org.apache.spark.sql.types.DataType.fromJson(json).asInstanceOf[StructType])
+  }
+
   def region(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "nation")
   def customer(spark: SparkSession, dir: String): DataFrame  = table(spark, dir, "customer")

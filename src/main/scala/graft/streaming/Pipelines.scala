@@ -120,8 +120,8 @@ object Pipelines {
   }
 
   /** UserInfoApp + T8: per-micro-batch changelog compaction — last write
-    * (by ts, then event_id) wins per (composite) key; meant to be applied
-    * inside `foreachBatch` before a keyed upsert sink. */
+    * (by ts, then event_id) wins per (composite) key — what
+    * [[Sinks.upsertByKey]] writes for a batch into an empty table. */
   def compactLatest(batch: DataFrame, keyCols: Seq[String],
                     tsCol: String, tieCol: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window

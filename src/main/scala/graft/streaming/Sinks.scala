@@ -8,7 +8,15 @@ import org.apache.spark.sql.functions._
   * (K3), Redis KV dim (K4). All are parquet-table writers designed for
   * `foreachBatch` — deterministic keys make replays idempotent, which
   * combined with checkpointed offsets gives effective exactly-once
-  * (the upgrade over the reference's at-most-once, SURVEY §4). */
+  * (the upgrade over the reference's at-most-once, SURVEY §4).
+  *
+  * The keyed sinks ([[upsertByKey]], [[applyCdc]]) make one pass over
+  * the micro-batch: each reference to the `foreachBatch` frame re-runs
+  * the batch's incremental plan, stateful stages included, so the merge
+  * is one window over the union of table and batch rather than a join
+  * plus a union that would reference the batch twice. They read their
+  * own table with the schema from its parquet footer, so a batch runs
+  * no schema-inference job. */
 object Sinks {
 
   /** The OPERATING POINT of a published ANN-gate index version — which
@@ -192,78 +200,90 @@ object Sinks {
     }
   }
 
-  /** K1 analog: upsert-by-key into a parquet table. The batch is
-    * compacted to one row per key first (last-write-wins) and merged with
-    * the existing table — replaces `rdd.saveToPhoenix`
-    * (reference DauApp.scala:56-63, GmvApp.scala:40-50). */
+  /** K1 analog: upsert-by-key into a parquet table — replaces
+    * `rdd.saveToPhoenix` (reference DauApp.scala:56-63,
+    * GmvApp.scala:40-50). A batch row replaces the table's row of the
+    * same key; inside the batch the latest (tsCol, tieCol) wins. Keys
+    * compare with null equal to null, so replaying a batch whose key
+    * has a null component leaves the table as it was. */
   def upsertByKey(batch: DataFrame, path: String,
-                  keyCols: Seq[String], tsCol: String, tieCol: String): Unit = {
-    val spark = batch.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(path + "__tmp")
-    val bak = new org.apache.hadoop.fs.Path(path + "__bak")
-    // Crash recovery: a crash between "dst → bak" and "tmp → dst" leaves
-    // only bak — restore it so the merge below sees all prior keys
-    // (losing them would rebuild the table from one batch, breaking the
-    // idempotent-upsert guarantee; flagged in round-1 review).
-    if (!fs.exists(dst) && fs.exists(bak)) renameOrDie(fs, bak, dst)
-    val compacted = Pipelines.compactLatest(batch, keyCols, tsCol, tieCol)
-    val existing =
-      if (fs.exists(dst)) Some(spark.read.parquet(path)) else None
-    val merged = existing match {
-      case Some(old) =>
-        old.join(compacted.select(keyCols.map(col): _*), keyCols, "left_anti")
-          .unionByName(compacted)
-      case None => compacted
+                  keyCols: Seq[String], tsCol: String, tieCol: String): Unit =
+    mergeIntoTable(batch.sparkSession, path) { existing =>
+      latestPerKey(existing, batch, keyCols, tsCol, tieCol,
+        allowMissingColumns = false).drop("__new")
     }
-    // two-phase write: parquet can't overwrite a table being read.
-    // Swap order keeps a complete copy on disk at every instant:
-    // write tmp → move dst aside to bak → move tmp in → drop bak.
-    merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    fs.delete(bak, true)
-    if (fs.exists(dst)) renameOrDie(fs, dst, bak)
-    renameOrDie(fs, tmp, dst)
-    fs.delete(bak, true)
-  }
 
   /** CDC apply sink: a micro-batch of changelog rows (key, `op` ∈
     * insert/update/delete, payload columns) MERGEd into the parquet
     * snapshot — [[graft.ops.Maintenance.applyDiff]]'s semantics behind
     * the same crash-safe two-phase swap as [[upsertByKey]]. Deletes
     * drop their keys (the operation upsert sinks cannot express);
-    * within a batch, later ops win per key via (tsCol, tieCol)
-    * compaction, so replaying a committed batch is a no-op on the
-    * already-applied state (idempotent replay — StreamingSpec proves
-    * delete→reinsert sequences converge across restarts). */
+    * within a batch, later ops win per key via (tsCol, tieCol), so an
+    * insert→delete inside one batch nets to delete, and replaying a
+    * committed batch is a no-op on the already-applied state
+    * (idempotent replay — StreamingSpec proves delete→reinsert
+    * sequences converge across restarts). A winning batch row whose
+    * `op` is null or unknown drops its key, as a delete does. */
   def applyCdc(batch: DataFrame, path: String, keyCols: Seq[String],
-               payloadCols: Seq[String], tsCol: String, tieCol: String): Unit = {
-    val spark = batch.sparkSession
+               payloadCols: Seq[String], tsCol: String, tieCol: String): Unit =
+    mergeIntoTable(batch.sparkSession, path) { existing =>
+      // the table has no op/ts/tie columns: its rows carry nulls there
+      latestPerKey(existing, batch, keyCols, tsCol, tieCol,
+        allowMissingColumns = true)
+        .filter(col("__new") === 0 || col("op").isin("insert", "update"))
+        .select((keyCols ++ payloadCols).map(col): _*)
+    }
+
+  /** One row per key over the table's rows (`__new` = 0) and the
+    * batch's (`__new` = 1): a batch row outranks the table's, and inside
+    * the batch the latest (tsCol, tieCol) wins. One window over one
+    * union, so the batch is read once — `foreachBatch` hands the sink a
+    * plan that recomputes its stateful stages on every reference — and
+    * `RankLimitToGroupTopK` plans the `row_number() = 1` filter as a
+    * bounded heap per key. With no table yet this is the batch's own
+    * last-write-wins compaction. */
+  private def latestPerKey(existing: Option[DataFrame], batch: DataFrame,
+                           keyCols: Seq[String], tsCol: String, tieCol: String,
+                           allowMissingColumns: Boolean): DataFrame = {
+    val fresh = batch.withColumn("__new", lit(1))
+    val rows = existing.fold(fresh)(
+      _.withColumn("__new", lit(0)).unionByName(fresh, allowMissingColumns))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(keyCols.map(col): _*)
+      .orderBy(col("__new").desc, col(tsCol).desc, col(tieCol).desc)
+    rows.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1).drop("__rn")
+  }
+
+  /** A keyed sink's table, read with the schema in its parquet footer
+    * ([[graft.Tables.parquetSchema]]), so building the read starts no
+    * Spark job; a footer without Spark's schema falls back to
+    * inference. */
+  private[graft] def readTable(spark: org.apache.spark.sql.SparkSession,
+                               path: String): DataFrame =
+    graft.Tables.parquetSchema(spark, path) match {
+      case Some(s) => spark.read.schema(s).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  /** Rewrite the table at `path` as `merge(current table)` through the
+    * two-phase swap of [[swapInDir]] — parquet cannot overwrite a table
+    * being read, and the swap keeps a complete copy on disk at every
+    * instant. Crash recovery first: a crash between "dst → bak" and
+    * "tmp → dst" leaves only bak, and the merge must see its keys
+    * (losing them would rebuild the table from one batch, breaking the
+    * idempotent-upsert guarantee; flagged in round-1 review). */
+  private def mergeIntoTable(spark: org.apache.spark.sql.SparkSession, path: String)(
+      merge: Option[DataFrame] => DataFrame): Unit = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     val dst = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(path + "__tmp")
     val bak = new org.apache.hadoop.fs.Path(path + "__bak")
     if (!fs.exists(dst) && fs.exists(bak)) renameOrDie(fs, bak, dst)
-    // one surviving op per key in this batch: the LATEST wins —
-    // an insert→delete sequence inside one batch nets to delete
-    val compacted = Pipelines.compactLatest(batch, keyCols, tsCol, tieCol)
-    val existing =
-      if (fs.exists(dst)) Some(spark.read.parquet(path)) else None
-    val incoming = compacted.filter(col("op").isin("insert", "update"))
-      .select((keyCols ++ payloadCols).map(col): _*)
-    val merged = existing match {
-      case Some(old) =>
-        old.join(compacted.select(keyCols.map(col): _*), keyCols, "left_anti")
-          .unionByName(incoming)
-      case None => incoming
+    val existing = if (fs.exists(dst)) Some(readTable(spark, path)) else None
+    swapInDir(spark, path) { tmp =>
+      merge(existing).write.mode(SaveMode.Overwrite).parquet(tmp)
     }
-    merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    fs.delete(bak, true)
-    if (fs.exists(dst)) renameOrDie(fs, dst, bak)
-    renameOrDie(fs, tmp, dst)
-    fs.delete(bak, true)
   }
 
   /** Publish one VERSION of the ANN gate's frozen IVF index (quantizer
@@ -560,7 +580,7 @@ object Sinks {
   /** The shared two-phase whole-directory swap (write everything into
     * `path__tmp`, move dst aside to bak, move tmp in, drop bak) — the
     * [[publishIvfIndex]] crash-safety contract factored for the
-    * tokenizer publishers. */
+    * keyed sinks and the publishers. */
   private def swapInDir(spark: org.apache.spark.sql.SparkSession,
                         path: String)(write: String => Unit): Unit = {
     val fs = org.apache.hadoop.fs.FileSystem.get(

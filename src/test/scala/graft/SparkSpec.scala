@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -9,6 +13,34 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
   override def afterAll(): Unit = { /* shared session: leave running */ }
+
+  /** Spark jobs `body` starts on this thread, counted by a listener on
+    * the body's job group. A flush job in a second group runs after the
+    * body; the bus delivers events in order, so once the flush job's
+    * start is seen every job of the body has been counted. */
+  protected def jobsStartedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-started-by-${java.util.UUID.randomUUID()}"
+    val counted = new AtomicInteger
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => counted.incrementAndGet()
+          case g if g == s"$group-flush" => flushed.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-flush", "flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, TimeUnit.SECONDS), "listener bus did not deliver the flush job")
+      counted.get
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {

@@ -855,6 +855,116 @@ class StreamingSpec extends SparkSpec {
     assert(state() === Set((10L, "alice2"), (30L, "carol"), (20L, "bob2")))
   }
 
+  test("CDC apply: a winning null or unknown op drops an existing key; insert→delete inside one batch nets to delete") {
+    val path = java.nio.file.Files.createTempDirectory("graft_cdc_ops").toString + "/snap"
+    def apply(rows: (Long, String, String, Timestamp, Long)*): Unit =
+      graft.streaming.Sinks.applyCdc(rows.toDF("k", "op", "name", "ts", "seq"),
+        path, Seq("k"), Seq("name"), "ts", "seq")
+    def state(): Set[(Long, String)] =
+      spark.read.parquet(path).select("k", "name").collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSet
+    apply((10L, "insert", "a", ts("2024-01-05 10:00:00"), 1L),
+      (20L, "insert", "b", ts("2024-01-05 10:00:00"), 2L),
+      (30L, "insert", "c", ts("2024-01-05 10:00:00"), 3L),
+      (40L, "insert", "d", ts("2024-01-05 10:00:00"), 4L))
+    apply((10L, null, "a2", ts("2024-01-05 11:00:00"), 5L),
+      (20L, "upsert", "b2", ts("2024-01-05 11:00:00"), 6L),
+      (30L, "update", "c2", ts("2024-01-05 11:00:00"), 7L),
+      (40L, "insert", "d2", ts("2024-01-05 11:00:00"), 8L),
+      (40L, "delete", null, ts("2024-01-05 11:30:00"), 9L),
+      (50L, "insert", "e", ts("2024-01-05 11:00:00"), 10L),
+      (50L, "delete", null, ts("2024-01-05 11:30:00"), 11L))
+    assert(state() === Set((30L, "c2")))
+  }
+
+  test("keyed upsert replays a batch with a null key component idempotently") {
+    val path = java.nio.file.Files.createTempDirectory("graft_upsert_null").toString + "/dau"
+    def upsert(rows: (Long, Option[String], String, Timestamp, Long)*): Unit =
+      graft.streaming.Sinks.upsertByKey(rows.toDF("user_id", "log_date", "name", "ts", "seq"),
+        path, Seq("user_id", "log_date"), "ts", "seq")
+    def state(): Set[(Long, Option[String], String)] =
+      spark.read.parquet(path).select("user_id", "log_date", "name").collect()
+        .map(r => (r.getLong(0), Option(r.getString(1)), r.getString(2))).toSet
+    val batch = Seq((10L, Some("2024-01-05"), "alice", ts("2024-01-05 10:00:00"), 1L),
+      (20L, None, "bob", ts("2024-01-05 10:00:00"), 2L))
+    (1 to 3).foreach { _ =>
+      upsert(batch: _*)
+      assert(spark.read.parquet(path).count() === 2L)
+      assert(state() === Set((10L, Some("2024-01-05"), "alice"), (20L, None, "bob")))
+    }
+    // a null key component still matches itself: the later write replaces it
+    upsert((20L, None, "bob2", ts("2024-01-05 11:00:00"), 3L))
+    assert(state() === Set((10L, Some("2024-01-05"), "alice"), (20L, None, "bob2")))
+  }
+
+  test("keyed sinks evaluate a micro-batch once when merging onto an existing table") {
+    import org.apache.spark.sql.functions.udf
+    val dir = java.nio.file.Files.createTempDirectory("graft_sink_reads").toString
+    val rows = Seq(
+      (10L, "insert", "alice", ts("2024-01-05 10:00:00"), 1L),
+      (20L, "insert", "bob", ts("2024-01-05 10:00:00"), 2L),
+      (20L, "update", "bob2", ts("2024-01-05 10:30:00"), 3L),
+      (30L, "insert", "carol", ts("2024-01-05 11:00:00"), 4L))
+    rows.toDF("k", "op", "name", "ts", "seq").write.parquet(s"$dir/src")
+    val reads = spark.sparkContext.longAccumulator("sink-batch-reads")
+    val seen = udf { (k: Long) => reads.add(1); k }
+    // a scanned source (not a local relation, which the optimizer would
+    // evaluate on the driver), every row through the counting UDF
+    def batch() = spark.read.parquet(s"$dir/src").withColumn("k", seen(col("k")))
+    def evaluations(write: => Unit): Long = {
+      reads.reset()
+      write
+      reads.value
+    }
+    val up = s"$dir/up"
+    val cdc = s"$dir/cdc"
+    def upsert() = graft.streaming.Sinks.upsertByKey(batch(), up, Seq("k"), "ts", "seq")
+    def applyCdc() =
+      graft.streaming.Sinks.applyCdc(batch(), cdc, Seq("k"), Seq("name"), "ts", "seq")
+    assert(evaluations(upsert()) === rows.size)
+    assert(evaluations(upsert()) === rows.size)
+    assert(evaluations(applyCdc()) === rows.size)
+    assert(evaluations(applyCdc()) === rows.size)
+    assert(spark.read.parquet(cdc).select("k", "name").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSet ===
+      Set((10L, "alice"), (20L, "bob2"), (30L, "carol")))
+  }
+
+  test("a keyed sink's table read starts no job and has the inferred schema, watermark metadata included") {
+    implicit val sq = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_sink_schema").toString
+    val up = s"$dir/up"
+    val cdc = s"$dir/cdc"
+    val input = MemoryStream[(Long, String, String, Timestamp, Long)]
+    val q = input.toDF().toDF("k", "op", "name", "ts", "seq")
+      .withWatermark("ts", "10 seconds")
+      .writeStream
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        graft.streaming.Sinks.upsertByKey(b, up, Seq("k"), "ts", "seq")
+        graft.streaming.Sinks.applyCdc(b, cdc, Seq("k"), Seq("name", "ts"), "ts", "seq")
+      }.start()
+    try {
+      Seq(
+        Seq((10L, "insert", "alice", ts("2024-01-05 10:00:00"), 1L),
+          (20L, "insert", "bob", ts("2024-01-05 10:00:00"), 2L)),
+        Seq((10L, "update", "alice2", ts("2024-01-05 10:01:00"), 3L),
+          (30L, "insert", "carol", ts("2024-01-05 10:01:00"), 4L))
+      ).foreach { rows =>
+        input.addData(rows)
+        q.processAllAvailable()
+        Seq(up, cdc).foreach { p =>
+          val inferred = spark.read.parquet(p)
+          assert(inferred.schema("ts").metadata.contains("spark.watermarkDelayMs"))
+          assert(jobsStartedBy(graft.streaming.Sinks.readTable(spark, p)) === 0)
+          val read = graft.streaming.Sinks.readTable(spark, p)
+          assert(read.schema === inferred.schema)
+          assert(read.collect().toSet === inferred.collect().toSet)
+        }
+      }
+    } finally q.stop()
+    assert(spark.read.parquet(up).count() === 3L)
+  }
+
   case class Doc(doc_id: Long, source: String, lang: String, text: String)
 
   test("streaming top-sellers counts accumulate across micro-batches (A10 realtime)") {
