@@ -27,25 +27,29 @@ object Gmv {
   private def withCreateDate(orders: DataFrame): DataFrame =
     orders.withColumn("create_date", date_format(col("o_orderdate"), "yyyy-MM-dd"))
 
+  /** The GMV aggregate: `gmv` (decimal-exact sum as double) and
+    * `order_cnt`, shared by the per-day and single-day queries and the
+    * /realtime-total endpoint. */
+  private def gmvAgg: Seq[org.apache.spark.sql.Column] = Seq(
+    sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("gmv"),
+    count(lit(1)).as("order_cnt"))
+
   /** GMV + order count per day over the whole orders table (A5/A6 analog).
     * Aggregation key is low-cardinality (~2400 days), so partial aggregation
     * collapses virtually all rows map-side before the shuffle. */
   def gmvByDate(spark: SparkSession, dir: String): DataFrame =
     withCreateDate(Tables.orders(spark, dir))
       .groupBy("create_date")
-      .agg(
-        sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("gmv"),
-        count(lit(1)).as("order_cnt"))
+      .agg(gmvAgg.head, gmvAgg.tail: _*)
       .orderBy("create_date")
 
   /** Single-day GMV total (F3 + A5): `WHERE create_date = ?` then SUM.
-    * The date predicate is pushed to the parquet scan. */
+    * The date predicate is pushed to the parquet scan. One row, whose
+    * `gmv` is null when no order falls on [[Day]]. */
   def gmvTotalDay(spark: SparkSession, dir: String): DataFrame =
     withCreateDate(Tables.orders(spark, dir)
         .filter(Dau.dayRange(col("o_orderdate"), Day)))
-      .agg(
-        sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("gmv"),
-        count(lit(1)).as("order_cnt"))
+      .agg(gmvAgg.head, gmvAgg.tail: _*)
       .withColumn("create_date", lit(Day))
 
   /** Hourly revenue for one day of the events stream (A6 analog — the

@@ -199,8 +199,6 @@ object Publisher {
        | / (tf$i + 1.2 * (0.25 + 0.75 * CAST(dl AS DOUBLE) / (CAST(sumdl AS DOUBLE) / CAST(n AS DOUBLE))))
        | + 0.5) AS BIGINT)""".stripMargin.replace("\n", "")
 
-  /** F4 + O2: full-text-ish keyword search over part names with
-    * deterministic pagination (page 2, size 10). */
   /** The F4 match semantics as a reusable predicate: every analyzed
     * (lowercased) token of the keyword must appear in the column AS A
     * WHOLE TOKEN — mirroring the ES standard analyzer, which indexes
@@ -220,16 +218,24 @@ object Publisher {
       .reduce(_ && _)
   }
 
-  def keywordSearch(spark: SparkSession, dir: String,
-                    keyword: String = "small widget",
-                    page: Int = 2, pageSize: Int = 10): DataFrame = {
-    Tables.part(spark, dir)
-      .filter(keywordPredicate(col("p_name"), keyword))
+  /** The parts whose name matches `keyword` ([[keywordPredicate]]). */
+  private[ops] def keywordHits(spark: SparkSession, dir: String, keyword: String): DataFrame =
+    Tables.part(spark, dir).filter(keywordPredicate(col("p_name"), keyword))
+
+  /** Page `page` (1-based) of `hits` in part-key order. */
+  private[ops] def hitsPage(hits: DataFrame, page: Int, pageSize: Int): DataFrame =
+    hits
       .select(col("p_partkey"), col("p_name"), col("p_retailprice"))
       .orderBy("p_partkey")
       .offset((page - 1) * pageSize)
       .limit(pageSize)
-  }
+
+  /** F4 + O2: full-text-ish keyword search over part names with
+    * deterministic pagination (page 2, size 10). */
+  def keywordSearch(spark: SparkSession, dir: String,
+                    keyword: String = "small widget",
+                    page: Int = 2, pageSize: Int = 10): DataFrame =
+    hitsPage(keywordHits(spark, dir, keyword), page, pageSize)
 
   /** A10/O3: top-k part keys by sale count (terms aggregation), doc-count
     * descending with key ascending as the tie-break. */
@@ -244,32 +250,52 @@ object Publisher {
     * and DuckDB: floor(x + 0.5). */
   private def javaRound(c: org.apache.spark.sql.Column) = floor(c + 0.5)
 
+  /** One A11/X6 percentage block over the customers: a bucket per
+    * (name, predicate) plus a `rest` bucket, the complement of the
+    * others, so the block always sums to 100.0. */
+  private[ops] final case class RatioBlock(
+      buckets: Seq[(String, org.apache.spark.sql.Column)], rest: String)
+
+  /** Account-balance tiers, the age-band analog on this schema. */
+  private[ops] val BalanceBands = RatioBlock(Seq(
+    "low" -> (col("c_acctbal") < 3000),
+    "mid" -> (col("c_acctbal") >= 3000 && col("c_acctbal") < 7000)), rest = "high")
+
+  /** One market segment against the rest, the gender-ratio analog. */
+  private[ops] def segmentBlock(segment: String) =
+    RatioBlock(Seq("seg" -> (col("c_mktsegment") === segment)), rest = "rest")
+
+  /** One row with a `<bucket>_ratio` column per bucket of `blocks`, all
+    * from one aggregate over the customer table. Each bucket's count
+    * becomes `Math.round(count*1000/total)/10` and each block's `rest`
+    * is 100 minus its other buckets (the reference's rounding,
+    * PublisherServiceImpl.java:125-183). */
+  private[ops] def customerRatios(spark: SparkSession, dir: String,
+                                  blocks: RatioBlock*): DataFrame = {
+    val names = blocks.flatMap(_.buckets.map(_._1))
+    val counts = blocks.flatMap(_.buckets).map { case (n, p) =>
+      sum(when(p, 1).otherwise(0)).as(s"${n}_ct") }
+    Tables.customer(spark, dir)
+      .agg(count(lit(1)).as("total"), counts: _*)
+      .select(names.map(n =>
+        (javaRound(col(s"${n}_ct") * 1000.0 / col("total")) / 10.0).as(s"${n}_ratio")): _*)
+      .select(blocks.flatMap { b =>
+        val ratios = b.buckets.map { case (n, _) => col(s"${n}_ratio") }
+        ratios :+ ratios.foldLeft(lit(100.0))(_ - _).as(s"${b.rest}_ratio")
+      }: _*)
+  }
+
   /** A11 + X6: 3-band breakdown with one-decimal percentages; the last
     * band is the complement so the three always sum to 100.0 (the
     * reference's age-band math, PublisherServiceImpl.java:125-153). Bands
     * are account-balance tiers on this schema. */
   def balanceBandRatio(spark: SparkSession, dir: String): DataFrame =
-    Tables.customer(spark, dir)
-      .agg(
-        count(lit(1)).as("total"),
-        sum(when(col("c_acctbal") < 3000, 1).otherwise(0)).as("low_ct"),
-        sum(when(col("c_acctbal") >= 3000 && col("c_acctbal") < 7000, 1).otherwise(0)).as("mid_ct"))
-      .select(
-        (javaRound(col("low_ct") * 1000.0 / col("total")) / 10.0).as("low_ratio"),
-        (javaRound(col("mid_ct") * 1000.0 / col("total")) / 10.0).as("mid_ratio"))
-      .select(
-        col("low_ratio"), col("mid_ratio"),
-        (lit(100.0) - col("low_ratio") - col("mid_ratio")).as("high_ratio"))
+    customerRatios(spark, dir, BalanceBands)
 
   /** A11 gender-ratio analog: one market segment vs the rest, complement
     * rounding (PublisherServiceImpl.java:155-183). */
   def segmentRatio(spark: SparkSession, dir: String, segment: String = "BUILDING"): DataFrame =
-    Tables.customer(spark, dir)
-      .agg(
-        count(lit(1)).as("total"),
-        sum(when(col("c_mktsegment") === segment, 1).otherwise(0)).as("seg_ct"))
-      .select((javaRound(col("seg_ct") * 1000.0 / col("total")) / 10.0).as("seg_ratio"))
-      .select(col("seg_ratio"), (lit(100.0) - col("seg_ratio")).as("rest_ratio"))
+    customerRatios(spark, dir, segmentBlock(segment))
 
   /** Top-k per group (the grouped variant of A10/O3): top 3 customers by
     * total spend within each nation — rank inside the group after a
@@ -573,6 +599,11 @@ object Publisher {
     * a single scan with two conditional aggregates (no self-join). */
   def todayVsYesterday(spark: SparkSession, dir: String,
                        day: String = Dau.Day, prev: String = Dau.PrevDay): DataFrame =
+    hourPairs(spark, dir, day, prev).orderBy("lh")
+
+  /** [[todayVsYesterday]]'s aggregate, rows in no particular order. */
+  private[ops] def hourPairs(spark: SparkSession, dir: String,
+                             day: String, prev: String): DataFrame =
     Tables.events(spark, dir)
       .filter(Dau.dayRange(col("ts"), prev) || Dau.dayRange(col("ts"), day))
       .withColumn("log_date", date_format(col("ts"), "yyyy-MM-dd"))
@@ -580,7 +611,6 @@ object Publisher {
       .agg(
         sum(when(col("log_date") === day, 1).otherwise(0)).as("today_ct"),
         sum(when(col("log_date") === prev, 1).otherwise(0)).as("yesterday_ct"))
-      .orderBy("lh")
 
   /** RFM customer segmentation: recency (days since last order as of
     * [[RfmAsOf]]), frequency (order count), monetary (decimal-exact

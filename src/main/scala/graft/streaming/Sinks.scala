@@ -3,12 +3,17 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
-/** Keyed, idempotent sink analogs of the reference's external stores
-  * (SURVEY §2.2): Phoenix PK-upsert (K1), daily-partitioned ES index
-  * (K3), Redis KV dim (K4). All are parquet-table writers designed for
-  * `foreachBatch` — deterministic keys make replays idempotent, which
-  * combined with checkpointed offsets gives effective exactly-once
-  * (the upgrade over the reference's at-most-once, SURVEY §4).
+/** Sink analogs of the reference's external stores (SURVEY §2.2):
+  * Phoenix PK-upsert (K1), daily-partitioned ES index (K3), Redis KV dim
+  * (K4). All are parquet-table writers designed for `foreachBatch`.
+  * The keyed sinks ([[upsertByKey]], [[applyCdc]]) merge on
+  * deterministic keys, so a replayed batch is idempotent; with
+  * checkpointed offsets that gives them effective exactly-once (the
+  * upgrade over the reference's at-most-once, SURVEY §4). The append
+  * sink ([[appendDailyPartitioned]]) is NOT idempotent: a batch that
+  * `foreachBatch` replays (after a crash between the write and the
+  * commit log, for example) is appended a second time, so its table is
+  * at-least-once.
   *
   * The keyed sinks ([[upsertByKey]], [[applyCdc]]) make one pass over
   * the micro-batch: each reference to the `foreachBatch` frame re-runs
@@ -866,9 +871,12 @@ object Sinks {
   }
 
   /** K3 analog: append into a dt-partitioned table (the daily-index
-    * naming of the ES sink, reference SaleDetailApp.scala:164-171);
-    * `dropDuplicates(idCols)` inside the batch reproduces doc-id
-    * idempotency (MyEsUtil.scala:50-76). */
+    * naming of the ES sink, reference SaleDetailApp.scala:164-171).
+    * `dropDuplicates(idCols)` removes duplicate ids within this one
+    * batch only. The ES sink's doc-id upsert (MyEsUtil.scala:50-76) also
+    * overwrites ids written by earlier batches; this append does not,
+    * so an id repeated across batches, or a whole batch replayed by
+    * `foreachBatch`, lands in the table twice. */
   def appendDailyPartitioned(batch: DataFrame, path: String,
                              dtCol: String, idCols: Seq[String]): Unit =
     batch.dropDuplicates(idCols)

@@ -1,7 +1,9 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.Properties
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
@@ -15,18 +17,31 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = { /* shared session: leave running */ }
 
   /** Spark jobs `body` starts on this thread, counted by a listener on
-    * the body's job group. A flush job in a second group runs after the
-    * body; the bus delivers events in order, so once the flush job's
-    * start is seen every job of the body has been counted. */
-  protected def jobsStartedBy(body: => Unit): Int = {
+    * the body's job group. */
+  protected def jobsStartedBy(body: => Unit): Int = jobPropertiesOf(body).size
+
+  /** Distinct SQL executions among the jobs `body` starts on this
+    * thread: the number of distinct `spark.sql.execution.id` values
+    * (each Dataset action is one execution, however many jobs its
+    * adaptive plan runs). */
+  protected def sqlExecutionsStartedBy(body: => Unit): Int =
+    jobPropertiesOf(body).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+      .distinct.size
+
+  /** The local properties of each job `body` starts on this thread, as
+    * a listener on the body's job group sees them. A flush job in a
+    * second group runs after the body; the bus delivers events in order,
+    * so once the flush job's start is seen every job of the body has
+    * been recorded. */
+  private def jobPropertiesOf(body: => Unit): Seq[Properties] = {
     val sc = spark.sparkContext
     val group = s"jobs-started-by-${java.util.UUID.randomUUID()}"
-    val counted = new AtomicInteger
+    val started = new ConcurrentLinkedQueue[Properties]
     val flushed = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => counted.incrementAndGet()
+          case `group` => started.add(e.properties)
           case g if g == s"$group-flush" => flushed.countDown()
           case _ => ()
         }
@@ -38,7 +53,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       sc.setJobGroup(s"$group-flush", "flush")
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       assert(flushed.await(60, TimeUnit.SECONDS), "listener bus did not deliver the flush job")
-      counted.get
+      started.asScala.toSeq
     } finally sc.removeSparkListener(listener)
   }
 }
