@@ -12,7 +12,13 @@ object GraftSession {
 
   /** `local[cpus]` with `cpus` shuffle partitions, UTC session time, no
     * UI, [[Tables.requiredConfs]], the graft functions and the GroupTopK
-    * strategy and rewrite rule; log level WARN. */
+    * strategy and rewrite rule; log level WARN.
+    *
+    * The required confs include the session's `file:` filesystem
+    * ([[graft.io.NioLocalFileSystem]], [[graft.io.NioLocalFs]]): the stock
+    * one forks `chmod` and `readlink` for every checkpoint, state and
+    * sink file it creates or renames: 28 ms per FileContext create +
+    * rename, against 0.8 ms in process. */
   def local(cpus: Int): SparkSession = {
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")

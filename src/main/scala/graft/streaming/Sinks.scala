@@ -21,7 +21,14 @@ import org.apache.spark.sql.functions._
   * is one window over the union of table and batch rather than a join
   * plus a union that would reference the batch twice. They read their
   * own table with the schema from its parquet footer, so a batch runs
-  * no schema-inference job. */
+  * no schema-inference job.
+  *
+  * Their files, like the state-store and checkpoint files of the query
+  * that feeds them, go through the session's `file:` filesystem
+  * ([[graft.io.NioLocalFileSystem]], [[graft.io.NioLocalFs]]), which
+  * sets permissions and checks links in process: a sink write or a
+  * state commit no longer forks a `chmod` per file or a `readlink` per
+  * checkpoint rename. */
 object Sinks {
 
   /** The OPERATING POINT of a published ANN-gate index version — which

@@ -1,9 +1,13 @@
 package graft
 
+import java.nio.file.Files
 import java.util.Properties
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import scala.jdk.CollectionConverters._
+
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
@@ -19,6 +23,27 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Spark jobs `body` starts on this thread, counted by a listener on
     * the body's job group. */
   protected def jobsStartedBy(body: => Unit): Int = jobPropertiesOf(body).size
+
+  /** The OS processes started while `body` runs, on any thread, from an
+    * in-process JFR recording of `jdk.ProcessStart`. */
+  protected def processesStartedBy(body: => Unit): Seq[SparkSpec.Launch] = {
+    val rec = new Recording()
+    try {
+      rec.enable("jdk.ProcessStart").withStackTrace()
+      rec.start()
+      try body finally rec.stop()
+      val file = Files.createTempFile("process-start", ".jfr")
+      try {
+        rec.dump(file)
+        RecordingFile.readAllEvents(file).asScala.toSeq.map { e =>
+          SparkSpec.Launch(e.getString("command"),
+            Option(e.getThread).map(_.getJavaName).getOrElse("?"),
+            Option(e.getStackTrace).toSeq.flatMap(_.getFrames.asScala)
+              .map(f => s"${f.getMethod.getType.getName}.${f.getMethod.getName}"))
+        }
+      } finally Files.delete(file)
+    } finally rec.close()
+  }
 
   /** Distinct SQL executions among the jobs `body` starts on this
     * thread: the number of distinct `spark.sql.execution.id` values
@@ -59,6 +84,16 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** One OS process launch: its command line, the launching thread and
+    * its stack, innermost frame first. */
+  final case class Launch(command: String, thread: String, frames: Seq[String]) {
+    override def toString: String = {
+      val caller = frames.find(f => Seq("graft.", "org.apache.").exists(f.startsWith) &&
+        !f.startsWith("org.apache.hadoop.util."))
+      s"$command <- ${caller.getOrElse("?")} [$thread]"
+    }
+  }
+
   /** The same factory every entry point uses, so the suite plans what
     * the mains and the benchmark run. */
   lazy val session: SparkSession = {

@@ -7,8 +7,11 @@ parquet dumped by `graft.Verify`. Usage:
 The comparison logic lives in `compare_frames` so tools/test_check_oracle.py
 can exercise it against planted regressions (e.g. an un-cast SUM(BIGINT)
 whose DuckDB HUGEINT surfaces as float64 OR object dtype).
+
+Each ok/FAIL line ends with the seconds DuckDB took for that oracle, and
+the ten slowest oracles are listed at the end.
 """
-import sys, os, json, glob
+import sys, os, json, glob, time
 import pandas as pd
 import numpy as np
 
@@ -81,6 +84,12 @@ def unknown_only_names(only, oracle_names):
     return sorted(set(only) - set(oracle_names)) if only else []
 
 
+def slowest(seconds, n=10):
+    """The n slowest oracles of {name: DuckDB seconds}, slowest first
+    (ties by name). Pure so the self-test drives it."""
+    return sorted(seconds.items(), key=lambda kv: (-kv[1], kv[0]))[:n]
+
+
 def main():
     import duckdb
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
@@ -94,6 +103,7 @@ def main():
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
 
     fails = []
+    seconds = {}
     for name in sorted(oracle):
         if only and name not in only:
             continue
@@ -101,12 +111,15 @@ def main():
         if not files:
             fails.append(name); print(f"FAIL {name}: no spark output"); continue
         spark_df = pd.concat([pd.read_parquet(f) for f in files])
+        t0 = time.perf_counter()
         duck_df = con.execute(oracle[name]).df()
+        seconds[name] = time.perf_counter() - t0
+        took = f" [duckdb {seconds[name]:.2f} s]"
         ok, msgs = compare_frames(name, spark_df, duck_df)
         for m in msgs:
-            print(m)
+            print(m + took)
         if ok:
-            print(f"ok   {name}: {len(spark_df)} rows")
+            print(f"ok   {name}: {len(spark_df)} rows{took}")
         else:
             fails.append(name)
 
@@ -117,6 +130,9 @@ def main():
         print(f"FAIL {name}: not in oracle_sql.json (typo'd name, or a "
               f"no-oracle query — pass its real prefix to graft.Verify first)")
 
+    print(f"\nslowest oracles ({sum(seconds.values()):.1f} s DuckDB in total):")
+    for name, secs in slowest(seconds):
+        print(f"  {secs:8.2f} s  {name}")
     checked = len(only) if only else len(oracle)
     print(f"\n{checked - len(fails)}/{checked} match")
     sys.exit(1 if fails else 0)

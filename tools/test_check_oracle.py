@@ -77,5 +77,11 @@ expect("typo'd only-name surfaces as unknown", got == ["q999_typo"],
 got2 = unknown_only_names(set(), {"q01_real"})
 expect("empty only has no unknowns", got2 == [], True, [str(got2)])
 
-print(f"\n{9 - len(failures)}/9 planted cases behave")
+# 9. The slowest-oracle list: slowest first, ties by name, at most n.
+from check_oracle import slowest
+got3 = slowest({"q01": 0.5, "q02": 3.0, "q03": 1.0, "q04": 3.0}, n=3)
+expect("slowest oracles come first, ties by name",
+       got3 == [("q02", 3.0), ("q04", 3.0), ("q03", 1.0)], True, [str(got3)])
+
+print(f"\n{10 - len(failures)}/10 planted cases behave")
 sys.exit(1 if failures else 0)
