@@ -895,7 +895,7 @@ object SparkEntry {
     "q35_ann_ivf" -> ivfAnnSql(16, 4),
     // q293: the SAME chain at the production-sized coarse layer — the
     // cells-grow-with-the-corpus knob (judge r14) exercised inside the
-    // hash-verified path, not only in ScaleProbe
+    // hash-verified path, not only in the 1×/10× scale runs
     "q293_ann_ivf_grown" -> ivfAnnSql(
       graft.vector.VectorOps.GrownCells, graft.vector.VectorOps.GrownProbe),
     "q36_sessions" ->

@@ -6,8 +6,8 @@ import java.nio.file.{Files, NoSuchFileException}
 import java.nio.file.attribute.PosixFilePermission
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsServerDefaults,
-  LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSDataInputStream, FileStatus,
+  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -77,5 +77,11 @@ class NioRawLocalFs(uri: URI, conf: Configuration)
 }
 
 /** FileContext's checksummed `file:` filesystem (`.crc` sidecars), as
-  * Hadoop's `LocalFs` but over [[NioRawLocalFs]]. */
-class NioLocalFs(uri: URI, conf: Configuration) extends ChecksumFs(new NioRawLocalFs(uri, conf))
+  * Hadoop's `LocalFs` but over [[NioRawLocalFs]]. `open(path)` verifies
+  * the `.crc` like `open(path, bufferSize)`: Hadoop's `FilterFs.open(path)`
+  * hands the path straight to the raw filesystem, so through the stock
+  * `LocalFs` the offset, commit and state files Spark's
+  * `FileContextBasedCheckpointFileManager` reads were never verified. */
+class NioLocalFs(uri: URI, conf: Configuration) extends ChecksumFs(new NioRawLocalFs(uri, conf)) {
+  override def open(f: Path): FSDataInputStream = open(f, getServerDefaults(f).getFileBufferSize)
+}

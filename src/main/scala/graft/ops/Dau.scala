@@ -130,11 +130,8 @@ object Dau {
     * events at 100 TB. Target days are clamped to days that actually
     * occur (semi join with the distinct-day list, broadcast — it is tiny
     * by construction). */
-  def rollingUv7(spark: SparkSession, dir: String): DataFrame =
-    rollingUvCore(Tables.events(spark, dir))
-
-  private[graft] def rollingUvCore(events: DataFrame): DataFrame = {
-    val activeDays = withLogDate(events)
+  def rollingUv7(spark: SparkSession, dir: String): DataFrame = {
+    val activeDays = withLogDate(Tables.events(spark, dir))
       .select(col("user_id"), to_date(col("log_date")).as("day"))
       .distinct()
     val days = activeDays.select(col("day")).distinct()
@@ -225,11 +222,8 @@ object Dau {
     * |weeks|² keys. Week keys are week-START DATES (q61/q62's rule), so
     * multi-year data never aliases and the offset is an exact integer
     * `datediff / 7`. */
-  def cohortRetention(spark: SparkSession, dir: String): DataFrame =
-    cohortRetentionCore(Tables.events(spark, dir))
-
-  private[graft] def cohortRetentionCore(events: DataFrame): DataFrame = {
-    val uw = withLogDate(events)
+  def cohortRetention(spark: SparkSession, dir: String): DataFrame = {
+    val uw = withLogDate(Tables.events(spark, dir))
       .select(col("user_id"),
         date_trunc("week", to_date(col("log_date"))).cast("date").as("week"))
       .distinct()

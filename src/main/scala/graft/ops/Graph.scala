@@ -213,7 +213,7 @@ object Graph {
           .filter(col("src") =!= col("dst"))
       } else
         // healthy path: per-order pair expansion IN-ROW (the
-        // trianglesCore rationale — the okey-keyed shuffle join moves
+        // orientedEdgesOf rationale — the okey-keyed shuffle join moves
         // the table twice and measured ~3x slower on TPC-H shapes);
         // bounded by the probed basket size, so no row ever balloons
         li.groupBy("l_orderkey")
@@ -241,11 +241,6 @@ object Graph {
     }
     triangleTopKOf(oriented, topK)
   }
-
-  private[graft] def trianglesCore(lineitem: DataFrame,
-                                   topK: Int = 10,
-                                   minSupport: Long = 2L): DataFrame =
-    triangleTopKOf(orientedEdgesOf(lineitem, minSupport), topK)
 
   private[graft] def orientedEdgesOf(lineitem: DataFrame,
                                      minSupport: Long): DataFrame = {

@@ -385,13 +385,9 @@ object Olap {
     * rows. Spend and cumulative sums stay decimal end-to-end (exact,
     * associative), so the distributed cumsum equals the oracle's
     * single-threaded one bit-for-bit. */
-  def revenueConcentration(spark: SparkSession, dir: String): DataFrame =
-    concentrationCore(Tables.orders(spark, dir))
-
-  private[graft] def concentrationCore(orders: DataFrame): DataFrame = {
-    val spark = orders.sparkSession
+  def revenueConcentration(spark: SparkSession, dir: String): DataFrame = {
     val parts = spark.sessionState.conf.numShufflePartitions
-    val spend = orders
+    val spend = Tables.orders(spark, dir)
       .groupBy(col("o_custkey"))
       .agg(sum(col("o_totalprice").cast("decimal(18,2)")).as("spend"))
     val sorted = spend
@@ -473,8 +469,25 @@ object Olap {
     * (observed 1-ulp drift vs Spark); BIGINT→DOUBLE is IEEE-exact
     * conversion in both engines, and the average is then one division
     * and one multiply — each a single deterministic IEEE op. */
-  def twapPerUser(spark: SparkSession, dir: String): DataFrame =
-    twapCore(Tables.events(spark, dir))
+  def twapPerUser(spark: SparkSession, dir: String): DataFrame = {
+    val w = Window.partitionBy("user_id").orderBy(col("ts").asc, col("event_id").asc)
+    Tables.events(spark, dir)
+      .select(col("user_id"), col("ts"), col("event_id"),
+        (col("value").cast("decimal(18,2)") * 100).cast("long").as("cents"))
+      .withColumn("next_ts", lead(col("ts"), 1).over(w))
+      .filter(col("next_ts").isNotNull)
+      .withColumn("dt_us", unix_micros(col("next_ts")) - unix_micros(col("ts")))
+      .groupBy("user_id")
+      .agg(
+        sum(col("cents") * col("dt_us")).as("wsum_cents"),
+        sum(col("dt_us")).as("dt_total"),
+        count(lit(1)).as("n_intervals"))
+      .select(col("user_id"),
+        (col("wsum_cents").cast("double") /
+          (col("dt_total").cast("double") * lit(100.0))).as("twap"),
+        col("dt_total"), col("n_intervals"))
+      .orderBy("user_id")
+  }
 
   /** Time-series gap-fill: hourly error counts joined against a COMPLETE
     * hour spine derived from the stream's own min/max bounds — missing
@@ -534,26 +547,6 @@ object Olap {
       .orderBy("hour")
   }
 
-  private[graft] def twapCore(events: DataFrame): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("ts").asc, col("event_id").asc)
-    events
-      .select(col("user_id"), col("ts"), col("event_id"),
-        (col("value").cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      .withColumn("next_ts", lead(col("ts"), 1).over(w))
-      .filter(col("next_ts").isNotNull)
-      .withColumn("dt_us", unix_micros(col("next_ts")) - unix_micros(col("ts")))
-      .groupBy("user_id")
-      .agg(
-        sum(col("cents") * col("dt_us")).as("wsum_cents"),
-        sum(col("dt_us")).as("dt_total"),
-        count(lit(1)).as("n_intervals"))
-      .select(col("user_id"),
-        (col("wsum_cents").cast("double") /
-          (col("dt_total").cast("double") * lit(100.0))).as("twap"),
-        col("dt_total"), col("n_intervals"))
-      .orderBy("user_id")
-  }
-
   /** Equi-depth (quantile-bucketed) histogram of order totals — the
     * profiling complement of the fixed-width [[priceHistogram]]: bucket
     * boundaries are the exact deciles, so every bucket holds ~10% of the
@@ -566,10 +559,8 @@ object Olap {
     * (mergeable KLL sketch, same plan shape) as with q43/q44. Boundary
     * assignment is `x > q_i` (strict), so a row equal to a boundary stays
     * in the lower bucket — pinned by the oracle. */
-  def equiDepthHistogram(spark: SparkSession, dir: String): DataFrame =
-    equiDepthCore(Tables.orders(spark, dir))
-
-  private[graft] def equiDepthCore(orders: DataFrame): DataFrame = {
+  def equiDepthHistogram(spark: SparkSession, dir: String): DataFrame = {
+    val orders = Tables.orders(spark, dir)
     // the 9 boundaries land as FLAT columns and the bucket is a chain of
     // scalar comparisons — all whole-stage-codegen; the aggregate(...)
     // HOF formulation was measured 7× slower warm and ~20 s slower cold

@@ -745,11 +745,8 @@ object Publisher {
     * Determinism: confidence is ONE integer-ratio division; lift is
     * (pair·total)/(ante·cons) — exact BIGINT products, then one IEEE
     * division — never a chain of rounded doubles. */
-  def assocRules(spark: SparkSession, dir: String): DataFrame =
-    assocRulesCore(Tables.events(spark, dir))
-
-  private[graft] def assocRulesCore(events: DataFrame): DataFrame = {
-    val ut = events
+  def assocRules(spark: SparkSession, dir: String): DataFrame = {
+    val ut = Tables.events(spark, dir)
       .select(col("user_id"), col("event_type")).distinct()
     val marginals = ut.groupBy("event_type")
       .agg(count(lit(1)).as("type_users"))
@@ -821,15 +818,6 @@ object Publisher {
       .orderBy("prev_type", "next_type")
   }
 
-  /** Last-touch revenue attribution: each purchase's value is credited to
-    * the user's most recent PRECEDING non-purchase event type (the
-    * "touch"); purchases with no prior touch credit 'direct'. The
-    * marketing-attribution shape (q48's as-of machinery generalized from
-    * view-only to any touch channel).
-    *
-    * Scale design: one per-user window (last over rows-preceding frame,
-    * ignore-nulls — no self-join, no fan-out), then a 5-row aggregate;
-    * revenue sums in exact DECIMAL before the final double cast. */
   /** q211 — position-based multi-touch attribution (the 40/20/40 "U"
     * model): each purchase credits its click/view touchpoints within a
     * 7-day lookback — first touch 40%, last touch 40%, middles split
@@ -875,14 +863,20 @@ object Publisher {
       .orderBy("channel")
   }
 
-  def lastTouchAttribution(spark: SparkSession, dir: String): DataFrame =
-    lastTouchCore(Tables.events(spark, dir))
-
-  private[graft] def lastTouchCore(events: DataFrame): DataFrame = {
+  /** Last-touch revenue attribution: each purchase's value is credited to
+    * the user's most recent PRECEDING non-purchase event type (the
+    * "touch"); purchases with no prior touch credit 'direct'. The
+    * marketing-attribution shape (q48's as-of machinery generalized from
+    * view-only to any touch channel).
+    *
+    * Scale design: one per-user window (last over rows-preceding frame,
+    * ignore-nulls — no self-join, no fan-out), then a 5-row aggregate;
+    * revenue sums in exact DECIMAL before the final double cast. */
+  def lastTouchAttribution(spark: SparkSession, dir: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy(col("ts").asc, col("event_id").asc)
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    events
+    Tables.events(spark, dir)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"),
         col("value"))
       .withColumn("touch_type",

@@ -75,16 +75,12 @@ object Sessions {
     * timestamp is a whole-partition window min rather than a self-join,
     * and the final rollup groups ≤ |days| keys. */
   def sessionFunnel(spark: SparkSession, dir: String,
-                    gapUs: Long = 1800000000L): DataFrame =
-    sessionFunnelCore(Tables.events(spark, dir), gapUs)
-
-  private[graft] def sessionFunnelCore(events: DataFrame,
-                                       gapUs: Long = 1800000000L): DataFrame = {
+                    gapUs: Long = 1800000000L): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy(col("ts").asc, col("event_id").asc)
     val wRun = w.rowsBetween(
       org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val labeled = events
+    val labeled = Tables.events(spark, dir)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
       .withColumn("ns",
         when(lag(col("ts"), 1).over(w).isNull
@@ -188,16 +184,11 @@ object Sessions {
     * proves the stitched banded plan row-identical. */
   def intervalCoverage(spark: SparkSession, dir: String,
                        gapUs: Long = 1800000000L,
-                       bandUs: Long = 3600000000L): DataFrame =
-    intervalCoverageCore(Tables.events(spark, dir), gapUs, bandUs)
-
-  private[graft] def intervalCoverageCore(events: DataFrame,
-                                          gapUs: Long = 1800000000L,
-                                          bandUs: Long = 3600000000L): DataFrame = {
+                       bandUs: Long = 3600000000L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("user_id").orderBy(col("ts").asc, col("event_id").asc)
     val wRun = w.rowsBetween(Window.unboundedPreceding, 0)
-    val sessions = events
+    val sessions = Tables.events(spark, dir)
       .select(col("user_id"), col("ts"), col("event_id"))
       .withColumn("ns",
         when(lag(col("ts"), 1).over(w).isNull

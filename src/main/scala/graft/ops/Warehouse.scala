@@ -76,14 +76,7 @@ object Warehouse {
       .filter(col("o_orderdate") >= lit(yearStart).cast("timestamp")
         && col("o_orderdate") < lit(yearEnd).cast("timestamp"))
       .select("o_orderkey", "o_custkey")
-    localVolumeJoin(Tables.lineitem(spark, dir), ord, cust, supp)
-  }
-
-  /** The fact-side join chain of [[localSupplierVolume]], shared with
-    * ScaleProbe so the probe measures the real plan. */
-  private[graft] def localVolumeJoin(lineitem: DataFrame, ord: DataFrame,
-                                     cust: DataFrame, supp: DataFrame): DataFrame = {
-    lineitem
+    Tables.lineitem(spark, dir)
       .select("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount")
       .join(ord, col("l_orderkey") === col("o_orderkey"))
       .join(cust, col("o_custkey") === col("c_custkey"))

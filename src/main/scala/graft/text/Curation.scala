@@ -461,8 +461,7 @@ object Curation {
       .repartition(spark.sparkContext.defaultParallelism), k)
 
   /** Per-doc distinct-bigram sets from any (doc_id, text) frame — the
-    * shared input builder of the exact and lazy greedy (and of
-    * ScaleProbe's synthetic sparse-overlap corpus). */
+    * shared input builder of the exact and lazy greedy. */
   private[graft] def bigramSetsOf(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), expr(s"${graft.text.TextOps.TokensExpr}").as("t"))
@@ -471,7 +470,7 @@ object Curation {
           |THEN transform(sequence(0, size(t) - 2), i -> concat(t[i], ' ', t[i + 1]))
           |ELSE array() END)""".stripMargin).as("s"))
 
-  /** Core over any (doc_id, text) frame (ScaleProbe hook). */
+  /** Core over any (doc_id, text) frame (Round13Spec's exact reference). */
   private[graft] def greedyCoverageCore(spark: SparkSession, docs: DataFrame,
                                         k: Int): DataFrame = {
     import spark.implicits._
@@ -534,8 +533,8 @@ object Curation {
     * for a non-pruning corpus. Without the fallback the pure-Minoux
     * hunt launched 873 jobs at sf0.1 and per-job overhead swamped the
     * eval savings — the regression Round12Spec's job bound pins. On
-    * sparse-overlap corpora (the intended regime, MEASURED in
-    * ScaleProbe: 304 evals constant at 1×/10× vs k·N of 40k/400k) the
+    * sparse-overlap corpora (the intended regime, MEASURED at 1×/10×:
+    * 304 evals constant vs k·N of 40k/400k, SCALE.md r13) the
     * queue prunes and the fallback never fires; either way every
     * evaluation stays distributed and the driver holds the frontier —
     * or one row — never the corpus.
@@ -556,9 +555,9 @@ object Curation {
       .repartition(spark.sparkContext.defaultParallelism),
       k, evalBatch, loadChunk)
 
-  /** Core over any (doc_id, text) frame (ScaleProbe hook — the
-    * sparse-overlap regime where the Minoux queue actually prunes is
-    * measured on a synthetic corpus, SCALE.md r13). */
+  /** Core over any (doc_id, text) frame — Round13Spec pins the
+    * sparse-overlap regime where the Minoux queue actually prunes on a
+    * synthetic corpus (measured at 1×/10×, SCALE.md r13). */
   private[graft] def greedyCoverageLazyCore(
       spark: SparkSession, docs: DataFrame, k: Int,
       evalBatch: Int, loadChunk: Int): (DataFrame, LazyGreedyStats) = {
@@ -985,8 +984,9 @@ object Curation {
       .orderBy("source")
   }
 
-  /** Core over any (word, freq) frame (spec/ScaleProbe hook). Returns
-    * (merge rows, final boundary-delimited segmentation). */
+  /** Core over any (word, freq) frame (also called by specs and
+    * StreamDemo). Returns (merge rows, final boundary-delimited
+    * segmentation). */
   private[graft] def bpeTrainCore(spark: SparkSession, words: DataFrame,
                                   merges: Int, minCount: Long = 1L):
       (Seq[(Long, String, String, String, Long)], DataFrame) = {
@@ -1238,13 +1238,9 @@ object Curation {
     *
     * Scale: the join is keyed by term over vocabulary-sized per-source
     * count tables (never documents); pair count is |sources|². */
-  def sourceDivergence(spark: SparkSession, dir: String): DataFrame =
-    sourceDivergenceCore(graft.Tables.documents(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism))
-
-  /** Core over any (source, text) frame (ScaleProbe hook). */
-  private[graft] def sourceDivergenceCore(docs: DataFrame): DataFrame = {
-    val cnt = docs
+  def sourceDivergence(spark: SparkSession, dir: String): DataFrame = {
+    val cnt = graft.Tables.documents(spark, dir)
+      .repartition(spark.sparkContext.defaultParallelism)
       .select(col("source"), explode(expr(graft.text.TextOps.TokensExpr)).as("w"))
       .groupBy("source", "w").agg(count(lit(1)).as("c"))
     val f = cnt.select(col("source"), col("w"), col("c"),
@@ -1450,7 +1446,7 @@ object Curation {
     boilerplateCore(gramTable(spark, dir, n), minDf)
 
   /** [[boilerplateProfile]] over any (doc_id, source, gram, ct) frame
-    * (spec hook + ScaleProbe). */
+    * (also called by Round5bSpec). */
   private[graft] def boilerplateCore(grams: DataFrame, minDf: Int): DataFrame = {
     // rows are distinct (doc, gram) by construction → df = plain count
     val dfTab = grams.groupBy("gram").agg(count(lit(1)).as("dfreq"))
@@ -1482,8 +1478,7 @@ object Curation {
       .orderBy(col("dfreq").desc, col("occ").desc, col("gram").asc)
       .limit(k)
 
-  /** [[lengthBandFilter]] over any (lang, n_tokens) frame (spec hook +
-    * ScaleProbe). */
+  /** [[lengthBandFilter]] over any (lang, n_tokens) frame. */
   private[graft] def lengthBandCore(toks: DataFrame): DataFrame = {
     val hist = toks
       .groupBy(col("lang"), col("n_tokens").cast("double").as("v"))
@@ -1548,8 +1543,8 @@ object Curation {
                         frac: Double = 0.30, bandWidth: Int = 8): DataFrame =
     tokenBudgetCore(Tables.documents(spark, dir), frac, bandWidth)
 
-  /** [[tokenBudgetSelect]] over any (doc_id, source, text) frame
-    * (ScaleProbe hook). */
+  /** [[tokenBudgetSelect]] over any (doc_id, source, text) frame (also
+    * the q200 funnel's budget stage). */
   private[graft] def tokenBudgetCore(docs: DataFrame,
                                      frac: Double = 0.30,
                                      bandWidth: Int = 8): DataFrame = {
@@ -1604,13 +1599,6 @@ object Curation {
     // (size of the q277 token split), so values are identical
     shardDeal(graft.text.TextOps.tokenProxy(spark, dir)
       .select(col("doc_id"), col("n_tokens")), nShards, bandWidth)
-
-  private[graft] def shardPackingCore(docs: DataFrame,
-                                      nShards: Int = 8,
-                                      bandWidth: Int = 8): DataFrame =
-    shardDeal(docs.select(col("doc_id"),
-      size(split(trim(regexp_replace(lower(col("text")), "\\s+", " ")), " "))
-        .cast("long").as("n_tokens")), nShards, bandWidth)
 
   /** The banded round-robin deal over any (doc_id, n_tokens) frame —
     * [[shardPacking]]'s rank machinery split from its tokenizer so the
@@ -1813,7 +1801,7 @@ object Curation {
     * (or the char fallback) for ONE word under a driver-held
     * vocabulary. Exists for the STREAMING monitor's hot path only: the
     * Catalyst `aggregate` HOF runs interpreted per word OCCURRENCE
-    * (the r15 ScaleProbe lesson), which capped the unigram monitor at
+    * (the r15 10× scale-run lesson), which capped the unigram monitor at
     * ~9k docs/s; this kernel plus a per-partition word memo clears the
     * target with the identical semantics. The batch q308 face KEEPS the
     * column form — that is the oracle-replayable surface; this mirror

@@ -205,8 +205,8 @@ object TextOps {
     })
 
   /** The (source, fp, ct) chunk-fingerprint ledger of any
-    * (doc_id, source, tokens) frame — the bounded pair domain both
-    * audit consumers read. */
+    * (doc_id, source, tokens) frame — the bounded pair domain the audit
+    * reads twice (per-fp source counts, then the join back). */
   private def chunkLedgerOf(docsWithTokens: DataFrame,
                             chunkLen: Int, stride: Int): DataFrame =
     chunkCore(docsWithTokens, chunkLen, stride, carry = Seq("source"))
@@ -214,20 +214,8 @@ object TextOps {
       .groupBy("source", "fp")
       .agg(count(lit(1)).as("ct"))
 
-  /** Core over any (doc_id, source, tokens) frame (ScaleProbe hook).
-    * The eager checkpoint keeps the probe single-derivation: the ledger
-    * feeds TWO consumers (fpSources + the final join) whose differing
-    * column pruning makes their exchanges non-identical — without the
-    * materialization the whole chunk-explode+md5 pipeline ran twice
-    * (measured: 13.4 s + 5.5 s of task time at sf0.1 for
-    * byte-equivalent work). The join stays strategy-neutral ON PURPOSE
-    * (both sides corpus-sized at 100 TB — no broadcast hint). */
-  private[graft] def chunkDupAuditCore(docsWithTokens: DataFrame,
-                                       chunkLen: Int = 100,
-                                       stride: Int = 50): DataFrame =
-    chunkAuditOf(chunkLedgerOf(docsWithTokens, chunkLen, stride)
-      .localCheckpoint())
-
+  /** The join stays strategy-neutral ON PURPOSE (both sides
+    * corpus-sized at 100 TB — no broadcast hint). */
   private def chunkAuditOf(perSrcFp: DataFrame): DataFrame = {
     val fpSources = perSrcFp.groupBy("fp")
       .agg(count(lit(1)).as("n_sources"))
@@ -524,22 +512,16 @@ object TextOps {
       .orderBy("source")
   }
 
+  /** Corpus n-gram counting: the `k` most frequent word `n`-grams. */
   def topBigrams(spark: SparkSession, dir: String,
                  n: Int = 2, k: Int = 25): DataFrame =
-    topBigramsCore(
-      Tables.documents(spark, dir)
-        .repartition(spark.sparkContext.defaultParallelism), n, k)
-
-  /** Corpus n-gram counting over any frame with a `text` column (shared
-    * with ScaleProbe so the probe times the exact operator shape). */
-  private[graft] def topBigramsCore(docs: DataFrame, n: Int = 2, k: Int = 25): DataFrame = {
-    docs
+    Tables.documents(spark, dir)
+      .repartition(spark.sparkContext.defaultParallelism)
       .select(explode(expr(s"graft_ngram_counts(text, $n)")).as("g"))
       .groupBy(col("g.gram").as("bigram"))
       .agg(sum(col("g.ct")).as("ct"))
       .orderBy(col("ct").desc, col("bigram").asc)
       .limit(k)
-  }
 
   /** Deterministic train/eval split report: assignment is a pure function
     * of doc_id (first hex digit of md5 ∈ {0,1} → eval, 2/16 = 12.5%), so
@@ -796,10 +778,7 @@ object TextOps {
     * the oracle hash-matches. */
   val PostingsCap = 20
   def invertedIndex(spark: SparkSession, dir: String): DataFrame =
-    invertedIndexCore(Tables.documents(spark, dir))
-
-  private[graft] def invertedIndexCore(docs: DataFrame): DataFrame =
-    withTokens(docs)
+    withTokens(Tables.documents(spark, dir))
       .select(col("doc_id"), explode(array_distinct(col("tokens"))).as("term"))
       .groupBy("term")
       .agg(count(lit(1)).as("df"), collect_list(col("doc_id")).as("postings"))
@@ -973,15 +952,8 @@ object TextOps {
     * volumes. The fact rows are never shuffled — both aggregates combine
     * map-side. */
   def sourceMixing(spark: SparkSession, dir: String,
-                   budgetFrac: Double = 0.5): DataFrame =
-    sourceMixingCore(
-      Tables.documents(spark, dir).select("doc_id", "source", "n_chars"),
-      budgetFrac)
-
-  /** [[sourceMixing]] over any (doc_id, source, n_chars) frame — split
-    * out so ScaleProbe can measure the real plan on amplified input. */
-  private[graft] def sourceMixingCore(docs: DataFrame,
-                                      budgetFrac: Double): DataFrame = {
+                   budgetFrac: Double = 0.5): DataFrame = {
+    val docs = Tables.documents(spark, dir).select("doc_id", "source", "n_chars")
     val totals = docs.groupBy("source")
       .agg(sum(col("n_chars")).as("src_chars"))
     val budget = totals.agg(expr(
@@ -1031,8 +1003,9 @@ object TextOps {
     mixtureWeightsFromPerSource(tokenProxy(spark, dir)
       .groupBy("source").agg(sum(col("n_tokens")).as("src_tokens")))
 
-  /** [[mixtureWeights]] over any (source, text) frame — split out so
-    * ScaleProbe can measure the real plan on amplified input. */
+  /** [[mixtureWeights]] over any (source, text) frame, tokenizing it
+    * (Round19Spec checks [[mixtureSampleCore]]'s single tokenize
+    * against it). */
   private[graft] def mixtureWeightsCore(docs: DataFrame): DataFrame =
     mixtureWeightsFromPerSource(withTokens(docs)
       .select(col("source"), size(col("tokens")).cast("long").as("n_tokens"))

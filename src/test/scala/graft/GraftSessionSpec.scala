@@ -83,8 +83,9 @@ class GraftSessionSpec extends SparkSpec {
     }.toMap
     assert(callSites("SparkSession.builder") === Map("graft/GraftSession.scala" -> 1))
     assert(callSites("GraftFunctions.register(") === Map("graft/GraftSession.scala" -> 1))
-    // ScaleProbe's one call restores the rule after its window baseline
-    assert(callSites("GroupTopK.install(") ===
-      Map("graft/functions/expressions.scala" -> 1, "graft/ScaleProbe.scala" -> 1))
+    assert(callSites("GroupTopK.install(") === Map("graft/functions/expressions.scala" -> 1))
+    // the plan rules are assigned in one place: GroupTopK.install
+    assert(callSites("extraOptimizations =") === Map("graft/plans/GroupTopK.scala" -> 1))
+    assert(callSites("extraStrategies =") === Map("graft/plans/GroupTopK.scala" -> 1))
   }
 }

@@ -13,6 +13,7 @@ import org.apache.hadoop.fs.{ChecksumException, CreateFlag, FileAlreadyExistsExc
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.state.StateStore
 import org.apache.spark.sql.functions.{col, date_format}
 
 import graft.io.{NioLocalFileSystem, NioLocalFs, NioRawLocalFileSystem}
@@ -45,11 +46,18 @@ class LocalFsSpec extends SparkSpec {
     * its own schedule is left out: the JDK Cleaner's `rm -rf` of the
     * artifact directory of a session clone the GC collected (Spark's
     * ArtifactManager), and the executor heartbeat's once-per-JVM
-    * `getconf PAGESIZE`. */
-  private def forksOf(body: => Unit): Seq[SparkSpec.Launch] =
+    * `getconf PAGESIZE`. State stores an earlier suite's stopped queries
+    * left loaded are unloaded before the recording starts
+    * (`StateStore.stop()`; the next store access restarts maintenance):
+    * the maintenance thread would otherwise unload them on its own
+    * schedule, and a RocksDB store's unload deletes its local directory
+    * with `rm -rf`. */
+  private def forksOf(body: => Unit): Seq[SparkSpec.Launch] = {
+    StateStore.stop()
     processesStartedBy(body).filterNot(_.frames.exists(f =>
       f.startsWith("jdk.internal.ref.CleanerImpl.") ||
         f.startsWith("org.apache.spark.executor.ProcfsMetricsGetter.")))
+  }
 
   private def tmp(prefix: String): String = Files.createTempDirectory(prefix).toString
 
@@ -138,9 +146,10 @@ class LocalFsSpec extends SparkSpec {
     }
     intercept[ChecksumException](readSized(stockFc, s"$dir/stock.bin"))
     intercept[ChecksumException](readSized(sessionFc, s"$dir/fc.bin"))
-    // Hadoop's FilterFs.open(path) skips ChecksumFs's verification, in
-    // the stock LocalFs too; kept as it is
-    assert(read(sessionFc, s"$dir/fc.bin") === read(stockFc, s"$dir/stock.bin"))
+    // Hadoop's FilterFs.open(path) skips ChecksumFs's verification: the
+    // stock LocalFs reads the flipped byte back, the engine's verifies it
+    assert(read(stockFc, s"$dir/stock.bin")(1000) === (data(1000) ^ 0xff).toByte)
+    intercept[ChecksumException](read(sessionFc, s"$dir/fc.bin"))
   }
 
   test("FileSystem rename onto an existing file returns false; FileContext OVERWRITE replaces") {

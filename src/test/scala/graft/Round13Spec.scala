@@ -78,7 +78,7 @@ class Round13Spec extends SparkSpec {
     // q262's winning regime as an executable fact (judge r12): disjoint
     // per-doc token namespaces mean no pick changes any other doc's
     // gain, so stale bounds stay exact and the hunt resolves from the
-    // first re-evaluation batch — the regime ScaleProbe measures at
+    // first re-evaluation batch — the regime SCALE.md records at
     // 1x/10x (evals=304 constant vs k*N=40k/400k)
     val nDocs = 500L
     val docs = spark.range(nDocs).select(col("id").as("doc_id"),

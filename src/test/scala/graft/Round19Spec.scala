@@ -317,7 +317,7 @@ class Round19Spec extends SparkSpec {
   // concentrated-drift batch retraining exactly at K, and EVERY
   // cycle's batch queryable immediately whatever path ran (the
   // a1ae855 dropped-batch regression class). The full 10-cycle
-  // two-artifact soak runs as `ScaleProbe soak` (SCALE.md table).
+  // two-artifact soak is recorded in SCALE.md ("Maintenance soak").
   // ---------------------------------------------------------------- //
 
   test("maintenance soak trace: retrain at bootstrap and at the planted drift cycle, compaction at the threshold, every batch queryable on its cycle") {
@@ -326,7 +326,8 @@ class Round19Spec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val base = java.nio.file.Files.createTempDirectory("graft_soak").toString
     val path = s"$base/pq"
-    var nextId = 70000000000L
+    val firstId = 70000000000L
+    var nextId = firstId
     val routes = (1 to 4).map { cycle =>
       val baseId = nextId; nextId += 1000000L
       val delta =
@@ -347,6 +348,15 @@ class Round19Spec extends SparkSpec {
     }
     assert(routes === Seq("retrain", "append+compact",
       "retrain", "append+compact"))
+    // every batch since the last retrain (cycles 3 and 4) is still
+    // queryable at the end: the append/compact churn loses none
+    val finalCodes = Sinks.loadPqIvfIndex(spark, path)._3
+    Seq(3, 4).foreach { cycle =>
+      val lo = firstId + (cycle - 1) * 1000000L
+      assert(finalCodes.filter(col("corpus_id") >= lo &&
+        col("corpus_id") < lo + 1000000L).count() > 0,
+        s"cycle $cycle's batch was lost by post-retrain append/compact churn")
+    }
   }
 
   // ---------------------------------------------------------------- //

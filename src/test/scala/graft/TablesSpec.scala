@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 /** The loaders resolve each table's schema once per session: repeat
   * calls start no Spark job, yet still build fresh relations, and a
-  * regenerated file is re-inferred. */
+  * regenerated file is re-inferred. `clearMemo` drops every memo. */
 class TablesSpec extends SparkSpec {
   private def tempDir(): String =
     java.nio.file.Files.createTempDirectory("graft_tables").toString
@@ -50,5 +50,16 @@ class TablesSpec extends SparkSpec {
     assert(t.schema.fieldNames.toSeq === Seq("name", "score"))
     assert(t.schema("score").dataType === org.apache.spark.sql.types.IntegerType)
     assert(t.collect().map(_.getString(0)).sorted.toSeq === (0 until 5).map(_.toString))
+  }
+
+  test("clearMemo drains every SessionMemo, not only the Tables ones") {
+    // a session of its own, so the shared session's memos stay warm
+    val s = spark.newSession()
+    val m = new SessionMemo[Int]
+    var builds = 0
+    def get(): Int = m.get(s, "k") { builds += 1; builds }
+    assert(get() === 1 && get() === 1)
+    Tables.clearMemo(s)
+    assert(get() === 2)
   }
 }

@@ -8,8 +8,9 @@ The comparison logic lives in `compare_frames` so tools/test_check_oracle.py
 can exercise it against planted regressions (e.g. an un-cast SUM(BIGINT)
 whose DuckDB HUGEINT surfaces as float64 OR object dtype).
 
-Each ok/FAIL line ends with the seconds DuckDB took for that oracle, and
-the ten slowest oracles are listed at the end.
+Each ok/FAIL line ends with the seconds DuckDB took for that oracle; the
+ten slowest oracles are listed at the end, then, by name, every oracle over
+ORACLE_BUDGET_S. The budget only reports: the exit code is the match result.
 """
 import sys, os, json, glob, time
 import pandas as pd
@@ -90,6 +91,17 @@ def slowest(seconds, n=10):
     return sorted(seconds.items(), key=lambda kv: (-kv[1], kv[0]))[:n]
 
 
+# DuckDB seconds one oracle may take: perfbench's oracle budget. The
+# oracles over it are where a run at a larger SF has to start cutting.
+ORACLE_BUDGET_S = 20.0
+
+
+def over_budget(seconds, budget=ORACLE_BUDGET_S):
+    """Names of the oracles that took more than `budget` DuckDB
+    seconds, slowest first (ties by name). Pure so the self-test drives it."""
+    return [name for name, secs in slowest(seconds, len(seconds)) if secs > budget]
+
+
 def main():
     import duckdb
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
@@ -133,6 +145,9 @@ def main():
     print(f"\nslowest oracles ({sum(seconds.values()):.1f} s DuckDB in total):")
     for name, secs in slowest(seconds):
         print(f"  {secs:8.2f} s  {name}")
+    over = over_budget(seconds)
+    print(f"\n{len(over)} oracles over the {ORACLE_BUDGET_S:g} s budget: "
+          f"{' '.join(over) or 'none'}")
     checked = len(only) if only else len(oracle)
     print(f"\n{checked - len(fails)}/{checked} match")
     sys.exit(1 if fails else 0)

@@ -83,5 +83,11 @@ got3 = slowest({"q01": 0.5, "q02": 3.0, "q03": 1.0, "q04": 3.0}, n=3)
 expect("slowest oracles come first, ties by name",
        got3 == [("q02", 3.0), ("q04", 3.0), ("q03", 1.0)], True, [str(got3)])
 
-print(f"\n{10 - len(failures)}/10 planted cases behave")
+# 10. The over-budget list: names over the budget only, slowest first.
+from check_oracle import over_budget
+got4 = over_budget({"q01": 0.5, "q02": 30.0, "q03": 20.0, "q04": 45.0}, budget=20.0)
+expect("oracles over the budget are named, slowest first, the budget itself is not over",
+       got4 == ["q04", "q02"], True, [str(got4)])
+
+print(f"\n{11 - len(failures)}/11 planted cases behave")
 sys.exit(1 if failures else 0)
