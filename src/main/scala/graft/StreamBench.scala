@@ -201,7 +201,7 @@ object StreamBench {
       synthVec.as("v"))
     measure("ann_gate_exact",
       graft.streaming.TrainingPipeline.annGate(
-        freshVecs(vecRate), cents, corpusAssigned),
+        freshVecs(vecRate), graft.vector.GateIndex.Full(cents, corpusAssigned)),
       "append", vecRate)
 
     // PQ-compressed ADC gate (q284's shape): same corpus as CODES only
@@ -218,8 +218,8 @@ object StreamBench {
       .cache()
     corpusCodes.count()
     measure("ann_gate_adc",
-      graft.streaming.TrainingPipeline.annGateAdc(
-        freshVecs(vecRate), cents, codebook, corpusCodes),
+      graft.streaming.TrainingPipeline.annGate(freshVecs(vecRate),
+        graft.vector.GateIndex.Pq(cents, codebook, corpusCodes)),
       "append", vecRate)
 
     // decode-or-quarantine gate: a 64-payload pool of real PNG bytes

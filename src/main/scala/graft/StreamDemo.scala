@@ -136,7 +136,7 @@ object StreamDemo {
           .filter(col("vec_id") >= 250L)
           .select(col("vec_id"), col("label").cast("long").as("label"),
             expr("transform(embedding, x -> cast(x as double))").as("v")),
-        gateCents, gateCorpus)
+        graft.vector.GateIndex.Full(gateCents, gateCorpus))
       .writeStream.format("memory").queryName("demo_vecgate")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
 

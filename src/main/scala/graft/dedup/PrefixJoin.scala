@@ -253,13 +253,6 @@ object PrefixJoin {
     val freshArr = withArr.filter(col("doc_id") >= splitAt)
     val postings = graft.Tables.memoCache(spark,
       s"ppjoin-prefix/$splitAt/$dir")(prefixPostingsOf(corpusArr))
-    incrementalPpjoinOf(corpusArr, freshArr, postings)
-  }
-
-  /** The probe + exact verify over any (corpus, fresh, postings) triple
-    * (spec hook; the streaming gate replays the same probe shape). */
-  private[graft] def incrementalPpjoinOf(corpusArr: DataFrame,
-      freshArr: DataFrame, postings: DataFrame): DataFrame = {
     val probe = freshArr.select(col("doc_id").as("fresh_id"),
       size(col("arr")).cast("long").as("na"), explode(col("arr")).as("sh64"))
     val cands = probe.join(postings,

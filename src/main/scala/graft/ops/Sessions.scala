@@ -122,16 +122,11 @@ object Sessions {
     * cumsum — the hash match is the banded-plan equivalence proof. */
   def peakConcurrency(spark: SparkSession, dir: String,
                       gapUs: Long = 1800000000L,
-                      bandUs: Long = 3600000000L): DataFrame =
-    peakConcurrencyCore(Tables.events(spark, dir), gapUs, bandUs)
-
-  private[graft] def peakConcurrencyCore(events: DataFrame,
-                                         gapUs: Long = 1800000000L,
-                                         bandUs: Long = 3600000000L): DataFrame = {
+                      bandUs: Long = 3600000000L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("user_id").orderBy(col("ts").asc, col("event_id").asc)
     val wRun = w.rowsBetween(Window.unboundedPreceding, 0)
-    val sessions = events
+    val sessions = Tables.events(spark, dir)
       .select(col("user_id"), col("ts"), col("event_id"))
       .withColumn("ns",
         when(lag(col("ts"), 1).over(w).isNull

@@ -32,37 +32,24 @@ import org.apache.spark.sql.functions._
 object Sinks {
 
   /** The OPERATING POINT of a published ANN-gate index version — which
-    * state shape the directory holds (`tier` ∈ full | pq | sq8) and the
-    * knobs the gate must run it with (probe width, admission threshold).
-    * Published as a 1-row table INSIDE the same atomic directory swap as
-    * the index state (judge r15: the q290 threshold sweep chose an
+    * state shape the directory holds (`tier`, a
+    * [[graft.vector.GateIndex.Tier]] name) and the knobs the gate must
+    * run it with (probe width, admission threshold). Published as a
+    * 1-row table INSIDE the same atomic directory swap as the index
+    * state (judge r15: the q290 threshold sweep chose an
     * operating point, but nothing carried it — retuning the knob could
     * never be atomic with the index version it was tuned FOR). A gate
     * that reads the knobs from the loaded index can never mix one
     * version's threshold with another version's codes. */
   case class GateConfig(tier: String, nProbe: Int, thresholdMicro: Long)
 
-  private def writeGateConfig(spark: org.apache.spark.sql.SparkSession,
-                              tmp: String, cfg: GateConfig): Unit = {
-    import spark.implicits._
-    Seq((cfg.tier, cfg.nProbe, cfg.thresholdMicro))
-      .toDF("tier", "n_probe", "threshold_micro")
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(tmp + "/config")
-  }
-
-  /** Load the operating point of the current index version (bak-recovery
-    * as the state loaders). `None` for pre-r16 index directories that
-    * predate config versioning — callers needing only the state shapes
-    * may proceed with compiled defaults; [[graft.streaming
-    * .TrainingPipeline.annGateFromIndex]] requires it. */
+  /** Load the operating point of the current index version, after the
+    * swap's crash recovery ([[recoverSwap]]). `None` for pre-r16 index
+    * directories that predate config versioning, which
+    * [[loadGateIndex]] refuses. */
   def loadGateConfig(spark: org.apache.spark.sql.SparkSession,
                      path: String): Option[GateConfig] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val bak = new org.apache.hadoop.fs.Path(path + "__bak")
-    if (!fs.exists(dst) && fs.exists(bak)) renameOrDie(fs, bak, dst)
+    val fs = recoverSwap(spark, path)
     val cfgPath = new org.apache.hadoop.fs.Path(path + "/config")
     if (!fs.exists(cfgPath)) None
     else {
@@ -82,6 +69,20 @@ object Sinks {
                           src: org.apache.hadoop.fs.Path,
                           dst: org.apache.hadoop.fs.Path): Unit =
     require(fs.rename(src, dst), s"rename failed: $src -> $dst")
+
+  /** Crash recovery of [[swapInDir]], run before every read of a swapped
+    * directory: a crash between "dst → bak" and "tmp → dst" leaves only
+    * bak, the complete previous version, so it moves back into place.
+    * Returns the filesystem for the caller's further checks. */
+  private def recoverSwap(spark: org.apache.spark.sql.SparkSession,
+                          path: String): org.apache.hadoop.fs.FileSystem = {
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      spark.sparkContext.hadoopConfiguration)
+    val dst = new org.apache.hadoop.fs.Path(path)
+    val bak = new org.apache.hadoop.fs.Path(path + "__bak")
+    if (!fs.exists(dst) && fs.exists(bak)) renameOrDie(fs, bak, dst)
+    fs
+  }
 
   // -------------------------------------------------------------------
   // Segmented code storage (judge r16 task 3): an index APPEND must cost
@@ -119,13 +120,6 @@ object Sinks {
     val name = f"seg-$next%05d"
     df.write.mode(SaveMode.Overwrite).parquet(segRoot(path) + "/" + name)
     name
-  }
-
-  private def writeSegmentManifest(spark: org.apache.spark.sql.SparkSession,
-                                   tmp: String, segs: Seq[String]): Unit = {
-    import spark.implicits._
-    segs.toDF("segment").coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(tmp + "/segments")
   }
 
   /** The current version's segment names (empty for a pre-segment
@@ -281,245 +275,111 @@ object Sinks {
   /** Rewrite the table at `path` as `merge(current table)` through the
     * two-phase swap of [[swapInDir]] — parquet cannot overwrite a table
     * being read, and the swap keeps a complete copy on disk at every
-    * instant. Crash recovery first: a crash between "dst → bak" and
-    * "tmp → dst" leaves only bak, and the merge must see its keys
-    * (losing them would rebuild the table from one batch, breaking the
-    * idempotent-upsert guarantee; flagged in round-1 review). */
+    * instant. Crash recovery first: the merge must see the keys of a
+    * version a crash left in bak (losing them would rebuild the table
+    * from one batch, breaking the idempotent-upsert guarantee; flagged
+    * in round-1 review). */
   private def mergeIntoTable(spark: org.apache.spark.sql.SparkSession, path: String)(
       merge: Option[DataFrame] => DataFrame): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val bak = new org.apache.hadoop.fs.Path(path + "__bak")
-    if (!fs.exists(dst) && fs.exists(bak)) renameOrDie(fs, bak, dst)
-    val existing = if (fs.exists(dst)) Some(readTable(spark, path)) else None
+    val fs = recoverSwap(spark, path)
+    val existing =
+      if (fs.exists(new org.apache.hadoop.fs.Path(path))) Some(readTable(spark, path))
+      else None
     swapInDir(spark, path) { tmp =>
       merge(existing).write.mode(SaveMode.Overwrite).parquet(tmp)
     }
   }
 
-  /** Publish one VERSION of the ANN gate's frozen IVF index (quantizer
-    * centroids + corpus cell assignments) under the K1 two-phase swap:
-    * both tables are written to `path__tmp` and the whole DIRECTORY is
-    * renamed in (dst aside to bak → tmp in → drop bak), so the gate
-    * always loads a complete, mutually consistent (centroids, assigned)
-    * pair — never a quantizer from one version probing assignments from
-    * another. This is the q263 maintenance handoff: the re-balance job
-    * computes the new index as a batch audit, publishes it here, and
-    * the gate picks it up at its next (re)start from the same
-    * checkpoint (StreamingSpec pins the mid-stream swap, including the
-    * crash-mid-swap recovery). */
-  def publishIvfIndex(path: String, cents: Seq[Seq[Double]],
-                      corpusAssigned: DataFrame,
-                      nProbe: Int = graft.vector.VectorOps.GateNProbe,
-                      thresholdMicro: Long =
-                        graft.vector.VectorOps.GateThresholdMicro,
-                      priorSegments: Seq[String] = Seq.empty): Unit = {
-    val spark = corpusAssigned.sparkSession
+  /** Publish one VERSION of the ANN gate's index under the K1 two-phase
+    * swap: every model table of the tier (centroids, plus the PQ
+    * codebook, the SQ8 spans, or the OPQ rotation, allocation and
+    * codebook), the segment manifest and the operating point
+    * ([[GateConfig]]) are written to `path__tmp` and the whole DIRECTORY
+    * is renamed in (dst aside to bak → tmp in → drop bak). The gate
+    * therefore always loads a mutually consistent version: never a
+    * quantizer from one version probing assignments from another, codes
+    * decoded with another version's codebook or spans, or a query
+    * rotated by another version's rotation (the sharpest case: every
+    * distance silently wrong). The corpus frame lands as one new
+    * immutable segment; with `priorSegments` empty this is a full
+    * publish that GCs the segments it no longer lists, otherwise an
+    * append that keeps them. This is the q263 maintenance handoff: the
+    * re-balance job publishes here and the gate picks the version up at
+    * its next (re)start from the same checkpoint (StreamingSpec pins
+    * the mid-stream swap and the crash-mid-swap recovery per tier). */
+  def publishGateIndex(path: String, index: graft.vector.GateIndex,
+                       nProbe: Int = graft.vector.VectorOps.GateNProbe,
+                       thresholdMicro: Long =
+                         graft.vector.VectorOps.GateThresholdMicro,
+                       priorSegments: Seq[String] = Seq.empty): Unit = {
+    import graft.vector.GateIndex._
+    val spark = index.corpus.sparkSession
     import spark.implicits._
-    requireSegmentSchemaMatch(corpusAssigned, path, priorSegments)
-    val seg = writeSegmentDir(corpusAssigned, path)
-    val segs = priorSegments :+ seg
+    requireSegmentSchemaMatch(index.corpus, path, priorSegments)
+    val segs = priorSegments :+ writeSegmentDir(index.corpus, path)
     swapInDir(spark, path) { tmp =>
-      cents.zipWithIndex.map { case (v, c) => (c, v) }.toDF("cell", "v")
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(tmp + "/centroids")
-      writeSegmentManifest(spark, tmp, segs)
-      writeGateConfig(spark, tmp, GateConfig("full", nProbe, thresholdMicro))
+      def put(sub: String, df: DataFrame): Unit =
+        df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$tmp/$sub")
+      def putCodebook(cb: Map[(Int, Int), Seq[Double]]): Unit =
+        put("codebook", cb.toSeq.map { case ((s, k), v) => (s, k, v) }
+          .sortBy(t => (t._1, t._2)).toDF("sub", "cid", "vals"))
+      index match {
+        case _: Full => ()
+        case p: Pq => putCodebook(p.cb)
+        case q: Sq8 =>
+          put("spans", q.mn.zip(q.mx).zipWithIndex
+            .map { case ((lo, hi), d) => (d, lo, hi) }.toDF("dim", "mn", "mx"))
+        case o: Opq =>
+          put("rotation", o.rm.zipWithIndex.map { case (row, i) => (i, row) }
+            .toDF("i", "vals"))
+          put("alloc", o.alloc.toSeq.sortBy(_._1).toDF("sub", "dims"))
+          putCodebook(o.cb)
+      }
+      put("centroids", index.cents.zipWithIndex.map { case (v, c) => (c, v) }
+        .toDF("cell", "v"))
+      put("segments", segs.toDF("segment"))
+      put("config", Seq((index.tier.name, nProbe, thresholdMicro))
+        .toDF("tier", "n_probe", "threshold_micro"))
     }
     if (priorSegments.isEmpty) gcSegments(spark, path, segs)
   }
 
-  /** Load the current IVF index version (restoring from bak after a
-    * crash between the two renames, the [[upsertByKey]] recovery). */
-  def loadIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                   path: String): (Seq[Seq[Double]], DataFrame) = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val bak = new org.apache.hadoop.fs.Path(path + "__bak")
-    if (!fs.exists(dst) && fs.exists(bak)) renameOrDie(fs, bak, dst)
-    val cents = spark.read.parquet(path + "/centroids")
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toSeq))
-      .sortBy(_._1).map(_._2).toIndexedSeq
-    (cents, readSegmented(spark, path, "assigned"))
-  }
-
-  /** Publish one VERSION of the PQ-COMPRESSED gate index — coarse
-    * centroids + trained PQ codebook + corpus PQ codes — under the same
-    * whole-directory two-phase swap as [[publishIvfIndex]]. All THREE
-    * tables land in `path__tmp` and swap in together, so the gate can
-    * never decode one version's codes with another version's codebook
-    * (the mutual-consistency contract, now extended to the codebook —
-    * judge r13 task 1; StreamingSpec pins the crash-mid-swap recovery
-    * and the codes↔codebook consistency of whatever version loads). */
-  def publishPqIvfIndex(path: String, cents: Seq[Seq[Double]],
-                        codebook: Map[(Int, Int), Seq[Double]],
-                        corpusCodes: DataFrame,
-                        nProbe: Int = graft.vector.VectorOps.GateNProbe,
-                        thresholdMicro: Long =
-                          graft.vector.VectorOps.GateThresholdMicro,
-                        priorSegments: Seq[String] = Seq.empty): Unit = {
-    val spark = corpusCodes.sparkSession
-    import spark.implicits._
-    requireSegmentSchemaMatch(corpusCodes, path, priorSegments)
-    val seg = writeSegmentDir(corpusCodes, path)
-    val segs = priorSegments :+ seg
-    swapInDir(spark, path) { tmp =>
-      cents.zipWithIndex.map { case (v, c) => (c, v) }.toDF("cell", "v")
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(tmp + "/centroids")
-      codebook.toSeq.map { case ((s, k), v) => (s, k, v) }
-        .sortBy(t => (t._1, t._2)).toDF("sub", "cid", "vals")
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(tmp + "/codebook")
-      writeSegmentManifest(spark, tmp, segs)
-      writeGateConfig(spark, tmp, GateConfig("pq", nProbe, thresholdMicro))
+  /** Load the current gate index version with its operating point —
+    * after the crash recovery of [[recoverSwap]], so whichever version
+    * survived loads complete and mutually consistent. The published
+    * config names the tier, and so the tables to read. An index
+    * directory without a config (the pre-r16 layout) is refused rather
+    * than run with a guessed tier. */
+  def loadGateIndex(spark: org.apache.spark.sql.SparkSession,
+                    path: String): (GateConfig, graft.vector.GateIndex) = {
+    import graft.vector.GateIndex._
+    val cfg = loadGateConfig(spark, path).getOrElse(
+      throw new IllegalArgumentException(
+        s"$path/config missing: the index was not published with an " +
+          "operating point (pre-r16 layout?) — re-publish via " +
+          "Sinks.publishGateIndex, which versions tier + nProbe + " +
+          "thresholdMicro atomically with the state"))
+    def rows(sub: String) = spark.read.parquet(s"$path/$sub").collect()
+    def vectors(sub: String): Seq[Seq[Double]] =
+      rows(sub).map(r => (r.getInt(0), r.getSeq[Double](1).toSeq))
+        .sortBy(_._1).map(_._2).toIndexedSeq
+    def codebook(): Map[(Int, Int), Seq[Double]] = rows("codebook")
+      .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toSeq).toMap
+    def codes(): DataFrame = readSegmented(spark, path, "codes")
+    val cents = vectors("centroids")
+    val index = tierOf(cfg.tier) match {
+      case Tier.Full => Full(cents, readSegmented(spark, path, "assigned"))
+      case Tier.Pq => Pq(cents, codebook(), codes())
+      case Tier.Sq8 =>
+        val spans = rows("spans")
+          .map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2))).sortBy(_._1)
+        Sq8(cents, spans.map(_._2).toSeq, spans.map(_._3).toSeq, codes())
+      case Tier.Opq =>
+        Opq(vectors("rotation"),
+          rows("alloc").map(r => r.getInt(0) -> r.getSeq[Int](1).toSeq).toMap,
+          cents, codebook(), codes())
     }
-    if (priorSegments.isEmpty) gcSegments(spark, path, segs)
-  }
-
-  /** Load the current PQ gate index version (bak-recovery as
-    * [[loadIvfIndex]]): (centroids, codebook, codes frame) — always a
-    * mutually consistent triple, whichever version survived. */
-  def loadPqIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String):
-      (Seq[Seq[Double]], Map[(Int, Int), Seq[Double]], DataFrame) = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val bak = new org.apache.hadoop.fs.Path(path + "__bak")
-    if (!fs.exists(dst) && fs.exists(bak)) renameOrDie(fs, bak, dst)
-    val cents = spark.read.parquet(path + "/centroids")
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toSeq))
-      .sortBy(_._1).map(_._2).toIndexedSeq
-    val cb = spark.read.parquet(path + "/codebook")
-      .collect()
-      .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toSeq)
-      .toMap
-    (cents, cb, readSegmented(spark, path, "codes"))
-  }
-
-  /** SQ8 twin of [[publishPqIvfIndex]]: centroids + per-dim spans +
-    * int8 codes land in ONE directory rename. The spans ARE the
-    * codebook here — decoding one version's codes with another
-    * version's spans silently shifts every reconstruction, so they
-    * must version together (the same mutual-consistency argument,
-    * smaller state). */
-  def publishSq8IvfIndex(path: String, cents: Seq[Seq[Double]],
-                         mn: Seq[Double], mx: Seq[Double],
-                         corpusCodes: DataFrame,
-                         nProbe: Int = graft.vector.VectorOps.GateNProbe,
-                         thresholdMicro: Long =
-                           graft.vector.VectorOps.GateThresholdMicro,
-                         priorSegments: Seq[String] = Seq.empty): Unit = {
-    val spark = corpusCodes.sparkSession
-    import spark.implicits._
-    requireSegmentSchemaMatch(corpusCodes, path, priorSegments)
-    val seg = writeSegmentDir(corpusCodes, path)
-    val segs = priorSegments :+ seg
-    swapInDir(spark, path) { tmp =>
-      cents.zipWithIndex.map { case (v, c) => (c, v) }.toDF("cell", "v")
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(tmp + "/centroids")
-      mn.zip(mx).zipWithIndex.map { case ((lo, hi), d) => (d, lo, hi) }
-        .toDF("dim", "mn", "mx")
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(tmp + "/spans")
-      writeSegmentManifest(spark, tmp, segs)
-      writeGateConfig(spark, tmp, GateConfig("sq8", nProbe, thresholdMicro))
-    }
-    if (priorSegments.isEmpty) gcSegments(spark, path, segs)
-  }
-
-  /** Load the current SQ8 gate index version (bak-recovery as
-    * [[loadPqIvfIndex]]): (centroids, mins, maxes, codes frame) —
-    * always a mutually consistent quadruple. */
-  def loadSq8IvfIndex(spark: org.apache.spark.sql.SparkSession, path: String):
-      (Seq[Seq[Double]], Seq[Double], Seq[Double], DataFrame) = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val bak = new org.apache.hadoop.fs.Path(path + "__bak")
-    if (!fs.exists(dst) && fs.exists(bak)) renameOrDie(fs, bak, dst)
-    val cents = spark.read.parquet(path + "/centroids")
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toSeq))
-      .sortBy(_._1).map(_._2).toIndexedSeq
-    val spans = spark.read.parquet(path + "/spans")
-      .collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
-      .sortBy(_._1)
-    (cents, spans.map(_._2).toSeq, spans.map(_._3).toSeq,
-      readSegmented(spark, path, "codes"))
-  }
-
-  /** OPQ twin of [[publishPqIvfIndex]]: rotation + snake allocation +
-    * coarse centroids + rotated-space codebook + codes land in ONE
-    * directory rename (tier "opq"). The rotation is the sharpest
-    * version-consistency case of the family: queries are TRANSFORMED at
-    * gate time, so ranking rotated codes against a query transformed by
-    * any other version's rotation silently corrupts every distance —
-    * worse than a codebook mismatch, which at least decodes in the same
-    * space. All five tables must version together. */
-  def publishOpqIvfIndex(path: String, rotation: Seq[Seq[Double]],
-                         alloc: Map[Int, Seq[Int]],
-                         cents: Seq[Seq[Double]],
-                         codebook: Map[(Int, Int), Seq[Double]],
-                         corpusCodes: DataFrame,
-                         nProbe: Int = graft.vector.VectorOps.GateNProbe,
-                         thresholdMicro: Long =
-                           graft.vector.VectorOps.GateThresholdMicro,
-                         priorSegments: Seq[String] = Seq.empty): Unit = {
-    val spark = corpusCodes.sparkSession
-    import spark.implicits._
-    requireSegmentSchemaMatch(corpusCodes, path, priorSegments)
-    val seg = writeSegmentDir(corpusCodes, path)
-    val segs = priorSegments :+ seg
-    swapInDir(spark, path) { tmp =>
-      rotation.zipWithIndex.map { case (row, i) => (i, row) }
-        .toDF("i", "vals")
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(tmp + "/rotation")
-      alloc.toSeq.sortBy(_._1).map { case (s, ds) => (s, ds) }
-        .toDF("sub", "dims")
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(tmp + "/alloc")
-      cents.zipWithIndex.map { case (v, c) => (c, v) }.toDF("cell", "v")
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(tmp + "/centroids")
-      codebook.toSeq.map { case ((s, k), v) => (s, k, v) }
-        .sortBy(t => (t._1, t._2)).toDF("sub", "cid", "vals")
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(tmp + "/codebook")
-      writeSegmentManifest(spark, tmp, segs)
-      writeGateConfig(spark, tmp, GateConfig("opq", nProbe, thresholdMicro))
-    }
-    if (priorSegments.isEmpty) gcSegments(spark, path, segs)
-  }
-
-  /** Load the current OPQ gate index version (bak-recovery as
-    * [[loadPqIvfIndex]]): (rotation, allocation, centroids, codebook,
-    * codes frame) — always a mutually consistent quintuple. */
-  def loadOpqIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String):
-      (Seq[Seq[Double]], Map[Int, Seq[Int]], Seq[Seq[Double]],
-        Map[(Int, Int), Seq[Double]], DataFrame) = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val bak = new org.apache.hadoop.fs.Path(path + "__bak")
-    if (!fs.exists(dst) && fs.exists(bak)) renameOrDie(fs, bak, dst)
-    val rot = spark.read.parquet(path + "/rotation")
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toSeq))
-      .sortBy(_._1).map(_._2).toIndexedSeq
-    val alloc = spark.read.parquet(path + "/alloc")
-      .collect().map(r => r.getInt(0) -> r.getSeq[Int](1).toSeq)
-      .toMap
-    val cents = spark.read.parquet(path + "/centroids")
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toSeq))
-      .sortBy(_._1).map(_._2).toIndexedSeq
-    val cb = spark.read.parquet(path + "/codebook")
-      .collect()
-      .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toSeq)
-      .toMap
-    (rot, alloc, cents, cb, readSegmented(spark, path, "codes"))
+    (cfg, index)
   }
 
   // -------------------------------------------------------------------
@@ -591,8 +451,8 @@ object Sinks {
 
   /** The shared two-phase whole-directory swap (write everything into
     * `path__tmp`, move dst aside to bak, move tmp in, drop bak) — the
-    * [[publishIvfIndex]] crash-safety contract factored for the
-    * keyed sinks and the publishers. */
+    * [[publishGateIndex]] crash-safety contract factored for the
+    * keyed sinks and the publishers; readers first run [[recoverSwap]]. */
   private def swapInDir(spark: org.apache.spark.sql.SparkSession,
                         path: String)(write: String => Unit): Unit = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -672,11 +532,7 @@ object Sinks {
     * published. Pure filesystem metadata, no Spark job. */
   private def recoveredVersionKey(spark: org.apache.spark.sql.SparkSession,
                                   path: String): String = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val bak = new org.apache.hadoop.fs.Path(path + "__bak")
-    if (!fs.exists(dst) && fs.exists(bak)) renameOrDie(fs, bak, dst)
+    val fs = recoverSwap(spark, path)
     if (!fs.exists(new org.apache.hadoop.fs.Path(path + "/config"))) "absent"
     else Seq("config", "vocab", "merges", "baseline").flatMap { sub =>
       val p = new org.apache.hadoop.fs.Path(s"$path/$sub")

@@ -270,14 +270,17 @@ object TrainingPipeline {
   case class VecAdmit(vec_id: Long, label: Long, v: Seq[Double])
 
   /** Streaming ANN admission gate — the VECTOR analog of [[nearDupGate]]
-    * (judge r11 task 2): fresh embeddings probe the corpus's FROZEN IVF
-    * index ([[graft.vector.VectorOps.frozenIvfIndex]] — quantizer +
-    * corpus cell assignments, built once like the q154 bloom and the
-    * q236 prefix postings) for near-duplicate vectors at ingest; a
-    * vector is admitted only if NO probed corpus vector reaches cosine
-    * ≥ the threshold. The candidate frame is the exact code the
-    * oracle-verified batch face (q261, [[graft.vector.VectorOps
-    * .annAdmission]]) runs — the Structured Streaming contract — so the
+    * (judge r11 task 2): fresh embeddings probe the corpus's FROZEN
+    * index (built once like the q154 bloom and the q236 prefix postings)
+    * for near-duplicate vectors at ingest; a vector is admitted only if
+    * NO probed corpus vector reaches cosine ≥ the threshold. The index
+    * is any [[graft.vector.GateIndex]] tier — full vectors, PQ codes +
+    * codebook (m bytes per corpus vector: the state that still fits at
+    * 100 TB), SQ8 codes + spans, or OPQ (fresh vectors rotated in-row,
+    * then PQ) — and its candidate frame is the exact code the
+    * oracle-verified batch face runs (q261 [[graft.vector.VectorOps
+    * .annAdmission]], q284 `pqAdmission`, q297 `sq8Admission`, q306
+    * `opqAdmission` — the Structured Streaming contract), so the
     * hash-verified batch result IS the verification of the stream's
     * arithmetic; StreamingSpec pins only the micro-batch mechanics.
     *
@@ -291,8 +294,7 @@ object TrainingPipeline {
     * probe leg is (vec_id, cos-verdict) only, and the per-vector fold is
     * a lazy O(1) pass under `flatMapGroupsWithState` (append-mode legal;
     * state unused — each vec_id lives in one micro-batch). */
-  def annGate(freshVecs: DataFrame,
-              cents: Seq[Seq[Double]], corpusAssigned: DataFrame,
+  def annGate(freshVecs: DataFrame, index: graft.vector.GateIndex,
               nProbe: Int = graft.vector.VectorOps.GateNProbe,
               thresholdMicro: Long = graft.vector.VectorOps.GateThresholdMicro): DataFrame = {
     val spark = freshVecs.sparkSession
@@ -300,139 +302,7 @@ object TrainingPipeline {
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     val payload = freshVecs.select(col("vec_id"), col("label"), col("v"),
       lit(false).as("dup"), lit(true).as("payload"))
-    val cand = graft.vector.VectorOps
-      .annGateCandidates(freshVecs, cents, corpusAssigned, nProbe)
-      .select(col("vec_id"), lit(0L).as("label"),
-        lit(null).cast("array<double>").as("v"),
-        (expr("CAST(FLOOR(1000000.0d * cos + 0.5d) AS BIGINT)")
-          >= lit(thresholdMicro)).as("dup"),
-        lit(false).as("payload"))
-    payload.unionByName(cand).as[VecGateEvt]
-      .groupByKey(_.vec_id)
-      .flatMapGroupsWithState[Boolean, VecAdmit](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (_, rows, _) =>
-          var head: VecGateEvt = null
-          var anyDup = false
-          rows.foreach { r =>
-            if (r.payload && head == null) head = r
-            if (r.dup) anyDup = true
-          }
-          if (anyDup || head == null) Iterator.empty
-          else Iterator(VecAdmit(head.vec_id, head.label, head.v))
-      }.toDF()
-  }
-
-  /** PQ-COMPRESSED streaming ANN admission gate (judge r13 task 1) —
-    * [[annGate]] with the corpus state it can actually hold at 100 TB:
-    * instead of full-precision corpus vectors, the static side is
-    * (cell, corpus_id, PQ codes) — m small ints per vector — plus the
-    * m·c·subDim trained codebook ([[graft.vector.VectorOps
-    * .frozenPqIvfIndex]]), and the admission decision is the ADC
-    * asymmetric cosine against the in-row reconstruction. The candidate
-    * frame is the exact code the oracle-verified batch face (q284,
-    * [[graft.vector.VectorOps.pqAdmission]]'s ADC leg) runs — the
-    * Structured Streaming contract — and q284's exact twin + the
-    * SketchBounds agreement floor quantify what the compression costs.
-    * Codebook and code table publish/load TOGETHER through
-    * [[Sinks.publishPqIvfIndex]]'s atomic swap, so the gate can never
-    * decode one version's codes with another version's codebook. */
-  def annGateAdc(freshVecs: DataFrame, cents: Seq[Seq[Double]],
-                 codebook: Map[(Int, Int), Seq[Double]],
-                 corpusCodes: DataFrame, nProbe: Int = graft.vector.VectorOps.GateNProbe,
-                 thresholdMicro: Long = graft.vector.VectorOps.GateThresholdMicro): DataFrame = {
-    val spark = freshVecs.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    val payload = freshVecs.select(col("vec_id"), col("label"), col("v"),
-      lit(false).as("dup"), lit(true).as("payload"))
-    val cand = graft.vector.VectorOps
-      .annGateAdcCandidates(freshVecs, cents, codebook, corpusCodes, nProbe)
-      .select(col("vec_id"), lit(0L).as("label"),
-        lit(null).cast("array<double>").as("v"),
-        (expr("CAST(FLOOR(1000000.0d * cos + 0.5d) AS BIGINT)")
-          >= lit(thresholdMicro)).as("dup"),
-        lit(false).as("payload"))
-    payload.unionByName(cand).as[VecGateEvt]
-      .groupByKey(_.vec_id)
-      .flatMapGroupsWithState[Boolean, VecAdmit](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (_, rows, _) =>
-          var head: VecGateEvt = null
-          var anyDup = false
-          rows.foreach { r =>
-            if (r.payload && head == null) head = r
-            if (r.dup) anyDup = true
-          }
-          if (anyDup || head == null) Iterator.empty
-          else Iterator(VecAdmit(head.vec_id, head.label, head.v))
-      }.toDF()
-  }
-
-  /** SQ8-compressed streaming ANN admission gate — [[annGateAdc]] with
-    * the third corpus state shape (q295's tier table in the gate
-    * dimension): per-dim int8 codes + two dim-length span literals
-    * instead of PQ codes + codebook. The candidate frame is the exact
-    * code the oracle-verified batch face (q297, [[graft.vector
-    * .VectorOps.sq8Admission]]'s sq8 leg) runs; Round15Spec pins its
-    * agreement ≥ the PQ gate's (64 bytes/vector buys near-lossless
-    * decisions where PQ's 16 trade ~5% of them away). */
-  def annGateSq8(freshVecs: DataFrame, cents: Seq[Seq[Double]],
-                 mn: Seq[Double], mx: Seq[Double],
-                 corpusCodes: DataFrame, nProbe: Int = graft.vector.VectorOps.GateNProbe,
-                 thresholdMicro: Long = graft.vector.VectorOps.GateThresholdMicro): DataFrame = {
-    val spark = freshVecs.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    val payload = freshVecs.select(col("vec_id"), col("label"), col("v"),
-      lit(false).as("dup"), lit(true).as("payload"))
-    val cand = graft.vector.VectorOps
-      .annGateSq8Candidates(freshVecs, cents, mn, mx, corpusCodes, nProbe)
-      .select(col("vec_id"), lit(0L).as("label"),
-        lit(null).cast("array<double>").as("v"),
-        (expr("CAST(FLOOR(1000000.0d * cos + 0.5d) AS BIGINT)")
-          >= lit(thresholdMicro)).as("dup"),
-        lit(false).as("payload"))
-    payload.unionByName(cand).as[VecGateEvt]
-      .groupByKey(_.vec_id)
-      .flatMapGroupsWithState[Boolean, VecAdmit](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (_, rows, _) =>
-          var head: VecGateEvt = null
-          var anyDup = false
-          rows.foreach { r =>
-            if (r.payload && head == null) head = r
-            if (r.dup) anyDup = true
-          }
-          if (anyDup || head == null) Iterator.empty
-          else Iterator(VecAdmit(head.vec_id, head.label, head.v))
-      }.toDF()
-  }
-
-  /** OPQ-rotated streaming ANN admission gate — [[annGateAdc]] with the
-    * FOURTH corpus state shape (q306's batch face): the fresh vector is
-    * transformed in-row (d codegen dots — no shuffle, no state, legal
-    * on the per-batch path), then the ADC candidate code runs verbatim
-    * in the rotated space against rotated-space centroids/codebook/
-    * codes. Rotation, allocation, codebook and codes publish/load
-    * TOGETHER through [[Sinks.publishOpqIvfIndex]]'s atomic swap — a
-    * query transformed by one version ranked against another version's
-    * codes is silently wrong everywhere, the sharpest mixing hazard of
-    * the tier family. */
-  def annGateOpq(freshVecs: DataFrame, rotation: Seq[Seq[Double]],
-                 alloc: Map[Int, Seq[Int]], cents: Seq[Seq[Double]],
-                 codebook: Map[(Int, Int), Seq[Double]],
-                 corpusCodes: DataFrame,
-                 nProbe: Int = graft.vector.VectorOps.GateNProbe,
-                 thresholdMicro: Long = graft.vector.VectorOps.GateThresholdMicro): DataFrame = {
-    val spark = freshVecs.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    val payload = freshVecs.select(col("vec_id"), col("label"), col("v"),
-      lit(false).as("dup"), lit(true).as("payload"))
-    val cand = graft.vector.VectorOps
-      .annGateOpqCandidates(freshVecs, rotation, alloc, cents, codebook,
-        corpusCodes, nProbe)
+    val cand = index.candidates(freshVecs, nProbe)
       .select(col("vec_id"), lit(0L).as("label"),
         lit(null).cast("array<double>").as("v"),
         (expr("CAST(FLOOR(1000000.0d * cos + 0.5d) AS BIGINT)")
@@ -456,47 +326,16 @@ object TrainingPipeline {
 
   /** ONE entry point for all FOUR ANN-gate tiers (judge r15 task 4):
     * the published index directory itself says which state shape it
-    * holds (`config.tier` ∈ full | pq | sq8 | opq) and which operating point
-    * to run it at (`n_probe`, `threshold_micro` — the q290 sweep's
-    * chosen knob, published atomically WITH the state by
-    * [[Sinks.publishIvfIndex]]/[[Sinks.publishPqIvfIndex]]/
-    * [[Sinks.publishSq8IvfIndex]]). Before this, a caller had to know
-    * which publish function produced the directory and pass the
-    * matching loader + gate + threshold by hand — three chances to mix
-    * versions; now retuning the threshold or switching compression tier
-    * is ONE atomic index publish, and the gate picks all of it up at
-    * its next (re)start. Loading is driver-side (model-sized pulls);
-    * the returned frame is the same streaming-legal plan the per-tier
-    * gates build. */
+    * holds (`config.tier`) and which operating point to run it at
+    * (`n_probe`, `threshold_micro` — the q290 sweep's chosen knob,
+    * published atomically WITH the state by [[Sinks.publishGateIndex]]).
+    * Retuning the threshold or switching compression tier is ONE atomic
+    * index publish, and the gate picks all of it up at its next
+    * (re)start. Loading is driver-side (model-sized pulls); the returned
+    * frame is the same streaming-legal plan [[annGate]] builds. */
   def annGateFromIndex(freshVecs: DataFrame, indexPath: String): DataFrame = {
-    val spark = freshVecs.sparkSession
-    val cfg = Sinks.loadGateConfig(spark, indexPath).getOrElse(
-      throw new IllegalArgumentException(
-        s"$indexPath/config missing: the index was not published with an " +
-          "operating point (pre-r16 layout?) — re-publish via Sinks." +
-          "publish{Ivf,PqIvf,Sq8Ivf,OpqIvf}Index, which versions tier + nProbe + " +
-          "thresholdMicro atomically with the state"))
-    cfg.tier match {
-      case "full" =>
-        val (cents, assigned) = Sinks.loadIvfIndex(spark, indexPath)
-        annGate(freshVecs, cents, assigned, cfg.nProbe, cfg.thresholdMicro)
-      case "pq" =>
-        val (cents, cb, codes) = Sinks.loadPqIvfIndex(spark, indexPath)
-        annGateAdc(freshVecs, cents, cb, codes, cfg.nProbe, cfg.thresholdMicro)
-      case "sq8" =>
-        val (cents, mn, mx, codes) = Sinks.loadSq8IvfIndex(spark, indexPath)
-        annGateSq8(freshVecs, cents, mn, mx, codes, cfg.nProbe,
-          cfg.thresholdMicro)
-      case "opq" =>
-        val (rot, alloc, cents, cb, codes) =
-          Sinks.loadOpqIvfIndex(spark, indexPath)
-        annGateOpq(freshVecs, rot, alloc, cents, cb, codes, cfg.nProbe,
-          cfg.thresholdMicro)
-      case other =>
-        throw new IllegalArgumentException(
-          s"unknown gate tier '$other' in $indexPath/config " +
-            "(expected full | pq | sq8 | opq)")
-    }
+    val (cfg, index) = Sinks.loadGateIndex(freshVecs.sparkSession, indexPath)
+    annGate(freshVecs, index, cfg.nProbe, cfg.thresholdMicro)
   }
 
   case class QuotaDoc(doc_id: Long, source: String, n_tokens: Long)
@@ -1066,29 +905,17 @@ object TrainingPipeline {
     * point. */
   def trainAndPublishIndex(spark: org.apache.spark.sql.SparkSession,
                            dir: String, path: String, tier: String): Unit = {
-    val thr = graft.vector.VectorOps.tunedThresholdMicroFor(spark, dir, tier)
-    tier match {
-      case "full" =>
-        val (cents, assigned) =
-          graft.vector.VectorOps.frozenIvfIndex(spark, dir)
-        Sinks.publishIvfIndex(path, cents, assigned, thresholdMicro = thr)
-      case "pq" =>
-        val (cents, cb, codes) =
-          graft.vector.VectorOps.frozenPqIvfIndex(spark, dir)
-        Sinks.publishPqIvfIndex(path, cents, cb, codes, thresholdMicro = thr)
-      case "sq8" =>
-        val (cents, mn, mx, codes) =
-          graft.vector.VectorOps.frozenSq8IvfIndex(spark, dir)
-        Sinks.publishSq8IvfIndex(path, cents, mn, mx, codes,
-          thresholdMicro = thr)
-      case "opq" =>
-        val idx = graft.vector.VectorOps.frozenOpqIvfIndex(spark, dir)
-        Sinks.publishOpqIvfIndex(path, idx.rm, idx.alloc, idx.cents, idx.cb,
-          idx.codes, thresholdMicro = thr)
-      case other =>
-        throw new IllegalArgumentException(
-          s"unknown gate tier '$other' (expected full | pq | sq8 | opq)")
+    import graft.vector.{GateIndex, VectorOps => V}
+    val thr = V.tunedThresholdMicroFor(spark, dir, tier)
+    val index = GateIndex.tierOf(tier) match {
+      case GateIndex.Tier.Full =>
+        val (cents, assigned) = V.frozenIvfIndex(spark, dir)
+        GateIndex.Full(cents, assigned)
+      case GateIndex.Tier.Pq => V.frozenPqIvfIndex(spark, dir)
+      case GateIndex.Tier.Sq8 => V.frozenSq8IvfIndex(spark, dir)
+      case GateIndex.Tier.Opq => V.frozenOpqIvfIndex(spark, dir)._1
     }
+    Sinks.publishGateIndex(path, index, thresholdMicro = thr)
   }
 
   /** Incremental (append-mode) index maintenance — judge r16 task 3.
@@ -1114,56 +941,18 @@ object TrainingPipeline {
     * no second anti-join. */
   def appendToPublishedIndex(spark: org.apache.spark.sql.SparkSession,
                              path: String, newVecs: DataFrame): Unit = {
-    val cfg = Sinks.loadGateConfig(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"$path/config missing — appendToPublishedIndex needs a " +
-          "published index (run trainAndPublishIndex first)"))
+    val (cfg, index) = Sinks.loadGateIndex(spark, path)
     val segs = Sinks.loadSegmentNames(spark, path)
     require(segs.nonEmpty,
       s"$path predates segmented code storage — re-publish (full train) " +
         "once before appending")
-    import graft.vector.{VectorOps => V}
-    def freshAgainst(indexedIds: DataFrame): DataFrame =
-      newVecs.join(indexedIds.select(col("corpus_id").as("vec_id")),
-        Seq("vec_id"), "left_anti").localCheckpoint()
-    cfg.tier match {
-      case "full" =>
-        val (cents, assigned) = Sinks.loadIvfIndex(spark, path)
-        val fresh = freshAgainst(assigned)
-        if (!fresh.isEmpty)
-          Sinks.publishIvfIndex(path, cents, V.assignCellsAuto(fresh, cents),
-            cfg.nProbe, cfg.thresholdMicro, priorSegments = segs)
-      case "pq" =>
-        val (cents, cb, codes) = Sinks.loadPqIvfIndex(spark, path)
-        val fresh = freshAgainst(codes)
-        val (m, _) = V.codebookShape(cb)
-        if (!fresh.isEmpty)
-          Sinks.publishPqIvfIndex(path, cents, cb,
-            V.pqEncodeAssigned(V.assignCellsAuto(fresh, cents), cb, m),
-            cfg.nProbe, cfg.thresholdMicro, priorSegments = segs)
-      case "sq8" =>
-        val (cents, mn, mx, codes) = Sinks.loadSq8IvfIndex(spark, path)
-        val fresh = freshAgainst(codes)
-        val newCodes = V.assignCellsAuto(fresh, cents)
-          .select(col("cell"), col("corpus_id"),
-            V.sq8CodesCol(col("cv"), mn, mx).as("codes"))
-        if (!fresh.isEmpty)
-          Sinks.publishSq8IvfIndex(path, cents, mn, mx, newCodes,
-            cfg.nProbe, cfg.thresholdMicro, priorSegments = segs)
-      case "opq" =>
-        val (rot, alloc, cents, cb, codes) = Sinks.loadOpqIvfIndex(spark, path)
-        val fresh = freshAgainst(codes)
-        val tFresh = fresh.select(col("vec_id"),
-          V.opqTransformCol(col("v"), rot, alloc).as("v"))
-        val (m, _) = V.codebookShape(cb)
-        if (!fresh.isEmpty)
-          Sinks.publishOpqIvfIndex(path, rot, alloc, cents, cb,
-            V.pqEncodeAssigned(V.assignCellsAuto(tFresh, cents), cb, m),
-            cfg.nProbe, cfg.thresholdMicro, priorSegments = segs)
-      case other =>
-        throw new IllegalArgumentException(
-          s"unknown gate tier '$other' in $path/config")
-    }
+    val fresh = newVecs
+      .join(index.corpus.select(col("corpus_id").as("vec_id")),
+        Seq("vec_id"), "left_anti")
+      .localCheckpoint()
+    if (!fresh.isEmpty)
+      Sinks.publishGateIndex(path, index.encode(fresh), cfg.nProbe,
+        cfg.thresholdMicro, priorSegments = segs)
   }
 
   /** Segment COMPACTION — the maintenance call that completes the LSM
@@ -1177,60 +966,21 @@ object TrainingPipeline {
     * before compaction (1 means it was a no-op). */
   def compactIndexSegments(spark: org.apache.spark.sql.SparkSession,
                            path: String): Int = {
-    val cfg = Sinks.loadGateConfig(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"$path/config missing"))
+    val (cfg, index) = Sinks.loadGateIndex(spark, path)
     val segs = Sinks.loadSegmentNames(spark, path)
-    if (segs.size <= 1) return segs.size
-    cfg.tier match {
-      case "full" =>
-        val (cents, assigned) = Sinks.loadIvfIndex(spark, path)
-        Sinks.publishIvfIndex(path, cents, assigned,
-          cfg.nProbe, cfg.thresholdMicro)
-      case "pq" =>
-        val (cents, cb, codes) = Sinks.loadPqIvfIndex(spark, path)
-        Sinks.publishPqIvfIndex(path, cents, cb, codes,
-          cfg.nProbe, cfg.thresholdMicro)
-      case "sq8" =>
-        val (cents, mn, mx, codes) = Sinks.loadSq8IvfIndex(spark, path)
-        Sinks.publishSq8IvfIndex(path, cents, mn, mx, codes,
-          cfg.nProbe, cfg.thresholdMicro)
-      case "opq" =>
-        val (rot, alloc, cents, cb, codes) = Sinks.loadOpqIvfIndex(spark, path)
-        Sinks.publishOpqIvfIndex(path, rot, alloc, cents, cb, codes,
-          cfg.nProbe, cfg.thresholdMicro)
-      case other => throw new IllegalArgumentException(
-        s"unknown gate tier '$other' in $path/config")
-    }
+    if (segs.size > 1)
+      Sinks.publishGateIndex(path, index, cfg.nProbe, cfg.thresholdMicro)
     segs.size
   }
 
   /** The q232 drift statistic of a delta AGAINST a published index:
     * per-cell occupancy share of the index's corpus vs the delta's
-    * assignment under the SAME frozen quantizer, max |diff| in micro.
-    * Driver-side arithmetic over two cell-keyed counts (k rows). */
+    * assignment under the SAME frozen quantizer (after the tier's
+    * in-row transform), max |diff| in micro. Driver-side arithmetic
+    * over two cell-keyed counts (k rows). */
   def publishedIndexDriftMicro(spark: org.apache.spark.sql.SparkSession,
                                path: String, newVecs: DataFrame): Long = {
-    import graft.vector.{VectorOps => V}
-    val cfg = Sinks.loadGateConfig(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"$path/config missing"))
-    val (cents, idxCells, xform) = cfg.tier match {
-      case "full" =>
-        val (c, a) = Sinks.loadIvfIndex(spark, path)
-        (c, a.select("cell"), identity[DataFrame] _)
-      case "pq" =>
-        val (c, _, codes) = Sinks.loadPqIvfIndex(spark, path)
-        (c, codes.select("cell"), identity[DataFrame] _)
-      case "sq8" =>
-        val (c, _, _, codes) = Sinks.loadSq8IvfIndex(spark, path)
-        (c, codes.select("cell"), identity[DataFrame] _)
-      case "opq" =>
-        val (rot, alloc, c, _, codes) = Sinks.loadOpqIvfIndex(spark, path)
-        (c, codes.select("cell"),
-          (df: DataFrame) => df.select(col("vec_id"),
-            V.opqTransformCol(col("v"), rot, alloc).as("v")))
-      case other => throw new IllegalArgumentException(
-        s"unknown gate tier '$other' in $path/config")
-    }
+    val (_, index) = Sinks.loadGateIndex(spark, path)
     def shares(cells: DataFrame): Map[Int, Long] = {
       val counts = cells.groupBy("cell").agg(count(lit(1)).as("n"))
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -1239,9 +989,9 @@ object TrainingPipeline {
         cell -> math.floor(1000000.0d * n / tot + 0.5d).toLong
       }
     }
-    val corpusShare = shares(idxCells)
-    val deltaShare =
-      shares(V.assignCellsAuto(xform(newVecs), cents).select("cell"))
+    val corpusShare = shares(index.corpus.select("cell"))
+    val deltaShare = shares(graft.vector.VectorOps
+      .assignCellsAuto(index.inRow(newVecs), index.cents).select("cell"))
     (corpusShare.keySet ++ deltaShare.keySet).map { cell =>
       math.abs(deltaShare.getOrElse(cell, 0L) -
         corpusShare.getOrElse(cell, 0L))
@@ -1280,7 +1030,9 @@ object TrainingPipeline {
     * delta-sized), full retrain when the drift monitor breaches (the
     * q232 signal promoted from a dashboard row to the retrain
     * trigger). Returns which path ran ("retrain", "append", or
-    * "append+compact").
+    * "append+compact"). A published index of another tier than `tier`
+    * also retrains: the requested tier wins, as a cron switched to a
+    * new tier expects.
     *
     * EVERY path indexes the batch: the retrain rebuilds the model from
     * `dir`'s frozen corpus side and then APPENDS `newVecs` through the
@@ -1302,10 +1054,8 @@ object TrainingPipeline {
                     newVecs: DataFrame,
                     driftBudgetMicro: Long = IndexDriftBudgetMicro,
                     compactAt: Int = IndexCompactAtSegments): String = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val exists = fs.exists(new org.apache.hadoop.fs.Path(path + "/config"))
-    if (!exists || Sinks.loadSegmentNames(spark, path).isEmpty ||
+    if (!Sinks.loadGateConfig(spark, path).exists(_.tier == tier) ||
+        Sinks.loadSegmentNames(spark, path).isEmpty ||
         publishedIndexDriftMicro(spark, path, newVecs) > driftBudgetMicro) {
       trainAndPublishIndex(spark, dir, path, tier)
       appendToPublishedIndex(spark, path, newVecs)
@@ -1341,13 +1091,13 @@ object TrainingPipeline {
     // runs fresh), and warm passes read the loaded result
     val loaded = graft.Tables.memoCache(spark, s"incr-parity/$dir/" +
         graft.Tables.pathFingerprint(spark, s"$dir/embeddings.parquet")) {
-      val (cents, cb, codes) = V.frozenPqIvfIndex(spark, dir)
-      Sinks.publishPqIvfIndex(path, cents, cb,
-        codes.filter(col("corpus_id") < V.IncrBaseAt))
+      val index = V.frozenPqIvfIndex(spark, dir)
+      Sinks.publishGateIndex(path,
+        index.copy(codes = index.codes.filter(col("corpus_id") < V.IncrBaseAt)))
       appendToPublishedIndex(spark, path,
         V.vecs(spark, dir).filter(col("vec_id") >= V.IncrBaseAt &&
           col("vec_id") < V.GateSplitAt))
-      Sinks.loadPqIvfIndex(spark, path)._3
+      Sinks.loadGateIndex(spark, path)._2.corpus
     }
     loaded
       .select(col("cell").cast("long").as("cell"), col("corpus_id"),

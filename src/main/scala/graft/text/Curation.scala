@@ -1366,10 +1366,26 @@ object Curation {
     * percentiles, mirrored op-for-op in the oracle SQL (q122's idiom).
     */
   def lengthBandFilter(spark: SparkSession, dir: String): DataFrame = {
-    lengthBandCore(
-      Tables.documents(spark, dir)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select(col("lang"), expr("graft_text_stats(text).n_tokens").as("n_tokens")))
+    val toks = Tables.documents(spark, dir)
+      .repartition(spark.sparkContext.defaultParallelism)
+      .select(col("lang"), expr("graft_text_stats(text).n_tokens").as("n_tokens"))
+    val hist = toks
+      .groupBy(col("lang"), col("n_tokens").cast("double").as("v"))
+      .agg(count(lit(1)).as("cnt"))
+    val bands = Percentiles.fromHistogram(hist, "lang",
+        Seq("p05_tokens" -> 0.05, "p95_tokens" -> 0.95))
+      .select(col("lang"), col("p05_tokens"), col("p95_tokens"))
+    val keep = col("n_tokens") >= col("p05_tokens") &&
+      col("n_tokens") <= col("p95_tokens")
+    toks.join(broadcast(bands), "lang")
+      .groupBy("lang")
+      .agg(
+        min(col("p05_tokens")).as("p05_tokens"),
+        min(col("p95_tokens")).as("p95_tokens"),
+        sum(when(keep, lit(1L)).otherwise(lit(0L))).as("n_kept"),
+        sum(when(keep, lit(0L)).otherwise(lit(1L))).as("n_dropped"),
+        sum(when(keep, col("n_tokens")).otherwise(lit(0L))).as("tokens_kept"))
+      .orderBy("lang")
   }
 
   /** Per-source perplexity-band filter over the corpus-trained bigram
@@ -1477,27 +1493,6 @@ object Curation {
       .filter(col("dfreq") >= minDf)
       .orderBy(col("dfreq").desc, col("occ").desc, col("gram").asc)
       .limit(k)
-
-  /** [[lengthBandFilter]] over any (lang, n_tokens) frame. */
-  private[graft] def lengthBandCore(toks: DataFrame): DataFrame = {
-    val hist = toks
-      .groupBy(col("lang"), col("n_tokens").cast("double").as("v"))
-      .agg(count(lit(1)).as("cnt"))
-    val bands = Percentiles.fromHistogram(hist, "lang",
-        Seq("p05_tokens" -> 0.05, "p95_tokens" -> 0.95))
-      .select(col("lang"), col("p05_tokens"), col("p95_tokens"))
-    val keep = col("n_tokens") >= col("p05_tokens") &&
-      col("n_tokens") <= col("p95_tokens")
-    toks.join(broadcast(bands), "lang")
-      .groupBy("lang")
-      .agg(
-        min(col("p05_tokens")).as("p05_tokens"),
-        min(col("p95_tokens")).as("p95_tokens"),
-        sum(when(keep, lit(1L)).otherwise(lit(0L))).as("n_kept"),
-        sum(when(keep, lit(0L)).otherwise(lit(1L))).as("n_dropped"),
-        sum(when(keep, col("n_tokens")).otherwise(lit(0L))).as("tokens_kept"))
-      .orderBy("lang")
-  }
 
   /** Deterministic quality-WEIGHTED sampling: accept a document with
     * probability proportional to its length signal (w = min(n_chars,

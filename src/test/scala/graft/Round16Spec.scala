@@ -210,7 +210,7 @@ class Round16Spec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val dir = "/root/testdata/sf0.001"
-    val idx = graft.vector.VectorOps.frozenOpqIvfIndex(spark, dir)
+    val (idx, _) = graft.vector.VectorOps.frozenOpqIvfIndex(spark, dir)
     val m = idx.alloc.size
     val d = idx.rm.length
     assert(m === 16 && d === 64)

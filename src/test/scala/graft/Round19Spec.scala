@@ -340,7 +340,7 @@ class Round19Spec extends SparkSpec {
           V.vecs(spark, dir).filter(col("vec_id") >= V.GateSplitAt)
             .select((col("vec_id") + lit(baseId)).as("vec_id"), col("v"))
       val r = TP.maintainIndex(spark, dir, path, "pq", delta, compactAt = 2)
-      assert(Sinks.loadPqIvfIndex(spark, path)._3
+      assert(Sinks.loadGateIndex(spark, path)._2.corpus
         .filter(col("corpus_id") >= baseId &&
           col("corpus_id") < baseId + 1000000L).count() > 0,
         s"cycle $cycle's batch must be queryable immediately (route $r)")
@@ -350,7 +350,7 @@ class Round19Spec extends SparkSpec {
       "retrain", "append+compact"))
     // every batch since the last retrain (cycles 3 and 4) is still
     // queryable at the end: the append/compact churn loses none
-    val finalCodes = Sinks.loadPqIvfIndex(spark, path)._3
+    val finalCodes = Sinks.loadGateIndex(spark, path)._2.corpus
     Seq(3, 4).foreach { cycle =>
       val lo = firstId + (cycle - 1) * 1000000L
       assert(finalCodes.filter(col("corpus_id") >= lo &&
@@ -373,17 +373,18 @@ class Round19Spec extends SparkSpec {
     TP.trainAndPublishIndex(spark, dir, path, "pq")
     val segs = Sinks.loadSegmentNames(spark, path)
     assert(segs.nonEmpty)
-    val (cents, cb, codes) = Sinks.loadPqIvfIndex(spark, path)
+    val (_, graft.vector.GateIndex.Pq(cents, cb, codes)) =
+      Sinks.loadGateIndex(spark, path)
     val divergent = codes.withColumnRenamed("codes", "codes_v2")
     val e = intercept[IllegalArgumentException] {
-      Sinks.publishPqIvfIndex(path, cents, cb, divergent,
+      Sinks.publishGateIndex(path, graft.vector.GateIndex.Pq(cents, cb, divergent),
         priorSegments = segs)
     }
     assert(e.getMessage.contains("schema drift"))
     // the same shape as a FULL publish (empty priors) is legal schema
     // evolution — the old segments retire with the old manifest
-    Sinks.publishPqIvfIndex(path, cents, cb, divergent)
-    assert(Sinks.loadPqIvfIndex(spark, path)._3.columns.contains("codes_v2"))
+    Sinks.publishGateIndex(path, graft.vector.GateIndex.Pq(cents, cb, divergent))
+    assert(Sinks.loadGateIndex(spark, path)._2.corpus.columns.contains("codes_v2"))
   }
 
   // ---------------------------------------------------------------- //

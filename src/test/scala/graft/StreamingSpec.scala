@@ -286,7 +286,7 @@ class StreamingSpec extends SparkSpec {
 
   test("incremental index maintenance: append ≡ full for every tier, drift routes append vs retrain, a restarted gate sees the appended corpus") {
     import graft.streaming.{Sinks, TrainingPipeline}
-    import graft.vector.{VectorOps => V}
+    import graft.vector.{GateIndex, VectorOps => V}
     import org.apache.spark.sql.DataFrame
     val dir = "/root/testdata/sf0.001"
     val base = java.nio.file.Files.createTempDirectory("graft_incr").toString
@@ -297,42 +297,43 @@ class StreamingSpec extends SparkSpec {
       df.collect().map(_.mkString("|")).toSet
     // --- append ≡ full, all four tiers: base-only publish + the
     // production append path loads back EXACTLY the single-shot table
+    def corpusOf(p: String): DataFrame = Sinks.loadGateIndex(spark, p)._2.corpus
     val (cents, assigned) = V.frozenIvfIndex(spark, dir)
-    Sinks.publishIvfIndex(s"$base/full", cents,
-      assigned.filter(col("corpus_id") < V.IncrBaseAt))
+    Sinks.publishGateIndex(s"$base/full", GateIndex.Full(cents,
+      assigned.filter(col("corpus_id") < V.IncrBaseAt)))
     TrainingPipeline.appendToPublishedIndex(spark, s"$base/full", delta)
-    assert(rowsOf(Sinks.loadIvfIndex(spark, s"$base/full")._2
+    assert(rowsOf(corpusOf(s"$base/full")
         .select("cell", "corpus_id")) ===
       rowsOf(assigned.select("cell", "corpus_id")))
-    val (_, cbP, codesP) = V.frozenPqIvfIndex(spark, dir)
-    Sinks.publishPqIvfIndex(s"$base/pq", cents, cbP,
-      codesP.filter(col("corpus_id") < V.IncrBaseAt))
+    val GateIndex.Pq(_, cbP, codesP) = V.frozenPqIvfIndex(spark, dir)
+    Sinks.publishGateIndex(s"$base/pq", GateIndex.Pq(cents, cbP,
+      codesP.filter(col("corpus_id") < V.IncrBaseAt)))
     TrainingPipeline.appendToPublishedIndex(spark, s"$base/pq", delta)
-    assert(rowsOf(Sinks.loadPqIvfIndex(spark, s"$base/pq")._3) ===
+    assert(rowsOf(corpusOf(s"$base/pq")) ===
       rowsOf(codesP))
-    val (_, mn, mx, codesS) = V.frozenSq8IvfIndex(spark, dir)
-    Sinks.publishSq8IvfIndex(s"$base/sq8", cents, mn, mx,
-      codesS.filter(col("corpus_id") < V.IncrBaseAt))
+    val GateIndex.Sq8(_, mn, mx, codesS) = V.frozenSq8IvfIndex(spark, dir)
+    Sinks.publishGateIndex(s"$base/sq8", GateIndex.Sq8(cents, mn, mx,
+      codesS.filter(col("corpus_id") < V.IncrBaseAt)))
     TrainingPipeline.appendToPublishedIndex(spark, s"$base/sq8", delta)
-    assert(rowsOf(Sinks.loadSq8IvfIndex(spark, s"$base/sq8")._4) ===
+    assert(rowsOf(corpusOf(s"$base/sq8")) ===
       rowsOf(codesS))
-    val opq = V.frozenOpqIvfIndex(spark, dir)
-    Sinks.publishOpqIvfIndex(s"$base/opq", opq.rm, opq.alloc, opq.cents,
-      opq.cb, opq.codes.filter(col("corpus_id") < V.IncrBaseAt))
+    val (opq, _) = V.frozenOpqIvfIndex(spark, dir)
+    Sinks.publishGateIndex(s"$base/opq",
+      opq.copy(codes = opq.codes.filter(col("corpus_id") < V.IncrBaseAt)))
     TrainingPipeline.appendToPublishedIndex(spark, s"$base/opq", delta)
-    assert(rowsOf(Sinks.loadOpqIvfIndex(spark, s"$base/opq")._5) ===
+    assert(rowsOf(corpusOf(s"$base/opq")) ===
       rowsOf(opq.codes))
     // appends are idempotent: re-appending the same delta anti-joins
     // to nothing and the table is unchanged
     TrainingPipeline.appendToPublishedIndex(spark, s"$base/pq", delta)
-    assert(rowsOf(Sinks.loadPqIvfIndex(spark, s"$base/pq")._3) ===
+    assert(rowsOf(corpusOf(s"$base/pq")) ===
       rowsOf(codesP))
     // --- a crashed append (segment written, manifest swap never ran)
     // leaves the served version untouched
     val segsBefore = Sinks.loadSegmentNames(spark, s"$base/pq")
     codesP.limit(3).write.parquet(s"$base/pq__segs/seg-99999")
     assert(Sinks.loadSegmentNames(spark, s"$base/pq") === segsBefore)
-    assert(rowsOf(Sinks.loadPqIvfIndex(spark, s"$base/pq")._3) ===
+    assert(rowsOf(corpusOf(s"$base/pq")) ===
       rowsOf(codesP))
     // --- drift routing: the undrifted fresh half appends (measured
     // 28-40k micro, budget 100k); a delta collapsed onto ONE corpus
@@ -345,7 +346,7 @@ class StreamingSpec extends SparkSpec {
     // re-admit copies of those vectors forever): the fresh half is in
     // the loaded index right after the from-scratch retrain
     def indexedIds(p: String): Set[Long] =
-      Sinks.loadPqIvfIndex(spark, p)._3
+      corpusOf(p)
         .select("corpus_id").collect().map(_.getLong(0)).toSet
     val freshIds = freshHalf.select("vec_id").collect()
       .map(_.getLong(0)).toSet
@@ -365,13 +366,13 @@ class StreamingSpec extends SparkSpec {
     // migrating retrain instead of crash-looping on the append-side
     // require (advisor r17)
     val legacy = s"$base/legacy"
-    Sinks.publishPqIvfIndex(legacy, cents, cbP,
-      codesP.filter(col("corpus_id") < V.IncrBaseAt))
+    Sinks.publishGateIndex(legacy, GateIndex.Pq(cents, cbP,
+      codesP.filter(col("corpus_id") < V.IncrBaseAt)))
     // simulate the pre-r17 layout: drop the manifest, park the codes as
     // the in-directory table the legacy reader resolves
     val fsL = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
-    val codesSnap = Sinks.loadPqIvfIndex(spark, legacy)._3.localCheckpoint()
+    val codesSnap = corpusOf(legacy).localCheckpoint()
     codesSnap.write.parquet(s"$legacy/codes")
     fsL.delete(new org.apache.hadoop.fs.Path(s"$legacy/segments"), true)
     fsL.delete(new org.apache.hadoop.fs.Path(s"${legacy}__segs"), true)
@@ -389,8 +390,8 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val dupOfDelta = e.filter(col("vec_id") === lit(V.IncrBaseAt + 7))
       .select(lit(77777L).as("vec_id"), lit(0L).as("label"), col("v"))
-    Sinks.publishIvfIndex(s"$base/gate", cents,
-      assigned.filter(col("corpus_id") < V.IncrBaseAt))
+    Sinks.publishGateIndex(s"$base/gate", GateIndex.Full(cents,
+      assigned.filter(col("corpus_id") < V.IncrBaseAt)))
     val before = TrainingPipeline
       .annGateFromIndex(dupOfDelta, s"$base/gate").count()
     assert(before === 1L, "duplicate of an un-indexed vector must pass")
@@ -408,9 +409,9 @@ class StreamingSpec extends SparkSpec {
     val base = java.nio.file.Files.createTempDirectory("graft_compact").toString
     val path = s"$base/pq"
     val e = V.vecs(spark, dir)
-    val (cents, cb, codes) = V.frozenPqIvfIndex(spark, dir)
-    Sinks.publishPqIvfIndex(path, cents, cb,
-      codes.filter(col("corpus_id") < V.IncrBaseAt))
+    val index = V.frozenPqIvfIndex(spark, dir)
+    Sinks.publishGateIndex(path,
+      index.copy(codes = index.codes.filter(col("corpus_id") < V.IncrBaseAt)))
     // two appends → three segments
     TrainingPipeline.appendToPublishedIndex(spark, path,
       e.filter(col("vec_id") >= V.IncrBaseAt && col("vec_id") < 190L))
@@ -422,7 +423,7 @@ class StreamingSpec extends SparkSpec {
     def verdicts(): Set[Long] = TrainingPipeline
       .annGateFromIndex(fresh, path)
       .select("vec_id").collect().map(_.getLong(0)).toSet
-    def rowsOf(): Set[String] = Sinks.loadPqIvfIndex(spark, path)._3
+    def rowsOf(): Set[String] = Sinks.loadGateIndex(spark, path)._2.corpus
       .collect().map(_.mkString("|")).toSet
     val (rowsBefore, admitBefore) = (rowsOf(), verdicts())
     assert(TrainingPipeline.compactIndexSegments(spark, path) === 3)
@@ -452,7 +453,7 @@ class StreamingSpec extends SparkSpec {
       (col("vec_id") + lit(100000L * i)).as("vec_id"),
       col("label"), col("v"))
     def segsN: Int = Sinks.loadSegmentNames(spark, path).size
-    def rowsOf(): Set[String] = Sinks.loadPqIvfIndex(spark, path)._3
+    def rowsOf(): Set[String] = Sinks.loadGateIndex(spark, path)._2.corpus
       .collect().map(_.mkString("|")).toSet
     // first call trains (1 seg) + appends the batch (2 segs)
     assert(TrainingPipeline.maintainIndex(spark, dir, path, "pq",
@@ -483,6 +484,48 @@ class StreamingSpec extends SparkSpec {
       shifted(3), compactAt = 3) === "append")
     assert(segsN === 2, "an empty delta must not write a segment")
     assert(rowsOf() === rowsBeforeDup)
+  }
+
+  test("maintainIndex retrains when the published tier is not the requested one, and the batch lands in the new tier's index") {
+    import graft.streaming.{Sinks, TrainingPipeline}
+    import graft.vector.{VectorOps => V}
+    val dir = "/root/testdata/sf0.001"
+    val base = java.nio.file.Files.createTempDirectory("graft_tierswitch").toString
+    val path = s"$base/idx"
+    val freshHalf = V.vecs(spark, dir).filter(col("vec_id") >= V.GateSplitAt)
+    Sinks.publishGateIndex(path, V.frozenPqIvfIndex(spark, dir))
+    // undrifted against the published quantizer: on drift alone this
+    // batch would take the append path into the pq index
+    assert(TrainingPipeline.publishedIndexDriftMicro(spark, path, freshHalf)
+      <= TrainingPipeline.IndexDriftBudgetMicro)
+    assert(TrainingPipeline.maintainIndex(spark, dir, path, "sq8",
+      freshHalf) === "retrain", "a cron switched to sq8 must get sq8")
+    val (cfg, index) = Sinks.loadGateIndex(spark, path)
+    assert(cfg.tier === "sq8")
+    assert(index.isInstanceOf[graft.vector.GateIndex.Sq8])
+    val indexed = index.corpus.select("corpus_id").collect()
+      .map(_.getLong(0)).toSet
+    assert(freshHalf.select("vec_id").collect().map(_.getLong(0)).toSet
+      .subsetOf(indexed), "the batch must be in the new tier's index")
+  }
+
+  test("the gate tier is parsed in one file, the one holding GateIndex, and no per-tier index publish/load remains") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the project root (cwd ${new java.io.File(".").getAbsolutePath})")
+    def files(d: java.io.File): Seq[java.io.File] = d.listFiles.toSeq.flatMap { f =>
+      if (f.isDirectory) files(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    }
+    def filesMatching(re: String): Set[String] = files(root).filter { f =>
+      re.r.findFirstIn(
+        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).nonEmpty
+    }.map(f => root.toPath.relativize(f.toPath).toString).toSet
+    val home = filesMatching("""sealed trait GateIndex\b""")
+    assert(home.size === 1, s"GateIndex defined in $home")
+    Seq("full", "pq", "sq8", "opq").foreach { tier =>
+      assert(filesMatching(java.util.regex.Pattern.quote(s"""case "$tier"""")) === home,
+        s"tier '$tier' is matched outside GateIndex")
+    }
+    assert(filesMatching("""def (publish|load)\w*IvfIndex\b""") === Set.empty)
   }
 
   test("maintainTokenizer: drift routes keep vs retrain against the published baseline; breach republishes a NEW version through the atomic swap, no-breach leaves it bit-identical") {
@@ -1262,8 +1305,8 @@ class StreamingSpec extends SparkSpec {
     // threshold = the exact micro value of fresh 1's cosine (24/25):
     // the >= boundary must REJECT, one micro below must survive
     val out = graft.streaming.TrainingPipeline.annGate(
-      input.toDF(), cents, corpusAssigned, nProbe = 1,
-      thresholdMicro = 960000L)
+      input.toDF(), graft.vector.GateIndex.Full(cents, corpusAssigned),
+      nProbe = 1, thresholdMicro = 960000L)
     val q = out.writeStream.format("memory")
       .queryName("anngate_out").outputMode(OutputMode.Append()).start()
     try {
@@ -1396,7 +1439,8 @@ class StreamingSpec extends SparkSpec {
         .schema(spark.read.parquet(srcDir).schema)
         .option("maxFilesPerTrigger", 1).parquet(srcDir)
       val q = graft.streaming.TrainingPipeline.annGate(
-          stream, cents, corpusAssigned, nProbe = 1, thresholdMicro = 960000L)
+          stream, graft.vector.GateIndex.Full(cents, corpusAssigned),
+          nProbe = 1, thresholdMicro = 960000L)
         .writeStream.format("parquet")
         .option("path", out).option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
@@ -1433,19 +1477,20 @@ class StreamingSpec extends SparkSpec {
       .toDF("cell", "corpus_id", "cv")
     val v2Assigned = Seq((1, 100L, Seq(3.0, 4.0)), (1, 101L, Seq(0.0, 5.0)))
       .toDF("cell", "corpus_id", "cv")
-    graft.streaming.Sinks.publishIvfIndex(idx, cents, v1Assigned)
+    graft.streaming.Sinks.publishGateIndex(idx,
+      graft.vector.GateIndex.Full(cents, v1Assigned))
     def writeFile(rows: Seq[(Long, Long, Seq[Double])]): Unit =
       rows.toDF("vec_id", "label", "v")
         .coalesce(1).write.mode("append").parquet(srcDir)
     // the gate loads WHATEVER index version is current at (re)start —
     // the maintenance handoff under test
     def runOnce(): Unit = {
-      val (c, assigned) = graft.streaming.Sinks.loadIvfIndex(spark, idx)
+      val (_, index) = graft.streaming.Sinks.loadGateIndex(spark, idx)
       val stream = spark.readStream
         .schema(spark.read.parquet(srcDir).schema)
         .option("maxFilesPerTrigger", 1).parquet(srcDir)
       val q = graft.streaming.TrainingPipeline.annGate(
-          stream, c, assigned, nProbe = 1, thresholdMicro = 960000L)
+          stream, index, nProbe = 1, thresholdMicro = 960000L)
         .writeStream.format("parquet")
         .option("path", out).option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
@@ -1476,14 +1521,15 @@ class StreamingSpec extends SparkSpec {
     v2Assigned.write.parquet(idx + "__tmp/assigned")
     fs.rename(p(idx), p(idx + "__bak"))
     assert(!fs.exists(p(idx)))
-    val (_, midAssigned) = graft.streaming.Sinks.loadIvfIndex(spark, idx)
+    val midAssigned = graft.streaming.Sinks.loadGateIndex(spark, idx)._2.corpus
     assert(midAssigned.filter(col("corpus_id") === 100L)
       .head().getInt(0) === 0,
       "crash-mid-swap must recover the COMPLETE v1 index, not the torn tmp")
     fs.delete(p(idx + "__tmp"), true)
     // now the real atomic publish, then the gate restarts from the SAME
     // checkpoint and must probe v2
-    graft.streaming.Sinks.publishIvfIndex(idx, cents, v2Assigned)
+    graft.streaming.Sinks.publishGateIndex(idx,
+      graft.vector.GateIndex.Full(cents, v2Assigned))
     val batch2 = Seq(
       (3L, 0L, Seq(3.0, 4.0)),  // v2: probes cell 1, exact dup present -> REJECTED
       (4L, 0L, Seq(5.0, 0.0)))  // probes cell 0, now EMPTY -> admitted
@@ -1499,8 +1545,7 @@ class StreamingSpec extends SparkSpec {
   test("PQ-compressed ADC gate admits EXACTLY the q284 batch face's adc_admit set (stream-batch parity on real data)") {
     implicit val sq = spark.sqlContext
     val dir = "/root/testdata/sf0.001"
-    val (cents, cb, corpusCodes) =
-      graft.vector.VectorOps.frozenPqIvfIndex(spark, dir)
+    val index = graft.vector.VectorOps.frozenPqIvfIndex(spark, dir)
     val want = graft.vector.VectorOps.pqAdmission(spark, dir)
       .filter(col("adc_admit") === 1L)
       .select("vec_id").collect().map(_.getLong(0)).toSet
@@ -1511,8 +1556,7 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => Vec(r.getLong(0), r.getLong(1), r.getSeq[Double](2)))
     val (b1, b2) = freshRows.splitAt(freshRows.length / 2)
     val input = MemoryStream[Vec]
-    val out = graft.streaming.TrainingPipeline.annGateAdc(
-      input.toDF(), cents, cb, corpusCodes)
+    val out = graft.streaming.TrainingPipeline.annGate(input.toDF(), index)
     val q = out.writeStream.format("memory")
       .queryName("adcgate_out").outputMode(OutputMode.Append()).start()
     try {
@@ -1568,8 +1612,7 @@ class StreamingSpec extends SparkSpec {
   test("SQ8-compressed gate admits EXACTLY the q297 batch face's sq8_admit set (stream-batch parity on real data)") {
     implicit val sq = spark.sqlContext
     val dir = "/root/testdata/sf0.001"
-    val (cents, mn, mx, corpusCodes) =
-      graft.vector.VectorOps.frozenSq8IvfIndex(spark, dir)
+    val index = graft.vector.VectorOps.frozenSq8IvfIndex(spark, dir)
     val want = graft.vector.VectorOps.sq8Admission(spark, dir)
       .filter(col("sq8_admit") === 1L)
       .select("vec_id").collect().map(_.getLong(0)).toSet
@@ -1580,8 +1623,7 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => Vec(r.getLong(0), r.getLong(1), r.getSeq[Double](2)))
     val (b1, b2) = freshRows.splitAt(freshRows.length / 2)
     val input = MemoryStream[Vec]
-    val out = graft.streaming.TrainingPipeline.annGateSq8(
-      input.toDF(), cents, mn, mx, corpusCodes)
+    val out = graft.streaming.TrainingPipeline.annGate(input.toDF(), index)
     val q = out.writeStream.format("memory")
       .queryName("sq8gate_out").outputMode(OutputMode.Append()).start()
     try {
@@ -1612,8 +1654,8 @@ class StreamingSpec extends SparkSpec {
         spark.conf.set("spark.sql.streaming.stateStore.providerClass", p))
       try {
         val input = MemoryStream[Vec]
-        val out = graft.streaming.TrainingPipeline.annGateAdc(
-          input.toDF(), cents, cb, corpusCodes,
+        val out = graft.streaming.TrainingPipeline.annGate(
+          input.toDF(), graft.vector.GateIndex.Pq(cents, cb, corpusCodes),
           nProbe = 1, thresholdMicro = 900000L)
         val q = out.writeStream.format("memory").queryName(name)
           .option("checkpointLocation",
@@ -1661,9 +1703,11 @@ class StreamingSpec extends SparkSpec {
         .head().getSeq[Int](0)
     val codesV1 = Seq((0, 100L, codesOf(mnV1, mxV1)))
       .toDF("cell", "corpus_id", "codes")
-    graft.streaming.Sinks.publishSq8IvfIndex(idx, cents, mnV1, mxV1, codesV1)
+    graft.streaming.Sinks.publishGateIndex(idx,
+      graft.vector.GateIndex.Sq8(cents, mnV1, mxV1, codesV1))
     // round-trip equality
-    val (c1, lm1, lx1, lc1) = graft.streaming.Sinks.loadSq8IvfIndex(spark, idx)
+    val (_, graft.vector.GateIndex.Sq8(c1, lm1, lx1, lc1)) =
+      graft.streaming.Sinks.loadGateIndex(spark, idx)
     assert(c1 === cents && lm1 === mnV1 && lx1 === mxV1)
     assert(lc1.select("codes").head().getSeq[Int](0) === codesOf(mnV1, mxV1))
     // maintenance computes v2 (spans AND codes), then CRASHES between
@@ -1676,8 +1720,8 @@ class StreamingSpec extends SparkSpec {
       .write.parquet(idx + "__tmp/codes")
     fs.rename(p(idx), p(idx + "__bak"))
     assert(!fs.exists(p(idx)))
-    val (_, midMn, midMx, midCodes) =
-      graft.streaming.Sinks.loadSq8IvfIndex(spark, idx)
+    val (_, graft.vector.GateIndex.Sq8(_, midMn, midMx, midCodes)) =
+      graft.streaming.Sinks.loadGateIndex(spark, idx)
     // MUTUAL consistency of whatever version loaded: re-encoding the
     // corpus vector under the LOADED spans must reproduce the LOADED
     // codes
@@ -1716,10 +1760,11 @@ class StreamingSpec extends SparkSpec {
       "test setup: the two rotations must code differently")
     val codesV1 = Seq((0, 100L, codesOf(rotV1)))
       .toDF("cell", "corpus_id", "codes")
-    graft.streaming.Sinks.publishOpqIvfIndex(idx, rotV1, alloc, cents, cb,
-      codesV1)
+    graft.streaming.Sinks.publishGateIndex(idx,
+      graft.vector.GateIndex.Opq(rotV1, alloc, cents, cb, codesV1))
     // round-trip equality
-    val (r1, a1L, c1, cb1, lc1) = graft.streaming.Sinks.loadOpqIvfIndex(spark, idx)
+    val (_, graft.vector.GateIndex.Opq(r1, a1L, c1, cb1, lc1)) =
+      graft.streaming.Sinks.loadGateIndex(spark, idx)
     assert(r1 === rotV1 && a1L === alloc && c1 === cents && cb1 === cb)
     assert(lc1.select("codes").head().getSeq[Int](0) === codesOf(rotV1))
     // maintenance computes v2 (rotation AND codes), then CRASHES between
@@ -1736,8 +1781,8 @@ class StreamingSpec extends SparkSpec {
       .write.parquet(idx + "__tmp/codes")
     fs.rename(p(idx), p(idx + "__bak"))
     assert(!fs.exists(p(idx)))
-    val (midRot, _, _, _, midCodes) =
-      graft.streaming.Sinks.loadOpqIvfIndex(spark, idx)
+    val (_, graft.vector.GateIndex.Opq(midRot, _, _, _, midCodes)) =
+      graft.streaming.Sinks.loadGateIndex(spark, idx)
     // MUTUAL consistency of whatever version loaded: re-encoding the
     // corpus vector under the LOADED rotation must reproduce the LOADED
     // codes — a new-rotation/old-codes mix silently shifts every ADC
@@ -1770,17 +1815,18 @@ class StreamingSpec extends SparkSpec {
     val cbV2 = Map((0, 0) -> Seq(1.0), (0, 1) -> Seq(0.0),
       (1, 0) -> Seq(-1.0), (1, 1) -> Seq(-5.0))
     val codesV2 = Seq((0, 100L, Seq(0, 0))).toDF("cell", "corpus_id", "codes")
-    graft.streaming.Sinks.publishPqIvfIndex(idx, cents, cbV1, codesV1)
+    graft.streaming.Sinks.publishGateIndex(idx,
+      graft.vector.GateIndex.Pq(cents, cbV1, codesV1))
     def writeFile(rows: Seq[(Long, Long, Seq[Double])]): Unit =
       rows.toDF("vec_id", "label", "v")
         .coalesce(1).write.mode("append").parquet(srcDir)
     def runOnce(): Unit = {
-      val (c, cb, codes) = graft.streaming.Sinks.loadPqIvfIndex(spark, idx)
+      val (_, index) = graft.streaming.Sinks.loadGateIndex(spark, idx)
       val stream = spark.readStream
         .schema(spark.read.parquet(srcDir).schema)
         .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      val q = graft.streaming.TrainingPipeline.annGateAdc(
-          stream, c, cb, codes, nProbe = 1, thresholdMicro = 900000L)
+      val q = graft.streaming.TrainingPipeline.annGate(
+          stream, index, nProbe = 1, thresholdMicro = 900000L)
         .writeStream.format("parquet")
         .option("path", out).option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
@@ -1799,7 +1845,8 @@ class StreamingSpec extends SparkSpec {
     codesV2.write.parquet(idx + "__tmp/codes")
     fs.rename(p(idx), p(idx + "__bak"))
     assert(!fs.exists(p(idx)))
-    val (_, midCb, midCodes) = graft.streaming.Sinks.loadPqIvfIndex(spark, idx)
+    val (_, graft.vector.GateIndex.Pq(_, midCb, midCodes)) =
+      graft.streaming.Sinks.loadGateIndex(spark, idx)
     // MUTUAL consistency of whatever version loaded: re-encoding the
     // corpus vector under the LOADED codebook must reproduce the LOADED
     // codes — a torn load (v2 codebook + v1 codes) fails this
@@ -1814,7 +1861,8 @@ class StreamingSpec extends SparkSpec {
     fs.delete(p(idx + "__tmp"), true)
     // the real atomic publish, then the gate restarts from the SAME
     // checkpoint and decides under v2 (both halves swapped together)
-    graft.streaming.Sinks.publishPqIvfIndex(idx, cents, cbV2, codesV2)
+    graft.streaming.Sinks.publishGateIndex(idx,
+      graft.vector.GateIndex.Pq(cents, cbV2, codesV2))
     writeFile(Seq(
       (3L, 0L, Seq(5.0, 4.0)),    // v2: recon now (1,-1) -> ADMITTED
       (4L, 0L, Seq(2.0, -2.0))))  // cos 1.0 vs recon -> rejected
@@ -2001,7 +2049,8 @@ class StreamingSpec extends SparkSpec {
     val cb = Map((0, 0) -> Seq(1.0), (0, 1) -> Seq(5.0),
       (1, 0) -> Seq(0.0), (1, 1) -> Seq(4.0))
     val codes = Seq((0, 100L, Seq(1, 1))).toDF("cell", "corpus_id", "codes")
-    graft.streaming.Sinks.publishPqIvfIndex(idx, cents, cb, codes,
+    graft.streaming.Sinks.publishGateIndex(idx,
+      graft.vector.GateIndex.Pq(cents, cb, codes),
       nProbe = 1, thresholdMicro = 900000L)
     assert(graft.streaming.Sinks.loadGateConfig(spark, idx) ===
       Some(graft.streaming.Sinks.GateConfig("pq", 1, 900000L)))
@@ -2045,7 +2094,8 @@ class StreamingSpec extends SparkSpec {
     writeFile(Seq((3L, 0L, Seq(8.0, 10.0)))) // same direction as vec 1 -> rejected under 900k
     runOnce()
     // the REAL atomic retune: state unchanged, threshold -> 990000
-    graft.streaming.Sinks.publishPqIvfIndex(idx, cents, cb, codes,
+    graft.streaming.Sinks.publishGateIndex(idx,
+      graft.vector.GateIndex.Pq(cents, cb, codes),
       nProbe = 1, thresholdMicro = 990000L)
     writeFile(Seq(
       (4L, 0L, Seq(4.0, 5.0)),    // cos_micro 975610 < 990000 -> NOW admitted
@@ -2080,29 +2130,29 @@ class StreamingSpec extends SparkSpec {
     }
     // tier "full": oracle-verified batch face = q261 (annAdmission)
     val (fc, fAssigned) = graft.vector.VectorOps.frozenIvfIndex(spark, dir)
-    graft.streaming.Sinks.publishIvfIndex(s"$base/full", fc, fAssigned)
+    graft.streaming.Sinks.publishGateIndex(s"$base/full",
+      graft.vector.GateIndex.Full(fc, fAssigned))
     val wantFull = graft.vector.VectorOps.annAdmission(spark, dir)
       .filter(col("admit") === 1L)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(streamThrough(s"$base/full", "tier_full") === wantFull)
     // tier "pq": batch face = q284 (pqAdmission)
-    val (pc, pcb, pcodes) = graft.vector.VectorOps.frozenPqIvfIndex(spark, dir)
-    graft.streaming.Sinks.publishPqIvfIndex(s"$base/pq", pc, pcb, pcodes)
+    graft.streaming.Sinks.publishGateIndex(s"$base/pq",
+      graft.vector.VectorOps.frozenPqIvfIndex(spark, dir))
     val wantPq = graft.vector.VectorOps.pqAdmission(spark, dir)
       .filter(col("adc_admit") === 1L)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(streamThrough(s"$base/pq", "tier_pq") === wantPq)
     // tier "sq8": batch face = q297 (sq8Admission)
-    val (sc, mn, mx, scodes) = graft.vector.VectorOps.frozenSq8IvfIndex(spark, dir)
-    graft.streaming.Sinks.publishSq8IvfIndex(s"$base/sq8", sc, mn, mx, scodes)
+    graft.streaming.Sinks.publishGateIndex(s"$base/sq8",
+      graft.vector.VectorOps.frozenSq8IvfIndex(spark, dir))
     val wantSq8 = graft.vector.VectorOps.sq8Admission(spark, dir)
       .filter(col("sq8_admit") === 1L)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(streamThrough(s"$base/sq8", "tier_sq8") === wantSq8)
     // tier "opq": batch face = q306 (opqAdmission)
-    val oidx = graft.vector.VectorOps.frozenOpqIvfIndex(spark, dir)
-    graft.streaming.Sinks.publishOpqIvfIndex(s"$base/opq", oidx.rm,
-      oidx.alloc, oidx.cents, oidx.cb, oidx.codes)
+    graft.streaming.Sinks.publishGateIndex(s"$base/opq",
+      graft.vector.VectorOps.frozenOpqIvfIndex(spark, dir)._1)
     val wantOpq = graft.vector.VectorOps.opqAdmission(spark, dir)
       .filter(col("adc_admit") === 1L)
       .select("vec_id").collect().map(_.getLong(0)).toSet
