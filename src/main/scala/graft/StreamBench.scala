@@ -120,32 +120,29 @@ object StreamBench {
     // tokenizer-health monitor: the same synthetic word pool, with a
     // frozen vocabulary covering word ids < 2500 (half the pool) so the
     // OOV path does real work; state is 3 longs per source (16 here).
-    val vocab = spark.range(2500)
-      .select(concat(lit("w"), col("id").cast("string")).as("word"),
-        (col("id") % 3 + 1).as("n_syms"))
-      .cache()
-    vocab.count()
+    val vocab = (0L until 2500L).map(i => (s"w$i", i % 3 + 1))
     // target rate/2: each input row explodes to ~12 tokens before the
     // vocab join + fold, so the monitor moves ~12x the token volume of
     // the row-shaped pipelines per reported row
     measure("oov_monitor",
-      graft.streaming.TrainingPipeline.oovMonitor(
+      graft.streaming.TrainingPipeline.tokenizerMonitor(
         rateSrc(rate).select(
           col("value").as("doc_id"),
           concat(lit("src"), (col("value") % 16).cast("string")).as("source"),
           synthText.as("text")),
-        vocab).toDF(),
+        graft.text.Tokenizer.CharBpe(Seq.empty, vocab)).toDF(),
       "append", rate / 2)
 
     // BYTE-level fertility monitor (r16): the vocab-free twin — the
     // frozen byte-merge sequence is applied IN-ROW as chained replaces
     // (no join at all), so the pipeline is one narrow projection into
-    // the 2-long-per-source fold. Merges cover the synthetic pool's
-    // hottest byte pairs ("w" + digits).
-    val byteMerges = Seq(("119", "48", "119-48"), ("119", "49", "119-49"),
-      ("49", "50", "49-50"), ("50", "51", "50-51"))
+    // the per-source fold. Merges cover the synthetic pool's hottest
+    // byte pairs ("w" + digits).
+    val byteMerges = graft.text.Tokenizer.ByteBpe(Seq(
+      (0L, "119", "48", "119-48", 0L), (1L, "119", "49", "119-49", 0L),
+      (2L, "49", "50", "49-50", 0L), (3L, "50", "51", "50-51", 0L)))
     measure("byte_fertility_monitor",
-      graft.streaming.TrainingPipeline.fertilityMonitorBytes(
+      graft.streaming.TrainingPipeline.tokenizerMonitor(
         rateSrc(rate).select(
           col("value").as("doc_id"),
           concat(lit("src"), (col("value") % 16).cast("string")).as("source"),
@@ -156,10 +153,11 @@ object StreamBench {
     // UNIGRAM fertility monitor (r16): the frozen lattice runs in-row
     // over the same synthetic pool — vocab = single chars (w + digits)
     // + hot two-char pieces, so the DP does real multi-candidate work.
-    val uniProbs: Map[String, Long] =
-      (("w" +: (0 to 9).map(_.toString)).map(_ -> 20000L) ++
-        Seq("w1" -> 60000L, "w2" -> 50000L, "12" -> 40000L,
-          "23" -> 30000L, "34" -> 25000L)).toMap
+    // (piece, is_char, cnt, p_micro); the lattice reads p_micro only
+    val uniVocab = graft.text.Tokenizer.Unigram(
+      ("w" +: (0 to 9).map(_.toString)).map(c => (c, 1, 0L, 20000L)) ++
+        Seq(("w1", 0, 0L, 60000L), ("w2", 0, 0L, 50000L),
+          ("12", 0, 0L, 40000L), ("23", 0, 0L, 30000L), ("34", 0, 0L, 25000L)))
     // doc-gate rate, not the row rate: each input row explodes to ~12
     // tokens and every token runs the INTERPRETED Viterbi lattice
     // (HOFs don't codegen — the r15 lesson); at the row rate the
@@ -167,12 +165,12 @@ object StreamBench {
     // window and reports 0. Production pre-tokenizes or batches by
     // DISTINCT word (the q308 shape) before the lattice.
     measure("unigram_fertility_monitor",
-      graft.streaming.TrainingPipeline.fertilityMonitorUnigram(
+      graft.streaming.TrainingPipeline.tokenizerMonitor(
         rateSrc(docRate).select(
           col("value").as("doc_id"),
           concat(lit("src"), (col("value") % 16).cast("string")).as("source"),
           synthText.as("text")),
-        uniProbs).toDF(),
+        uniVocab).toDF(),
       "append", docRate)
 
     // 16-dim synthetic vectors, 8-cell frozen quantizer, 1024-vector

@@ -190,12 +190,12 @@ object StreamDemo {
       .bpeTrainCore(spark, corpusWords, 12)._2
       .select(regexp_replace(trim(col("s")), " ", "").as("word"),
         size(split(trim(col("s")), "  ")).cast("long").as("n_syms"))
-      .cache()
-    val qOov = graft.streaming.TrainingPipeline.oovMonitor(
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    val qOov = graft.streaming.TrainingPipeline.tokenizerMonitor(
         spark.readStream.schema(dSchema).parquet(docsDir)
           .filter(col("doc_id") >= 250L)
           .select(col("doc_id"), col("source"), col("text")),
-        frozenVocab)
+        graft.text.Tokenizer.CharBpe(Seq.empty, frozenVocab))
       .writeStream.format("memory").queryName("demo_oov")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
 

@@ -58,6 +58,15 @@ object Sinks {
     }
   }
 
+  /** The filesystem `path` lives on — its own scheme's, not the
+    * session's default, so a table on another filesystem than
+    * `fs.defaultFS` is read and swapped where it lives. A cache lookup
+    * on the shared conf; the conf is not copied. */
+  private def fsOf(spark: org.apache.spark.sql.SparkSession,
+                   path: String): org.apache.hadoop.fs.FileSystem =
+    new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
   /** Hadoop `FileSystem.rename` signals failure by returning FALSE, not
     * by throwing — and renaming onto an EXISTING directory moves the
     * source INSIDE it (`dst/src__tmp`), silently corrupting a published
@@ -76,8 +85,7 @@ object Sinks {
     * Returns the filesystem for the caller's further checks. */
   private def recoverSwap(spark: org.apache.spark.sql.SparkSession,
                           path: String): org.apache.hadoop.fs.FileSystem = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, path)
     val dst = new org.apache.hadoop.fs.Path(path)
     val bak = new org.apache.hadoop.fs.Path(path + "__bak")
     if (!fs.exists(dst) && fs.exists(bak)) renameOrDie(fs, bak, dst)
@@ -107,8 +115,7 @@ object Sinks {
     * a concurrent old reader might still resolve. */
   private def writeSegmentDir(df: DataFrame, path: String): String = {
     val spark = df.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, path)
     val root = new org.apache.hadoop.fs.Path(segRoot(path))
     val rr = """seg-(\d+)""".r
     val next =
@@ -132,8 +139,7 @@ object Sinks {
     * stably, rather than being dropped. */
   def loadSegmentNames(spark: org.apache.spark.sql.SparkSession,
                        path: String): Seq[String] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, path)
     if (!fs.exists(new org.apache.hadoop.fs.Path(path + "/segments"))) Seq.empty
     else {
       val rr = """seg-(\d+)""".r
@@ -194,8 +200,7 @@ object Sinks {
     * segment live). Orphans from crashed publishes die here too. */
   private def gcSegments(spark: org.apache.spark.sql.SparkSession,
                          path: String, keep: Seq[String]): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, path)
     val root = new org.apache.hadoop.fs.Path(segRoot(path))
     if (fs.exists(root)) {
       val keepSet = keep.toSet
@@ -455,8 +460,7 @@ object Sinks {
     * keyed sinks and the publishers; readers first run [[recoverSwap]]. */
   private def swapInDir(spark: org.apache.spark.sql.SparkSession,
                         path: String)(write: String => Unit): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, path)
     val dst = new org.apache.hadoop.fs.Path(path)
     val tmp = new org.apache.hadoop.fs.Path(path + "__tmp")
     val bak = new org.apache.hadoop.fs.Path(path + "__bak")
@@ -466,15 +470,6 @@ object Sinks {
     if (fs.exists(dst)) renameOrDie(fs, dst, bak)
     renameOrDie(fs, tmp, dst)
     fs.delete(bak, true)
-  }
-
-  private def writeTokConfig(spark: org.apache.spark.sql.SparkSession,
-                             tmp: String, cfg: TokenizerConfig): Unit = {
-    import spark.implicits._
-    Seq((cfg.family, cfg.vocabSize, cfg.fingerprint))
-      .toDF("family", "vocab_size", "fingerprint")
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(tmp + "/config")
   }
 
   /** The TRAIN-TIME fertility of the corpus under its own freshly
@@ -513,18 +508,17 @@ object Sinks {
   // listing: every publisher rewrites config inside the atomic swap and
   // parquet part names carry a fresh UUID per write, so ANY republish —
   // even a bit-identical one landing in the same millisecond — changes
-  // the key (the payloadVerifiedOnce precedent keys on mtime, which is
-  // fine for its boolean but too coarse to key payload identity on).
-  // Fingerprint verification still runs once per (session, version) —
-  // the payloadVerifiedOnce discipline extended to the payload itself;
-  // a FAILED load is never cached (a throwing memo build re-runs on the
+  // the key (a config mtime is too coarse to key payload identity on).
+  // Fingerprint verification runs once per (session, version); a
+  // FAILED load is never cached (a throwing memo build re-runs on the
   // next call), so a healed artifact loads cleanly immediately, and an
   // IN-PLACE payload rewrite with config intact (the hand-corruption
   // class Round19Spec plants) changes the key too, because the key
   // folds every payload table's part listing, not just config's.
   private val tokCfgMemo = new graft.SessionMemo[Option[TokenizerConfig]]
   private val tokBaseMemo = new graft.SessionMemo[(Option[Long], Option[Long])]
-  private val tokArtMemo = new graft.SessionMemo[PublishedTokenizer]
+  private val tokArtMemo =
+    new graft.SessionMemo[(TokenizerConfig, graft.text.Tokenizer)]
 
   /** Bak-recovery plus the served version key of `path`: the part-file
     * names + lengths of every artifact table (unique per write — parquet
@@ -552,8 +546,7 @@ object Sinks {
                              path: String): (Option[Long], Option[Long]) = {
     val ver = recoveredVersionKey(spark, path)
     tokBaseMemo.get(spark, s"tok-baselines/$path/$ver") {
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        spark.sparkContext.hadoopConfiguration)
+      val fs = fsOf(spark, path)
       val p = new org.apache.hadoop.fs.Path(path + "/baseline")
       if (!fs.exists(p)) (None, None)
       else {
@@ -569,74 +562,24 @@ object Sinks {
     }
   }
 
-  /** The published train-time fertility baseline of the current
-    * tokenizer version (None for pre-baseline artifacts). */
-  def loadTokenizerBaseline(spark: org.apache.spark.sql.SparkSession,
-                            path: String): Option[Long] =
-    loadTokenizerBaselines(spark, path)._1
-
-  /** The published train-time OOV-rate baseline (micro) — the second
-    * drift leg (judge r18 task 3). */
-  def loadTokenizerOovBaseline(spark: org.apache.spark.sql.SparkSession,
-                               path: String): Option[Long] =
-    loadTokenizerBaselines(spark, path)._2
-
-  /** Publish one CHAR-BPE tokenizer version: the merge table (the
-    * tokenizer program) + the trained vocabulary (word → symbol count —
-    * what the OOV monitor joins). Fingerprint folds the VOCAB rows:
-    * that is the surface every consumer reads. */
-  def publishCharBpeTokenizer(spark: org.apache.spark.sql.SparkSession,
-                              path: String,
-                              merges: Seq[(Long, String, String, String, Long)],
-                              vocab: Seq[(String, Long)],
-                              baselineFertilityMicro: Option[Long] = None,
-                              baselineOovMicro: Option[Long] = None): Unit = {
+  /** Publish one tokenizer version: the family's payload tables
+    * ([[graft.text.Tokenizer.tables]]), the signed drift baselines and
+    * the 1-row config ([[graft.text.Tokenizer.config]]: family, payload
+    * row count, fingerprint over the family's
+    * [[graft.text.Tokenizer.fingerprintRows]]) in one atomic swap. */
+  def publishTokenizer(spark: org.apache.spark.sql.SparkSession,
+                       path: String, tok: graft.text.Tokenizer,
+                       baselineFertilityMicro: Option[Long] = None,
+                       baselineOovMicro: Option[Long] = None): Unit = {
     import spark.implicits._
+    val cfg = tok.config
+    val config = Seq((cfg.family, cfg.vocabSize, cfg.fingerprint))
+      .toDF("family", "vocab_size", "fingerprint")
     swapInDir(spark, path) { tmp =>
-      merges.toDF("merge_idx", "pair_a", "pair_b", "merged", "pair_count")
-        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp + "/merges")
-      vocab.toDF("word", "n_syms")
-        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp + "/vocab")
+      (tok.tables(spark) :+ ("config" -> config)).foreach { case (sub, df) =>
+        df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$tmp/$sub")
+      }
       writeTokBaseline(spark, tmp, baselineFertilityMicro, baselineOovMicro)
-      writeTokConfig(spark, tmp, TokenizerConfig("char-bpe", vocab.size,
-        tokFingerprint(vocab)))
-    }
-  }
-
-  /** Publish one BYTE-BPE tokenizer version: the frozen merge sequence
-    * IS the whole tokenizer (applied in-row — no vocabulary, no OOV
-    * edge), so the fingerprint folds (merged name, merge_idx). */
-  def publishByteBpeTokenizer(spark: org.apache.spark.sql.SparkSession,
-                              path: String,
-                              merges: Seq[(Long, String, String, String, Long)],
-                              baselineFertilityMicro: Option[Long] = None,
-                              baselineOovMicro: Option[Long] = None):
-      Unit = {
-    import spark.implicits._
-    swapInDir(spark, path) { tmp =>
-      merges.toDF("merge_idx", "pair_a", "pair_b", "merged", "pair_count")
-        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp + "/merges")
-      writeTokBaseline(spark, tmp, baselineFertilityMicro, baselineOovMicro)
-      writeTokConfig(spark, tmp, TokenizerConfig("byte-bpe", merges.size,
-        tokFingerprint(merges.map(m => (m._4, m._1)))))
-    }
-  }
-
-  /** Publish one UNIGRAM-LM tokenizer version: the vocabulary with
-    * trained counts and smoothed micro probabilities (the Viterbi
-    * lattice's whole input). Fingerprint folds (piece, p_micro). */
-  def publishUnigramTokenizer(spark: org.apache.spark.sql.SparkSession,
-                              path: String,
-                              vocab: Seq[(String, Int, Long, Long)],
-                              baselineFertilityMicro: Option[Long] = None,
-                              baselineOovMicro: Option[Long] = None): Unit = {
-    import spark.implicits._
-    swapInDir(spark, path) { tmp =>
-      vocab.toDF("piece", "is_char", "cnt", "p_micro")
-        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp + "/vocab")
-      writeTokBaseline(spark, tmp, baselineFertilityMicro, baselineOovMicro)
-      writeTokConfig(spark, tmp, TokenizerConfig("unigram", vocab.size,
-        tokFingerprint(vocab.map(v => (v._1, v._4)))))
     }
   }
 
@@ -654,29 +597,15 @@ object Sinks {
     }
   }
 
-  /** One loaded tokenizer version — whichever family the directory
-    * holds, with its verified identity attached. */
-  sealed trait PublishedTokenizer { def config: TokenizerConfig }
-  case class CharBpeArtifact(config: TokenizerConfig,
-                             merges: Seq[(Long, String, String, String, Long)],
-                             vocab: Seq[(String, Long)])
-      extends PublishedTokenizer
-  case class ByteBpeArtifact(config: TokenizerConfig,
-                             merges: Seq[(Long, String, String, String, Long)])
-      extends PublishedTokenizer
-  case class UnigramArtifact(config: TokenizerConfig,
-                             vocab: Seq[(String, Int, Long, Long)])
-      extends PublishedTokenizer {
-    def probs: Map[String, Long] = vocab.map(v => v._1 -> v._4).toMap
-  }
-
-  /** ONE read path for every tokenizer family (the [[graft.streaming
-    * .TrainingPipeline.annGateFromIndex]] shape): bak-recovery, family
-    * dispatch on the published config, and a fingerprint re-computation
-    * over the loaded payload that REFUSES a mismatch — a consumer can
-    * never run a version that is not exactly what its config claims. */
+  /** ONE read path for every tokenizer family (the [[loadGateIndex]]
+    * shape): bak-recovery, family dispatch on the published config, and
+    * a fingerprint re-computation over the loaded payload that REFUSES a
+    * mismatch — a consumer can never run a version that is not exactly
+    * what its config claims. Returns the config read back with the
+    * payload: a legacy artifact signed under the UTF-16 fold reports the
+    * fingerprint it was signed with. */
   def loadTokenizer(spark: org.apache.spark.sql.SparkSession,
-                    path: String): PublishedTokenizer = {
+                    path: String): (TokenizerConfig, graft.text.Tokenizer) = {
     val ver = recoveredVersionKey(spark, path)
     tokArtMemo.get(spark, s"tok-artifact/$path/$ver") {
       loadTokenizerUncached(spark, path)
@@ -688,49 +617,40 @@ object Sinks {
     * HERE and is never cached, so every subsequent call re-probes until
     * a republish heals the directory. */
   private def loadTokenizerUncached(spark: org.apache.spark.sql.SparkSession,
-                                    path: String): PublishedTokenizer = {
+                                    path: String):
+      (TokenizerConfig, graft.text.Tokenizer) = {
+    import graft.text.Tokenizer
     val r = spark.read.parquet(path + "/config").head()
     val cfg = TokenizerConfig(r.getString(0), r.getLong(1), r.getLong(2))
-    def mergeRows(): Seq[(Long, String, String, String, Long)] =
-      spark.read.parquet(path + "/merges").collect()
-        .map(m => (m.getLong(0), m.getString(1), m.getString(2),
-          m.getString(3), m.getLong(4)))
-        .sortBy(_._1).toSeq
+    def rows(sub: String) = spark.read.parquet(s"$path/$sub").collect()
+    def merges(): Seq[(Long, String, String, String, Long)] =
+      rows("merges").map(m => (m.getLong(0), m.getString(1), m.getString(2),
+        m.getString(3), m.getLong(4))).sortBy(_._1).toSeq
+    val tok = Tokenizer.familyOf(cfg.family) match {
+      case Tokenizer.Family.CharBpe =>
+        Tokenizer.CharBpe(merges(), rows("vocab")
+          .map(v => (v.getString(0), v.getLong(1))).sortBy(_._1).toSeq)
+      case Tokenizer.Family.ByteBpe => Tokenizer.ByteBpe(merges())
+      case Tokenizer.Family.Unigram =>
+        Tokenizer.Unigram(rows("vocab")
+          .map(v => (v.getString(0), v.getInt(1), v.getLong(2), v.getLong(3)))
+          .sortBy(_._1).toSeq)
+    }
     // verification accepts EITHER the current codepoint fold or the
     // pre-r18 UTF-16 fold (advisor r18): a non-BMP artifact signed
     // before the codepoint fix stays readable (its next republish
     // re-signs it under the current fold); the two folds agree on BMP
     // payloads, so the fallback admits nothing a torn artifact could
     // forge that the primary fold would have refused.
-    def check(rows: Seq[(String, Long)], n: Long): Unit = {
-      val got = tokFingerprint(rows)
-      require((got == cfg.fingerprint ||
-          tokFingerprintUtf16(rows) == cfg.fingerprint) && n == cfg.vocabSize,
-        s"$path payload does not match its config (family=${cfg.family} " +
-          s"fingerprint=$got/${cfg.fingerprint} rows=$n/${cfg.vocabSize}) — " +
-          "torn or hand-edited artifact; re-publish")
-    }
-    cfg.family match {
-      case "char-bpe" =>
-        val vocab = spark.read.parquet(path + "/vocab").collect()
-          .map(v => (v.getString(0), v.getLong(1))).sortBy(_._1).toSeq
-        check(vocab, vocab.size)
-        CharBpeArtifact(cfg, mergeRows(), vocab)
-      case "byte-bpe" =>
-        val merges = mergeRows()
-        check(merges.map(m => (m._4, m._1)), merges.size)
-        ByteBpeArtifact(cfg, merges)
-      case "unigram" =>
-        val vocab = spark.read.parquet(path + "/vocab").collect()
-          .map(v => (v.getString(0), v.getInt(1), v.getLong(2), v.getLong(3)))
-          .sortBy(_._1).toSeq
-        check(vocab.map(v => (v._1, v._4)), vocab.size)
-        UnigramArtifact(cfg, vocab)
-      case other =>
-        throw new IllegalArgumentException(
-          s"unknown tokenizer family '$other' in $path/config " +
-            "(expected char-bpe | byte-bpe | unigram)")
-    }
+    val fpRows = tok.fingerprintRows
+    val got = tokFingerprint(fpRows)
+    require((got == cfg.fingerprint ||
+        tokFingerprintUtf16(fpRows) == cfg.fingerprint) &&
+        fpRows.size == cfg.vocabSize,
+      s"$path payload does not match its config (family=${cfg.family} " +
+        s"fingerprint=$got/${cfg.fingerprint} rows=${fpRows.size}/" +
+        s"${cfg.vocabSize}) — torn or hand-edited artifact; re-publish")
+    (cfg, tok)
   }
 
   /** K3 analog: append into a dt-partitioned table (the daily-index

@@ -342,204 +342,60 @@ object TrainingPipeline {
   case class Admitted(source: String, doc_id: Long, n_tokens: Long,
                       cum_tokens: Long)
 
-  /** Per-source streaming token-QUOTA admission — the ingest-time face
-    * of q174's batch budget cut: each source may contribute at most
-    * `quotaTokens` tokens to the run, enforced AS DOCS ARRIVE instead
-    * of retrospectively. A doc that would overflow the remaining quota
-    * is dropped whole (never split — chunk boundaries stay q40's).
-    *
-    * State is ONE long per source (tokens admitted so far) — bounded by
-    * the source count at any corpus size, the cheapest state shape
-    * Structured Streaming has; contrast the per-fingerprint dedup state
-    * of [[corpusIngest]]. Within a micro-batch the group's docs are
-    * folded in doc_id order, so a replayed batch admits the identical
-    * set (deterministic recovery); ACROSS batches admission is
-    * arrival-order by construction — that is the semantic difference
-    * from q174 (which globally prefers long docs) and exactly what an
-    * online quota means. Works unchanged on a batch frame (single fold
-    * per source ≡ the greedy doc_id-order budget cut). */
-  case class OovObs(source: String, syms: Long, is_oov: Long)
-  case class OovStat(source: String, n_tokens: Long, n_oov: Long,
+  case class TokObs(source: String, syms: Long, is_oov: Long)
+  case class TokStat(source: String, n_tokens: Long, n_oov: Long,
                      syms_total: Long, oov_micro: Long,
                      fertility_micro: Long)
 
-  /** Streaming tokenizer-health monitor — the per-batch face of q285's
-    * frozen side (the r14 prep item "streaming fertility/OOV monitor",
-    * driven by arrival order since documents carry no event time): each
-    * micro-batch's tokens LEFT-join the broadcast frozen vocabulary
-    * (word → symbol count under the trained merges); a word the
-    * tokenizer has never seen falls back to characters (is_oov = 1,
-    * syms = chars — the byte/char-fallback real tokenizers apply), and
-    * a per-source running (tokens, OOV, symbols) state emits the
-    * cumulative OOV rate and fertility after every batch — the curve an
-    * operator watches to decide WHEN to retrain (q285 is the decision
-    * table for what a retrain would buy; this is the alarm that fires
-    * first).
+  /** Streaming tokenizer-health monitor, one for every family — the
+    * per-batch face of q278 (char-BPE), q305 (byte-BPE) and q308
+    * (unigram), driven by arrival order since documents carry no event
+    * time: each micro-batch's words go through the frozen tokenizer's
+    * per-word column ([[graft.text.Tokenizer.wordSyms]]: char-BPE's
+    * broadcast vocabulary join with its char fallback, byte-BPE's in-row
+    * merges, unigram's in-row lattice), and a per-source running
+    * (tokens, OOV, symbols) state emits the cumulative OOV rate and
+    * fertility after every batch — the curve an operator watches to
+    * decide WHEN to retrain (q285 is the decision table for what a
+    * retrain would buy; this is the alarm that fires first). Only
+    * char-BPE has an OOV edge; the other families report n_oov = 0.
     *
-    * Scale: the join is stream-static against a vocabulary-sized
+    * Scale: char-BPE's join is stream-static against a vocabulary-sized
     * broadcast; state is THREE longs per source (bounded by the source
     * count, the [[quotaAdmit]] shape — never per-word); no aggregation
     * upstream of the stateful fold, so the plan stays append-legal.
     * Works unchanged on a batch frame (one fold per source = the
-    * corpus-wide totals; StreamingSpec pins stream ≡ batch ≡ a direct
-    * aggregate). */
-  def oovMonitor(docs: DataFrame, vocab: DataFrame):
-      org.apache.spark.sql.Dataset[OovStat] = {
+    * corpus-wide totals; StreamingSpec pins stream ≡ batch ≡ each
+    * family's hash-verified batch face). */
+  def tokenizerMonitor(docs: DataFrame, tok: graft.text.Tokenizer):
+      org.apache.spark.sql.Dataset[TokStat] = {
     import org.apache.spark.sql.{Encoder, Encoders}
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    implicit val inEnc: Encoder[OovObs] = Encoders.product[OovObs]
-    implicit val outEnc: Encoder[OovStat] = Encoders.product[OovStat]
+    implicit val outEnc: Encoder[TokStat] = Encoders.product[TokStat]
     implicit val stateEnc: Encoder[(Long, Long, Long)] =
       Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
-    docs
-      .select(col("source"),
-        explode(expr(graft.text.TextOps.TokensExpr)).as("word"))
-      .join(broadcast(vocab.select(col("word"), col("n_syms"))),
-        Seq("word"), "left_outer")
-      .select(col("source"),
-        coalesce(col("n_syms"), length(col("word")).cast("long")).as("syms"),
-        col("n_syms").isNull.cast("long").as("is_oov"))
-      .as[OovObs]
+    tok.wordSyms(docs.select(col("source"),
+        explode(expr(graft.text.TextOps.TokensExpr)).as("word")))
       .groupByKey(_.source)(Encoders.STRING)
-      .flatMapGroupsWithState[(Long, Long, Long), OovStat](
+      .flatMapGroupsWithState[(Long, Long, Long), TokStat](
         OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (source: String, rows: Iterator[OovObs],
+        (source: String, rows: Iterator[TokObs],
          state: GroupState[(Long, Long, Long)]) =>
           var (nt, no, sy) = state.getOption.getOrElse((0L, 0L, 0L))
           rows.foreach { r => nt += 1; no += r.is_oov; sy += r.syms }
           state.update((nt, no, sy))
           if (nt == 0L) Iterator.empty
-          else Iterator(OovStat(source, nt, no, sy,
+          else Iterator(TokStat(source, nt, no, sy,
             math.floor(1000000.0d * no / nt + 0.5d).toLong,
             math.floor(1000000.0d * sy / nt + 0.5d).toLong))
       }
   }
 
-  case class ByteFertObs(source: String, syms: Long)
-  case class ByteFertStat(source: String, n_tokens: Long, syms_total: Long,
-                          fertility_micro: Long)
-
-  /** BYTE-level tokenizer-health monitor — [[oovMonitor]] with the
-    * char-fallback branch STRUCTURALLY ABSENT (judge r15 task 5): the
-    * frozen BYTE merge sequence (q304's artifact) is applied IN-ROW
-    * ([[graft.text.Curation.byteSegApplied]] — the exact training-time
-    * re-tokenization as chained replaces), so every word, seen or
-    * unseen, gets its TRUE frozen-tokenizer segmentation. There is no
-    * vocabulary join, no OOV flag, and no approximation: where
-    * [[oovMonitor]]'s char-fallback OVERCOUNTS an unseen word that
-    * contains trained merges (it reports raw char count), this monitor
-    * reports the real symbol count (Round16Spec pins the planted case).
-    * State is TWO longs per source. */
-  def fertilityMonitorBytes(docs: DataFrame,
-                            mergeSeq: Seq[(String, String, String)]):
-      org.apache.spark.sql.Dataset[ByteFertStat] = {
-    import org.apache.spark.sql.{Encoder, Encoders}
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    implicit val inEnc: Encoder[ByteFertObs] = Encoders.product[ByteFertObs]
-    implicit val outEnc: Encoder[ByteFertStat] = Encoders.product[ByteFertStat]
-    implicit val stateEnc: Encoder[(Long, Long)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
-    docs
-      .select(col("source"),
-        explode(expr(graft.text.TextOps.TokensExpr)).as("word"))
-      .select(col("source"),
-        size(split(trim(graft.text.Curation.byteSegApplied(col("word"), mergeSeq)),
-          "  ")).cast("long").as("syms"))
-      .as[ByteFertObs]
-      .groupByKey(_.source)(Encoders.STRING)
-      .flatMapGroupsWithState[(Long, Long), ByteFertStat](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (source: String, rows: Iterator[ByteFertObs],
-         state: GroupState[(Long, Long)]) =>
-          var (nt, sy) = state.getOption.getOrElse((0L, 0L))
-          rows.foreach { r => nt += 1; sy += r.syms }
-          state.update((nt, sy))
-          if (nt == 0L) Iterator.empty
-          else Iterator(ByteFertStat(source, nt, sy,
-            math.floor(1000000.0d * sy / nt + 0.5d).toLong))
-      }
-  }
-
-  case class UniFertObs(source: String, syms: Long)
-  case class UniFertStat(source: String, n_tokens: Long, pieces_total: Long,
-                         fertility_micro: Long)
-
-  /** UNIGRAM tokenizer-health monitor — the q308 face as a running
-    * per-source stat, completing the monitor family (char-BPE
-    * [[oovMonitor]], byte-BPE [[fertilityMonitorBytes]], unigram here):
-    * the frozen vocabulary's Viterbi lattice runs IN-ROW
-    * ([[graft.text.Curation.uniDpCol]] — no vocabulary join; the map
-    * literal ships in the plan), so every word gets its TRUE
-    * frozen-tokenizer piece count. Coverage is char-vocabulary-bounded
-    * (unigram's structural limit — an unseen CHARACTER has no lattice
-    * path and falls back to char count; byte BPE remains the
-    * total-coverage tier), which the spec pins explicitly. State: two
-    * longs per source. */
-  def fertilityMonitorUnigram(docs: DataFrame, probs: Map[String, Long]):
-      org.apache.spark.sql.Dataset[UniFertStat] = {
-    import org.apache.spark.sql.{Encoder, Encoders}
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    implicit val inEnc: Encoder[UniFertObs] = Encoders.product[UniFertObs]
-    implicit val outEnc: Encoder[UniFertStat] = Encoders.product[UniFertStat]
-    implicit val stateEnc: Encoder[(Long, Long)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
-    implicit val pairEnc: Encoder[(String, String)] =
-      Encoders.tuple(Encoders.STRING, Encoders.STRING)
-    docs
-      .select(col("source"),
-        explode(expr(graft.text.TextOps.TokensExpr)).as("word"))
-      // same coverage bound as the q308 batch face (uniWords): words of
-      // at most UniMaxWordLen chars — without the upper bound a streamed
-      // doc with a >16-char word would silently diverge from the batch
-      // artifact this monitor claims to mirror (StreamingSpec's parity
-      // held only because the test corpus max word length is 8)
-      .filter(length(col("word"))
-        .between(1, graft.text.Curation.UniMaxWordLen))
-      .as[(String, String)]
-      // the lattice runs as the unboxed Scala kernel with a
-      // per-partition WORD memo (a narrow stateless map — append-legal
-      // exactly like the column form): the Catalyst `aggregate` HOF is
-      // interpreted per word OCCURRENCE and capped this monitor at
-      // ~9k docs/s against its 10k target; the kernel + Zipf dedup
-      // clears it. Semantics are the column lattice's bit for bit —
-      // Round17Spec pins uniNpOrChars against uniDpCol on every
-      // distinct corpus word and the planted poisoned-path edges, and
-      // the stream ≡ q308-face parity test below stays the end-to-end
-      // guard.
-      .mapPartitions { it =>
-        val memo = new java.util.HashMap[String, java.lang.Long]()
-        it.map { case (source, word) =>
-          val syms = memo.computeIfAbsent(word,
-            w => graft.text.Curation.uniNpOrChars(w, probs))
-          UniFertObs(source, syms)
-        }
-      }
-      .groupByKey(_.source)(Encoders.STRING)
-      .flatMapGroupsWithState[(Long, Long), UniFertStat](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (source: String, rows: Iterator[UniFertObs],
-         state: GroupState[(Long, Long)]) =>
-          var (nt, sy) = state.getOption.getOrElse((0L, 0L))
-          rows.foreach { r => nt += 1; sy += r.syms }
-          state.update((nt, sy))
-          if (nt == 0L) Iterator.empty
-          else Iterator(UniFertStat(source, nt, sy,
-            math.floor(1000000.0d * sy / nt + 0.5d).toLong))
-      }
-  }
-
-  /** The common health row every tokenizer-family monitor reduces to:
-    * running per-source token count, symbol total, and fertility —
-    * the fields all three families share (char-BPE additionally tracks
-    * OOV; consumers needing it use [[oovMonitor]] directly). */
-  case class TokFertStat(source: String, n_tokens: Long, syms_total: Long,
-                         fertility_micro: Long)
-
   /** ONE train-and-publish job per tokenizer family — the
     * [[trainAndPublishIndex]] shape applied to the tokenizer artifacts
     * (judge r16 task 1): train on `dir`'s documents (session-memoized)
     * and publish payload + config + train-time fertility baseline in
-    * one atomic swap via the family's [[Sinks]] publisher — unless the
+    * one atomic swap via [[Sinks.publishTokenizer]] — unless the
     * directory ALREADY serves the bit-identical version
     * (content-addressed skip below). A tokenizer-maintenance cron is
     * this one call; every monitor and batch consumer picks the new
@@ -547,8 +403,10 @@ object TrainingPipeline {
   def trainAndPublishTokenizer(spark: org.apache.spark.sql.SparkSession,
                                dir: String, path: String,
                                family: String): Boolean = {
-    val base = trainedFertilityMicro(spark, dir, family)
-    val baseOov = trainedOovMicro(spark, dir, family)
+    val fam = graft.text.Tokenizer.familyOf(family)
+    val base = trainedFertilityMicro(spark, dir, fam)
+    val baseOov = trainedOovMicro(spark, dir, fam)
+    val tok = fam.trained(spark, dir)
     // Content-addressed publish: when the would-be version is
     // BIT-IDENTICAL to what the directory already serves (same family,
     // fingerprint, row count, and signed baselines), re-signing it is a
@@ -561,101 +419,38 @@ object TrainingPipeline {
     // a post-publish-corrupted payload forever — the scheduled
     // republish was the self-heal path before the skip existed, so the
     // skip must not be blind to exactly what it stopped overwriting.
-    // Verified ONCE per (session, published version): a full payload
-    // load per call re-created the q313 regression the skip exists to
-    // prevent (measured +0.85 s/registry pass); keying the memo on the
-    // config's mtime makes every republish re-verify, so a fresh cron
-    // session still detects corruption and heals it on its first call.
-    def upToDate(fp: Long, n: Long): Boolean =
-      Sinks.loadTokenizerConfigIfAny(spark, path).exists(c =>
-        c.family == family && c.fingerprint == fp && c.vocabSize == n) && {
-        val (bf, bo) = Sinks.loadTokenizerBaselines(spark, path)
-        bf.contains(base) && bo.contains(baseOov)
-      } && payloadVerifiedOnce(spark, path)
+    // The load is memoized per served version, keyed on every payload
+    // table's part listing, so an in-place payload rewrite is re-verified
+    // and repeat calls against an unchanged version read no payload.
+    val upToDate =
+      Sinks.loadTokenizerConfigIfAny(spark, path).contains(tok.config) &&
+        Sinks.loadTokenizerBaselines(spark, path) == ((Some(base), Some(baseOov))) &&
+        scala.util.Try(Sinks.loadTokenizer(spark, path)).isSuccess
     // returns TRUE when a version was actually swapped in (the caller
     // can then distinguish a real republish from a content-addressed
     // no-op — advisor r18's "retrain that never swaps" hazard)
-    family match {
-      case "char-bpe" =>
-        val (merges, vocab) = graft.text.Curation.charBpeArtifactRows(spark, dir)
-        val stale = !upToDate(Sinks.tokFingerprint(vocab), vocab.size)
-        if (stale)
-          Sinks.publishCharBpeTokenizer(spark, path, merges, vocab,
-            Some(base), Some(baseOov))
-        stale
-      case "byte-bpe" =>
-        val merges = graft.text.Curation.byteBpeArtifactRows(spark, dir)
-        val stale = !upToDate(Sinks.tokFingerprint(merges.map(m => (m._4, m._1))),
-          merges.size)
-        if (stale)
-          Sinks.publishByteBpeTokenizer(spark, path, merges,
-            Some(base), Some(baseOov))
-        stale
-      case "unigram" =>
-        val vocab = graft.text.Curation.unigramArtifactRows(spark, dir)
-        val stale = !upToDate(Sinks.tokFingerprint(vocab.map(v => (v._1, v._4))),
-          vocab.size)
-        if (stale)
-          Sinks.publishUnigramTokenizer(spark, path, vocab,
-            Some(base), Some(baseOov))
-        stale
-      case other =>
-        throw new IllegalArgumentException(
-          s"unknown tokenizer family '$other' " +
-            "(expected char-bpe | byte-bpe | unigram)")
-    }
+    if (!upToDate)
+      Sinks.publishTokenizer(spark, path, tok, Some(base), Some(baseOov))
+    !upToDate
   }
 
   private val tokBaselineMemo = new graft.SessionMemo[Long]
 
-  private val tokVerifyMemo = new graft.SessionMemo[Boolean]
-
-  /** Whether `path`'s served payload verifies against its signed
-    * fingerprint — computed at most once per (session, published
-    * version). The version key is the config table's mtime: a
-    * republish rewrites it, so the healing publish is re-verified (and
-    * a memoized FALSE can never pin a healed directory as corrupt),
-    * while repeat calls against an unchanged version (q313 runs the
-    * content-addressed check per bench pass) pay one filesystem stat
-    * instead of a payload collect. */
-  private def payloadVerifiedOnce(spark: org.apache.spark.sql.SparkSession,
-                                  path: String): Boolean = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val mtime = scala.util.Try(fs.getFileStatus(
-      new org.apache.hadoop.fs.Path(path + "/config")).getModificationTime)
-      .getOrElse(-1L)
-    tokVerifyMemo.get(spark, s"tok-verify/$path/$mtime") {
-      scala.util.Try(Sinks.loadTokenizer(spark, path)).isSuccess
-    }
-  }
-
   /** The corpus-wide train-time fertility (micro) of `dir` under its
     * own trained `family` tokenizer — the baseline every published
-    * version carries ([[Sinks.loadTokenizerBaseline]]) and the anchor
+    * version carries ([[Sinks.loadTokenizerBaselines]]) and the anchor
     * [[maintainTokenizer]]'s drift statistic compares against. Computed
     * from the family's hash-verified batch face (q278 / q305 / q308 —
-    * each spec-pinned equal to its streaming monitor), aggregated over
+    * each spec-pinned equal to [[tokenizerMonitor]]), aggregated over
     * sources; memoized per corpus version so the registry queries that
     * republish per run (q313) pay it once per session, not per pass. */
   private[graft] def trainedFertilityMicro(spark: org.apache.spark.sql.SparkSession,
-                                           dir: String, family: String): Long =
-    tokBaselineMemo.get(spark, s"tok-baseline/$dir/$family/" +
+                                           dir: String,
+                                           family: graft.text.Tokenizer.Family): Long =
+    tokBaselineMemo.get(spark, s"tok-baseline/$dir/${family.name}/" +
         graft.Tables.pathFingerprint(spark, s"$dir/documents.parquet")) {
-      val face = family match {
-        case "char-bpe" =>
-          graft.text.Curation.bpeFertility(spark, dir)
-            .select(col("n_tokens"), col("syms_total"))
-        case "byte-bpe" =>
-          graft.text.Curation.byteBpeFertility(spark, dir)
-            .select(col("n_tokens"), col("syms_total"))
-        case "unigram" =>
-          graft.text.Curation.unigramFertility(spark, dir)
-            .select(col("n_tokens"), col("pieces_total").as("syms_total"))
-        case other => throw new IllegalArgumentException(
-          s"unknown tokenizer family '$other'")
-      }
-      val r = face.agg(sum(col("n_tokens")), sum(col("syms_total"))).head()
+      val r = family.fertilityFace(spark, dir)
+        .agg(sum(col("n_tokens")), sum(col("syms_total"))).head()
       require(!r.isNullAt(0) && r.getLong(0) > 0L,
         s"$dir has no tokens to baseline a tokenizer on")
       math.floor(1000000.0d * r.getLong(1) / r.getLong(0) + 0.5d).toLong
@@ -673,9 +468,10 @@ object TrainingPipeline {
     * than a belief. Memoized per corpus version like its fertility
     * sibling. */
   private[graft] def trainedOovMicro(spark: org.apache.spark.sql.SparkSession,
-                                     dir: String, family: String): Long =
-    if (family != "char-bpe") 0L
-    else tokBaselineMemo.get(spark, s"tok-oov-baseline/$dir/$family/" +
+                                     dir: String,
+                                     family: graft.text.Tokenizer.Family): Long =
+    if (family != graft.text.Tokenizer.Family.CharBpe) 0L
+    else tokBaselineMemo.get(spark, s"tok-oov-baseline/$dir/${family.name}/" +
         graft.Tables.pathFingerprint(spark, s"$dir/documents.parquet")) {
       val vocab = graft.text.Curation.bpeVocab(spark, dir).select("word")
       val r = graft.Tables.documents(spark, dir)
@@ -689,51 +485,29 @@ object TrainingPipeline {
       math.floor(1000000.0d * r.getLong(1) / r.getLong(0) + 0.5d).toLong
     }
 
-  /** (n_tokens, syms_total, fertility_micro) of `docs` under the
-    * PUBLISHED tokenizer at `tokPath` — the delta-side statistic of
-    * [[maintainTokenizer]], computed through the one verified read path
-    * ([[fertilityMonitorFromArtifact]] — family dispatch + fingerprint
-    * refusal), so the drift decision can never run a vocabulary that is
-    * not exactly the published version. Delta-sized work: one monitor
-    * pass over `docs`. */
-  def tokenizerFertilityStats(docs: DataFrame,
-                              tokPath: String): (Long, Long, Long) = {
-    val s = tokenizerDriftStats(docs, tokPath)
-    (s._1, s._2, s._3)
-  }
-
   /** BOTH drift statistics of `docs` under the PUBLISHED tokenizer at
     * `tokPath` — (n_tokens, syms_total, fertility_micro, oov_micro) —
-    * through the same verified read path. The OOV leg (judge r18
-    * task 3) exists because fertility can stay FLAT while the
+    * the delta-side statistic of [[maintainTokenizer]], computed
+    * through the one verified read path ([[fertilityMonitorFromArtifact]]
+    * — family dispatch + fingerprint refusal), so the drift decision can
+    * never run a vocabulary that is not exactly the published version.
+    * Delta-sized work: one monitor pass over `docs`. The OOV leg (judge
+    * r18 task 3) exists because fertility can stay FLAT while the
     * vocabulary stops describing the data: a shift toward short unseen
     * words char-fallbacks to roughly the trained symbol budget, so the
     * fertility monitor sees nothing while every token misses the
-    * vocab. Char-BPE measures OOV from its monitor's vocabulary join;
-    * byte-BPE and unigram are structurally OOV-free and report 0. A
-    * delta with no measurable tokens reports (-1, -1): no evidence is
+    * vocab. Byte-BPE and unigram are structurally OOV-free and report 0.
+    * A delta with no measurable tokens reports (-1, -1): no evidence is
     * not drift. */
   def tokenizerDriftStats(docs: DataFrame,
                           tokPath: String): (Long, Long, Long, Long) = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    Sinks.loadTokenizer(spark, tokPath) match {
-      case Sinks.CharBpeArtifact(_, _, vocab) =>
-        val r = oovMonitor(docs, vocab.toDF("word", "n_syms"))
-          .toDF().agg(sum(col("n_tokens")), sum(col("syms_total")),
-            sum(col("n_oov"))).head()
-        if (r.isNullAt(0) || r.getLong(0) == 0L) (0L, 0L, -1L, -1L)
-        else (r.getLong(0), r.getLong(1),
-          math.floor(1000000.0d * r.getLong(1) / r.getLong(0) + 0.5d).toLong,
-          math.floor(1000000.0d * r.getLong(2) / r.getLong(0) + 0.5d).toLong)
-      case _ =>
-        val r = fertilityMonitorFromArtifact(docs, tokPath)
-          .toDF().agg(sum(col("n_tokens")), sum(col("syms_total"))).head()
-        if (r.isNullAt(0) || r.getLong(0) == 0L) (0L, 0L, -1L, -1L)
-        else (r.getLong(0), r.getLong(1),
-          math.floor(1000000.0d * r.getLong(1) / r.getLong(0) + 0.5d).toLong,
-          0L)
-    }
+    val r = fertilityMonitorFromArtifact(docs, tokPath)
+      .toDF().agg(sum(col("n_tokens")), sum(col("syms_total")),
+        sum(col("n_oov"))).head()
+    if (r.isNullAt(0) || r.getLong(0) == 0L) (0L, 0L, -1L, -1L)
+    else (r.getLong(0), r.getLong(1),
+      math.floor(1000000.0d * r.getLong(1) / r.getLong(0) + 0.5d).toLong,
+      math.floor(1000000.0d * r.getLong(2) / r.getLong(0) + 0.5d).toLong)
   }
 
   /** Measured (SCALE.md, "Tokenizer drift maintenance": fresh-half deltas
@@ -837,8 +611,9 @@ object TrainingPipeline {
     // config read bak-recovers a crash-mid-swap first, so a torn
     // publish resumes the OLD version instead of paying a full corpus
     // retrain it didn't need
+    val fam = graft.text.Tokenizer.familyOf(family)
     val cfgOpt = Sinks.loadTokenizerConfigIfAny(spark, path)
-    if (!cfgOpt.exists(_.family == family)) return retrain()
+    if (!cfgOpt.exists(_.family == fam.name)) return retrain()
     Sinks.loadTokenizerBaselines(spark, path) match {
       case (Some(baseline), Some(baseOov)) =>
         // a verification refusal from the artifact read path (torn or
@@ -864,33 +639,15 @@ object TrainingPipeline {
   /** ONE entry point for all THREE tokenizer-health monitors (the
     * [[annGateFromIndex]] discipline): the published artifact directory
     * itself says which family it holds, [[Sinks.loadTokenizer]]
-    * verifies the payload against the signed fingerprint, and the
-    * matching monitor runs the loaded version. Before this, the
+    * verifies the payload against the signed fingerprint, and
+    * [[tokenizerMonitor]] runs the loaded version. Before this, the
     * monitors took session-memoized vocabularies as PARAMETERS — a
     * fertility monitor on vocab v1 auditing a manifest tokenized with
     * v2 could never be ruled out; now both sides cite one published
-    * version. Output is the family-common [[TokFertStat]] row. */
+    * version. */
   def fertilityMonitorFromArtifact(docs: DataFrame, tokPath: String):
-      org.apache.spark.sql.Dataset[TokFertStat] = {
-    import org.apache.spark.sql.{Encoder, Encoders}
-    implicit val outEnc: Encoder[TokFertStat] = Encoders.product[TokFertStat]
-    val spark = docs.sparkSession
-    import spark.implicits._
-    Sinks.loadTokenizer(spark, tokPath) match {
-      case Sinks.CharBpeArtifact(_, _, vocab) =>
-        oovMonitor(docs, vocab.toDF("word", "n_syms"))
-          .map(o => TokFertStat(o.source, o.n_tokens, o.syms_total,
-            o.fertility_micro))
-      case Sinks.ByteBpeArtifact(_, merges) =>
-        fertilityMonitorBytes(docs, merges.map(m => (m._2, m._3, m._4)))
-          .map(b => TokFertStat(b.source, b.n_tokens, b.syms_total,
-            b.fertility_micro))
-      case a: Sinks.UnigramArtifact =>
-        fertilityMonitorUnigram(docs, a.probs)
-          .map(u => TokFertStat(u.source, u.n_tokens, u.pieces_total,
-            u.fertility_micro))
-    }
-  }
+      org.apache.spark.sql.Dataset[TokStat] =
+    tokenizerMonitor(docs, Sinks.loadTokenizer(docs.sparkSession, tokPath)._2)
 
   /** ONE train-and-publish job per tier — the production WRITE side of
     * [[annGateFromIndex]]: train the requested state shape on the
@@ -1107,6 +864,22 @@ object TrainingPipeline {
       .orderBy("corpus_id", "sub")
   }
 
+  /** Per-source streaming token-QUOTA admission — the ingest-time face
+    * of q174's batch budget cut: each source may contribute at most
+    * `quotaTokens` tokens to the run, enforced AS DOCS ARRIVE instead
+    * of retrospectively. A doc that would overflow the remaining quota
+    * is dropped whole (never split — chunk boundaries stay q40's).
+    *
+    * State is ONE long per source (tokens admitted so far) — bounded by
+    * the source count at any corpus size, the cheapest state shape
+    * Structured Streaming has; contrast the per-fingerprint dedup state
+    * of [[corpusIngest]]. Within a micro-batch the group's docs are
+    * folded in doc_id order, so a replayed batch admits the identical
+    * set (deterministic recovery); ACROSS batches admission is
+    * arrival-order by construction — that is the semantic difference
+    * from q174 (which globally prefers long docs) and exactly what an
+    * online quota means. Works unchanged on a batch frame (single fold
+    * per source ≡ the greedy doc_id-order budget cut). */
   def quotaAdmit(docs: DataFrame, quotaTokens: Long = 20000L):
       org.apache.spark.sql.Dataset[Admitted] = {
     import org.apache.spark.sql.{Encoder, Encoders}

@@ -823,7 +823,7 @@ object Curation {
 
   /** (word, n_syms) of the trained tokenizer — the broadcastable
     * frozen-vocabulary artifact the streaming OOV monitor
-    * ([[graft.streaming.TrainingPipeline.oovMonitor]]) joins against. */
+    * ([[graft.text.Tokenizer.CharBpe]]) joins against. */
   def bpeVocab(spark: SparkSession, dir: String,
                merges: Int = BpeDefaultMerges): DataFrame =
     bpeArtifacts(spark, dir, merges)._2.select(
@@ -1164,7 +1164,7 @@ object Curation {
     * symbols are decimal byte values, merges dash-join names. Removes
     * the char-vocab OOV edge entirely: every possible input word is a
     * byte sequence, so the frozen tokenizer SEGMENTS anything (the
-    * [[graft.streaming.TrainingPipeline.fertilityMonitorBytes]] monitor
+    * [[graft.text.Tokenizer.ByteBpe]] monitor
     * applies the merges in-row with no vocabulary lookup and no
     * fallback branch — the branch is structurally absent, not papered
     * over). Oracle: the q277 chain with the byte seg + dash names. */
@@ -2269,7 +2269,7 @@ object Curation {
     Seq("byte-bpe", "char-bpe", "unigram").map { fam =>
       graft.streaming.TrainingPipeline
         .trainAndPublishTokenizer(spark, dir, s"$root/$fam", fam)
-      val cfg = graft.streaming.Sinks.loadTokenizer(spark, s"$root/$fam").config
+      val cfg = graft.streaming.Sinks.loadTokenizer(spark, s"$root/$fam")._1
       (cfg.family, cfg.vocabSize, cfg.fingerprint)
     }.toDF("family", "vocab_size", "fingerprint").orderBy("family")
   }
@@ -2306,7 +2306,7 @@ object Curation {
         graft.Tables.pathFingerprint(spark, s"$dir/documents.parquet")) {
       val path = s"${tokArtifactRoot(dir)}/maint-char-bpe"
       TP.trainAndPublishTokenizer(spark, dir, path, "char-bpe")
-      val baseline = Sinks.loadTokenizerBaseline(spark, path).getOrElse(
+      val baseline = Sinks.loadTokenizerBaselines(spark, path)._1.getOrElse(
         throw new IllegalStateException(
           s"$path published without a baseline — trainAndPublishTokenizer " +
             "must sign one"))
@@ -2318,7 +2318,7 @@ object Curation {
       val doubled = fresh.withColumn("text",
         regexp_replace(lower(col("text")), "([a-z])", "$1$1"))
       Seq(("doubled", doubled), ("fresh", fresh)).map { case (name, d) =>
-        val (nt, sy, fert) = TP.tokenizerFertilityStats(d, path)
+        val (nt, sy, fert, _) = TP.tokenizerDriftStats(d, path)
         (name, nt, sy, fert, baseline, fert - baseline, budget,
           TP.tokenizerRouteOf(fert, baseline, budget))
       }
@@ -2355,9 +2355,10 @@ object Curation {
         graft.Tables.pathFingerprint(spark, s"$dir/documents.parquet")) {
       val path = s"${tokArtifactRoot(dir)}/maint-char-bpe"
       TP.trainAndPublishTokenizer(spark, dir, path, "char-bpe")
-      val baseFert = Sinks.loadTokenizerBaseline(spark, path).getOrElse(
+      val (baseFertOpt, baseOovOpt) = Sinks.loadTokenizerBaselines(spark, path)
+      val baseFert = baseFertOpt.getOrElse(
         throw new IllegalStateException(s"$path published without a baseline"))
-      val baseOov = Sinks.loadTokenizerOovBaseline(spark, path).getOrElse(
+      val baseOov = baseOovOpt.getOrElse(
         throw new IllegalStateException(
           s"$path published without an OOV baseline"))
       val fertBudget = TP.TokenizerFertilityBudgetMicro
@@ -2368,19 +2369,14 @@ object Curation {
       val fresh = docs.filter(col("doc_id") >= DriftSplitAt)
       val doubled = fresh.withColumn("text",
         regexp_replace(lower(col("text")), "([a-z])", "$1$1"))
-      val vocabDf = Sinks.loadTokenizer(spark, path)
-        .asInstanceOf[Sinks.CharBpeArtifact].vocab.toDF("word", "n_syms")
       // one planted word per token row: the monitors tokenize each
       // row's text, and the drift statistics are order-free per-token
       // sums, so a one-word-per-row delta measures identically to a
       // re-concatenated document
-      val unseen = fresh
-        .select(col("doc_id"), col("source"),
-          explode(expr(graft.text.TextOps.TokensExpr)).as("word"))
-        .join(broadcast(vocabDf), Seq("word"), "left_outer")
-        .select(col("doc_id"), col("source"),
-          expr("repeat('~', cast(coalesce(n_syms, length(word)) as int))")
-            .as("text"))
+      val unseen = Sinks.loadTokenizer(spark, path)._2
+        .wordSyms(fresh.select(col("source"),
+          explode(expr(graft.text.TextOps.TokensExpr)).as("word")))
+        .select(col("source"), expr("repeat('~', cast(syms as int))").as("text"))
       Seq(("doubled", doubled), ("fresh", fresh), ("unseen", unseen))
         .map { case (name, d) =>
           val (nt, sy, fert, oov) = TP.tokenizerDriftStats(d, path)
@@ -2409,8 +2405,8 @@ object Curation {
     val path = s"${tokArtifactRoot(dir)}/unigram"
     graft.streaming.TrainingPipeline
       .trainAndPublishTokenizer(spark, dir, path, "unigram")
-    val art = graft.streaming.Sinks.loadTokenizer(spark, path)
-      .asInstanceOf[graft.streaming.Sinks.UnigramArtifact]
+    val (cfg, uni: Tokenizer.Unigram) =
+      graft.streaming.Sinks.loadTokenizer(spark, path)
     val manifest = trainingManifest(spark, dir)
     val docWords = graft.Tables.documents(spark, dir)
       .join(manifest.select("doc_id"), "doc_id")
@@ -2420,7 +2416,7 @@ object Curation {
       .withColumn("np",
         when(length(col("word")).between(1, UniMaxWordLen),
           coalesce(
-            element_at(uniDpCol(col("word"), art.probs),
+            element_at(uniDpCol(col("word"), uni.probs),
               length(col("word")) + lit(1)).getField("np").cast("long"),
             length(col("word")).cast("long")))
           .otherwise(length(col("word")).cast("long")))
@@ -2428,7 +2424,7 @@ object Curation {
     manifest.join(pieces, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_tokens"), col("shard"),
         coalesce(col("pieces_total"), lit(0L)).as("pieces_total"),
-        lit(art.config.fingerprint).as("tok_fingerprint"))
+        lit(cfg.fingerprint).as("tok_fingerprint"))
       .orderBy("doc_id")
   }
 
@@ -2452,7 +2448,7 @@ object Curation {
     * nothing corpus-sized is ever broadcast (the prior shape broadcast
     * the per-DISTINCT-WORD lattice results — model-sized at sf0.x but
     * corpus-growing at 100 TB, the one such site in the repo; the
-    * streaming monitor at TrainingPipeline.fertilityMonitorUnigram
+    * streaming monitor's [[graft.text.Tokenizer.Unigram]] column
     * always used this inline shape). */
   def unigramFertility(spark: SparkSession, dir: String): DataFrame = {
     val (_, probs) = unigramArtifacts(spark, dir)

@@ -39,12 +39,12 @@ class Round17Spec extends SparkSpec {
     Seq("char-bpe", "byte-bpe", "unigram").foreach { fam =>
       TrainingPipeline.trainAndPublishTokenizer(spark, dir, s"$base/$fam", fam)
       val art = Sinks.loadTokenizer(spark, s"$base/$fam")
-      assert(art.config.family === fam)
-      assert(art.config.vocabSize > 0)
+      assert(art._1.family === fam)
+      assert(art._1.vocabSize > 0)
     }
     // roundtrip preserves the exact training payload
     val uni = Sinks.loadTokenizer(spark, s"$base/unigram")
-      .asInstanceOf[Sinks.UnigramArtifact]
+      ._2.asInstanceOf[graft.text.Tokenizer.Unigram]
     val trained = graft.text.Curation.unigramArtifactRows(spark, dir)
     assert(uni.vocab === trained.sortBy(_._1))
     // tamper: rewrite the vocab payload with one p_micro changed — the
@@ -68,22 +68,22 @@ class Round17Spec extends SparkSpec {
     val v1 = Seq(("a", 1, 5L, 100000L), ("b", 1, 3L, 60000L))
     val v2 = Seq(("a", 1, 9L, 200000L), ("b", 1, 1L, 20000L),
       ("ab", 0, 4L, 80000L))
-    Sinks.publishUnigramTokenizer(spark, path, v1)
-    Sinks.publishUnigramTokenizer(spark, path, v2)
+    Sinks.publishTokenizer(spark, path, graft.text.Tokenizer.Unigram(v1))
+    Sinks.publishTokenizer(spark, path, graft.text.Tokenizer.Unigram(v2))
     // simulate the crash window between "dst → bak" and "tmp → dst":
     // only bak exists — the loader must restore and serve it
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     assert(fs.rename(new org.apache.hadoop.fs.Path(path),
       new org.apache.hadoop.fs.Path(path + "__bak")))
-    val rec = Sinks.loadTokenizer(spark, path)
-      .asInstanceOf[Sinks.UnigramArtifact]
+    val (recCfg, recTok) = Sinks.loadTokenizer(spark, path)
+    val rec = recTok.asInstanceOf[graft.text.Tokenizer.Unigram]
     assert(rec.vocab.map(_._1).toSet === Set("a", "b", "ab"),
       "recovery must yield the last COMPLETE version (v2)")
     // a half-written tmp directory must never be visible to a loader
-    Sinks.publishUnigramTokenizer(spark, path + "__tmp_probe", v1)
-    assert(Sinks.loadTokenizer(spark, path).config.fingerprint ===
-      rec.config.fingerprint)
+    Sinks.publishTokenizer(spark, path + "__tmp_probe", graft.text.Tokenizer.Unigram(v1))
+    assert(Sinks.loadTokenizer(spark, path)._1.fingerprint ===
+      recCfg.fingerprint)
   }
 
   // ---------------------------------------------------------------- //

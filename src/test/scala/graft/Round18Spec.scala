@@ -166,25 +166,25 @@ class Round18Spec extends SparkSpec {
         .getModificationTime
     }
     TP.trainAndPublishTokenizer(spark, dir, path, "char-bpe")
-    val v1 = Sinks.loadTokenizer(spark, path).config
+    val v1 = Sinks.loadTokenizer(spark, path)._1
     val t1 = mtimeOf()
     Thread.sleep(1100) // HDFS-local mtime granularity is 1 s
     // identical corpus + family: the publish is a no-op (no new swap)
     TP.trainAndPublishTokenizer(spark, dir, path, "char-bpe")
     assert(mtimeOf() === t1, "re-signing an identical version must not swap")
-    assert(Sinks.loadTokenizer(spark, path).config === v1)
+    assert(Sinks.loadTokenizer(spark, path)._1 === v1)
     // a directory whose BASELINE is missing (legacy) must republish
     // even though the payload fingerprint matches
     val art = Sinks.loadTokenizer(spark, path)
-      .asInstanceOf[Sinks.CharBpeArtifact]
+      ._2.asInstanceOf[graft.text.Tokenizer.CharBpe]
     val legacy = s"$base/legacy"
-    Sinks.publishCharBpeTokenizer(spark, legacy, art.merges, art.vocab)
+    Sinks.publishTokenizer(spark, legacy, art)
     TP.trainAndPublishTokenizer(spark, dir, legacy, "char-bpe")
-    assert(Sinks.loadTokenizerBaseline(spark, legacy).nonEmpty,
+    assert(Sinks.loadTokenizerBaselines(spark, legacy)._1.nonEmpty,
       "a fingerprint match without a baseline must still republish")
     // a different family at the same path must republish
     TP.trainAndPublishTokenizer(spark, dir, path, "unigram")
-    assert(Sinks.loadTokenizer(spark, path).config.family === "unigram")
+    assert(Sinks.loadTokenizer(spark, path)._1.family === "unigram")
   }
 
   test("lloydStepOnSeeds: duplicate seed vectors dedupe to first occurrence instead of aborting") {

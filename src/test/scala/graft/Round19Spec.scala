@@ -79,13 +79,13 @@ class Round19Spec extends SparkSpec {
     val fresh = docs.filter(col("doc_id") >= graft.text.Curation.DriftSplitAt)
     assert(TP.maintainTokenizer(spark, realDir, path, "char-bpe", fresh)
       === "retrain") // bootstrap
-    assert(Sinks.loadTokenizerOovBaseline(spark, path).nonEmpty,
+    assert(Sinks.loadTokenizerBaselines(spark, path)._2.nonEmpty,
       "publish must sign the OOV baseline beside the fertility baseline")
-    val baseFert = Sinks.loadTokenizerBaseline(spark, path).get
-    val baseOov = Sinks.loadTokenizerOovBaseline(spark, path).get
+    val baseFert = Sinks.loadTokenizerBaselines(spark, path)._1.get
+    val baseOov = Sinks.loadTokenizerBaselines(spark, path)._2.get
     // the planted delta: repeat('~', n_syms) per token (q322's shape)
     val vocabDf = Sinks.loadTokenizer(spark, path)
-      .asInstanceOf[Sinks.CharBpeArtifact].vocab.toDF("word", "n_syms")
+      ._2.asInstanceOf[graft.text.Tokenizer.CharBpe].vocab.toDF("word", "n_syms")
     val unseen = fresh
       .select(col("doc_id"), col("source"),
         explode(expr(graft.text.TextOps.TokensExpr)).as("word"))
@@ -109,12 +109,12 @@ class Round19Spec extends SparkSpec {
     // the honored contract: dir includes the drifted mass -> the
     // retrain publishes a genuinely new version
     val dirB = s"$base/corpusB"
-    val v1 = Sinks.loadTokenizer(spark, path).config
+    val v1 = Sinks.loadTokenizer(spark, path)._1
     docs.unionByName(unseen.withColumn("doc_id", col("doc_id") + lit(100000L)))
       .write.parquet(s"$dirB/documents.parquet")
     assert(TP.maintainTokenizer(spark, dirB, path, "char-bpe", unseen)
       === "retrain")
-    assert(Sinks.loadTokenizer(spark, path).config.fingerprint
+    assert(Sinks.loadTokenizer(spark, path)._1.fingerprint
       !== v1.fingerprint)
     // the retrain absorbed the drifted mass: under the NEW version the
     // planted words are vocabulary hits, so the OOV leg is quiet (the
@@ -123,19 +123,19 @@ class Round19Spec extends SparkSpec {
     // was the right routing)
     val (_, _, _, oAfter) = TP.tokenizerDriftStats(unseen, path)
     assert(math.abs(oAfter -
-      Sinks.loadTokenizerOovBaseline(spark, path).get)
+      Sinks.loadTokenizerBaselines(spark, path)._2.get)
       <= TP.TokenizerOovBudgetMicro)
     // legacy artifact with a fertility baseline but NO OOV baseline:
     // migrate via retrain, never crash
     val legacy = s"$base/legacy"
     val art = Sinks.loadTokenizer(spark, path)
-      .asInstanceOf[Sinks.CharBpeArtifact]
-    Sinks.publishCharBpeTokenizer(spark, legacy, art.merges, art.vocab,
+      ._2.asInstanceOf[graft.text.Tokenizer.CharBpe]
+    Sinks.publishTokenizer(spark, legacy, art,
       Some(baseFert))
-    assert(Sinks.loadTokenizerOovBaseline(spark, legacy).isEmpty)
+    assert(Sinks.loadTokenizerBaselines(spark, legacy)._2.isEmpty)
     assert(TP.maintainTokenizer(spark, dirB, legacy, "char-bpe", fresh)
       === "retrain")
-    assert(Sinks.loadTokenizerOovBaseline(spark, legacy).nonEmpty)
+    assert(Sinks.loadTokenizerBaselines(spark, legacy)._2.nonEmpty)
   }
 
   // ---------------------------------------------------------------- //
@@ -172,6 +172,26 @@ class Round19Spec extends SparkSpec {
     assert(scala.util.Try(Sinks.loadTokenizer(spark, path)).isSuccess)
   }
 
+  test("content-addressed publish: a payload corrupted in place after a skipped republish is republished") {
+    import graft.streaming.{Sinks, TrainingPipeline => TP}
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft_tokskip").toString
+    val dir = s"$base/corpus"
+    Seq((1L, "web", "the thin thing in the bin"), (2L, "books", "then the thorn"))
+      .toDF("doc_id", "source", "text").write.parquet(s"$dir/documents.parquet")
+    val path = s"$base/tok"
+    assert(TP.trainAndPublishTokenizer(spark, dir, path, "char-bpe"))
+    // the same version again: a skip, after verifying the served payload
+    assert(!TP.trainAndPublishTokenizer(spark, dir, path, "char-bpe"))
+    // corrupt the payload in place; the config directory is untouched
+    Seq(("corrupted", 1L)).toDF("word", "n_syms")
+      .write.mode("overwrite").parquet(s"$path/vocab")
+    intercept[Exception](Sinks.loadTokenizer(spark, path))
+    assert(TP.trainAndPublishTokenizer(spark, dir, path, "char-bpe"),
+      "a payload corrupted after a verified skip must read as not-up-to-date")
+    assert(scala.util.Try(Sinks.loadTokenizer(spark, path)).isSuccess)
+  }
+
   // ---------------------------------------------------------------- //
   // Opt r19: the tokenizer read path memoizes per (session, served
   // version) — a republish at the SAME path in the SAME session must
@@ -188,7 +208,7 @@ class Round19Spec extends SparkSpec {
     val path = s"$base/tok"
     val m1 = Seq((1L, "a", "b", "ab", 3L))
     val v1 = Seq(("ab", 1L), ("cd", 2L))
-    Sinks.publishCharBpeTokenizer(spark, path, m1, v1, Some(111L), Some(0L))
+    Sinks.publishTokenizer(spark, path, graft.text.Tokenizer.CharBpe(m1, v1), Some(111L), Some(0L))
     val a1 = Sinks.loadTokenizer(spark, path)
     // repeated load of the unchanged version returns the memoized
     // instance (no re-read, the q313/q314 per-pass win)
@@ -197,9 +217,9 @@ class Round19Spec extends SparkSpec {
     assert(Sinks.loadTokenizerBaselines(spark, path) === (Some(111L), Some(0L)))
     // republish DIFFERENT content at the same path: every loader sees v2
     val v2 = Seq(("ab", 1L), ("cd", 2L), ("ef", 2L))
-    Sinks.publishCharBpeTokenizer(spark, path, m1, v2, Some(222L), Some(0L))
+    Sinks.publishTokenizer(spark, path, graft.text.Tokenizer.CharBpe(m1, v2), Some(222L), Some(0L))
     assert(Sinks.loadTokenizer(spark, path)
-      .asInstanceOf[Sinks.CharBpeArtifact].vocab.toSet === v2.toSet)
+      ._2.asInstanceOf[graft.text.Tokenizer.CharBpe].vocab.toSet === v2.toSet)
     assert(Sinks.loadTokenizerConfigIfAny(spark, path).get.vocabSize === 3L)
     assert(Sinks.loadTokenizerBaselines(spark, path)._1 === Some(222L))
     // in-place payload rewrite, config untouched: the refusal must not
@@ -301,7 +321,7 @@ class Round19Spec extends SparkSpec {
       .toDF("family", "vocab_size", "fingerprint")
       .write.parquet(s"$path/config")
     val art = Sinks.loadTokenizer(spark, path)
-      .asInstanceOf[Sinks.CharBpeArtifact]
+      ._2.asInstanceOf[graft.text.Tokenizer.CharBpe]
     assert(art.vocab.toSet === vocab.toSet)
     // a fingerprint neither fold produces still refuses
     Seq(("char-bpe", vocab.size.toLong, 12345L))

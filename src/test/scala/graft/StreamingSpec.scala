@@ -210,9 +210,9 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     // frozen vocab: 'ab' tokenizes to 1 symbol, 'cd' to 2. 'zzz' is
     // UNSEEN → char fallback (3 symbols, counted OOV).
-    val vocab = Seq(("ab", 1L), ("cd", 2L)).toDF("word", "n_syms")
+    val vocab = graft.text.Tokenizer.CharBpe(Seq.empty, Seq(("ab", 1L), ("cd", 2L)))
     val input = MemoryStream[(Long, String, String)]
-    val mon = TrainingPipeline.oovMonitor(
+    val mon = TrainingPipeline.tokenizerMonitor(
       input.toDF().toDF("doc_id", "source", "text"), vocab)
     val q = mon.writeStream.format("memory").queryName("oov_out")
       .outputMode(OutputMode.Append()).start()
@@ -235,7 +235,7 @@ class StreamingSpec extends SparkSpec {
         Seq(("srcB", 2L, 0L, 2L, 0L, 1000000L)))
       // batch-frame face: the same data through the same operator in
       // one pass lands on the stream's final totals
-      val batch = TrainingPipeline.oovMonitor(
+      val batch = TrainingPipeline.tokenizerMonitor(
         Seq((1L, "srcA", "ab cd"), (2L, "srcB", "ab ab"), (3L, "srcA", "zzz ab"))
           .toDF("doc_id", "source", "text"), vocab)
         .collect().map(s => (s.source, s.n_tokens, s.n_oov, s.syms_total))
@@ -254,8 +254,9 @@ class StreamingSpec extends SparkSpec {
     val probs = Map("a" -> 300000L, "b" -> 300000L, "z" -> 100000L,
       "ab" -> 350000L)
     val input = MemoryStream[(Long, String, String)]
-    val mon = TrainingPipeline.fertilityMonitorUnigram(
-      input.toDF().toDF("doc_id", "source", "text"), probs)
+    val mon = TrainingPipeline.tokenizerMonitor(
+      input.toDF().toDF("doc_id", "source", "text"),
+      graft.text.Tokenizer.Unigram(probs.toSeq.map { case (p, m) => (p, 0, 0L, m) }))
     val q = mon.writeStream.format("memory").queryName("unifert_out")
       .outputMode(OutputMode.Append()).start()
     try {
@@ -263,7 +264,8 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       input.addData((2L, "srcA", "zq"))
       q.processAllAvailable()
-      val rows = spark.table("unifert_out").collect()
+      val rows = spark.table("unifert_out")
+        .select("source", "n_tokens", "syms_total", "fertility_micro").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       // batch 1: 2 tokens, 2+1 pieces; after batch 2: 3 tokens, 3+2
       assert(rows.toSet === Set(("srcA", 2L, 3L, 1500000L),
@@ -272,14 +274,14 @@ class StreamingSpec extends SparkSpec {
     // real-data parity: final running totals per source ≡ the
     // oracle-verified q308 face (same frozen probs, same word rule)
     val dir = "/root/testdata/sf0.001"
-    val (_, probsF) = graft.text.Curation.unigramArtifacts(spark, dir)
+    val (vocabF, _) = graft.text.Curation.unigramArtifacts(spark, dir)
     val want = graft.text.Curation.unigramFertility(spark, dir)
       .select("source", "n_tokens", "pieces_total")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    val batch = TrainingPipeline.fertilityMonitorUnigram(
+    val batch = TrainingPipeline.tokenizerMonitor(
       graft.Tables.documents(spark, dir)
-        .select("doc_id", "source", "text"), probsF)
-      .collect().map(s => (s.source, s.n_tokens, s.pieces_total)).toSet
+        .select("doc_id", "source", "text"), graft.text.Tokenizer.Unigram(vocabF))
+      .collect().map(s => (s.source, s.n_tokens, s.syms_total)).toSet
     assert(batch === want,
       "monitor totals must equal the hash-verified q308 face")
   }
@@ -526,6 +528,35 @@ class StreamingSpec extends SparkSpec {
         s"tier '$tier' is matched outside GateIndex")
     }
     assert(filesMatching("""def (publish|load)\w*IvfIndex\b""") === Set.empty)
+    // the tokenizer family is parsed in the file holding Tokenizer, one
+    // publish serves every family, and every filesystem is resolved
+    // from its path
+    val tokHome = filesMatching("""sealed trait Tokenizer\b""")
+    assert(tokHome.size === 1, s"Tokenizer defined in $tokHome")
+    Seq("char-bpe", "byte-bpe", "unigram").foreach { fam =>
+      assert(filesMatching(java.util.regex.Pattern.quote(s"""case "$fam"""")) === tokHome,
+        s"family '$fam' is matched outside Tokenizer")
+    }
+    assert(filesMatching("""def publish(CharBpe|ByteBpe|Unigram)Tokenizer\b""") === Set.empty)
+    assert(filesMatching("""FileSystem\.get\(""") === Set.empty)
+  }
+
+  test("keyed sinks resolve the filesystem from the table path, not the default filesystem") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.alt.impl", classOf[AltSchemeFs].getName)
+    try {
+      val base = java.nio.file.Files.createTempDirectory("graft_altfs").toString
+      val path = s"alt:$base/t"
+      graft.streaming.Sinks.upsertByKey(
+        Seq((1L, 1L, 1L, "a")).toDF("k", "ts", "tie", "v"),
+        path, Seq("k"), "ts", "tie")
+      graft.streaming.Sinks.upsertByKey(
+        Seq((1L, 2L, 1L, "b"), (2L, 1L, 1L, "c")).toDF("k", "ts", "tie", "v"),
+        path, Seq("k"), "ts", "tie")
+      val got = spark.read.parquet(path).select("k", "v").as[(Long, String)]
+        .collect().toSet
+      assert(got === Set((1L, "b"), (2L, "c")))
+    } finally conf.unset("fs.alt.impl")
   }
 
   test("maintainTokenizer: drift routes keep vs retrain against the published baseline; breach republishes a NEW version through the atomic swap, no-breach leaves it bit-identical") {
@@ -551,13 +582,13 @@ class StreamingSpec extends SparkSpec {
     // baseline with the version
     assert(TP.maintainTokenizer(spark, dirA, path, "char-bpe", fresh)
       === "retrain")
-    val v1 = Sinks.loadTokenizer(spark, path).config
-    assert(Sinks.loadTokenizerBaseline(spark, path).nonEmpty,
+    val v1 = Sinks.loadTokenizer(spark, path)._1
+    assert(Sinks.loadTokenizerBaselines(spark, path)._1.nonEmpty,
       "trainAndPublishTokenizer must publish the train-time baseline")
     // undrifted same-distribution delta: keep, version bit-identical
     assert(TP.maintainTokenizer(spark, dirA, path, "char-bpe", fresh)
       === "keep")
-    assert(Sinks.loadTokenizer(spark, path).config === v1,
+    assert(Sinks.loadTokenizer(spark, path)._1 === v1,
       "a keep must not touch the published version")
     // drifted delta (letter-doubled text): breach -> retrain on the
     // corpus that now includes the shifted mass -> NEW version visible
@@ -566,23 +597,23 @@ class StreamingSpec extends SparkSpec {
       regexp_replace(lower(col("text")), "([a-z])", "$1$1"))
     assert(TP.maintainTokenizer(spark, dirB, path, "char-bpe", doubled)
       === "retrain")
-    val v2 = Sinks.loadTokenizer(spark, path).config
+    val v2 = Sinks.loadTokenizer(spark, path)._1
     assert(v2.fingerprint !== v1.fingerprint,
       "a breach retrain on a changed corpus must publish a new version")
     // legacy pre-baseline artifact: migrate via retrain, never crash
     val art = Sinks.loadTokenizer(spark, path)
-      .asInstanceOf[Sinks.CharBpeArtifact]
+      ._2.asInstanceOf[graft.text.Tokenizer.CharBpe]
     val legacy = s"$base/legacy"
-    Sinks.publishCharBpeTokenizer(spark, legacy, art.merges, art.vocab)
-    assert(Sinks.loadTokenizerBaseline(spark, legacy).isEmpty)
+    Sinks.publishTokenizer(spark, legacy, art)
+    assert(Sinks.loadTokenizerBaselines(spark, legacy)._1.isEmpty)
     assert(TP.maintainTokenizer(spark, dirB, legacy, "char-bpe", fresh)
       === "retrain")
-    assert(Sinks.loadTokenizerBaseline(spark, legacy).nonEmpty,
+    assert(Sinks.loadTokenizerBaselines(spark, legacy)._1.nonEmpty,
       "the migrating retrain signs a baseline")
     // family mismatch: the requested family wins via retrain
     assert(TP.maintainTokenizer(spark, dirB, legacy, "unigram", fresh)
       === "retrain")
-    assert(Sinks.loadTokenizer(spark, legacy).config.family === "unigram")
+    assert(Sinks.loadTokenizer(spark, legacy)._1.family === "unigram")
     // and the q321 reporting face agrees with the routing the
     // maintenance call actually takes on the same corpus
     val routes = graft.text.Curation
@@ -638,8 +669,8 @@ class StreamingSpec extends SparkSpec {
     val base = java.nio.file.Files.createTempDirectory("graft_tokswap").toString
     val path = s"$base/uni"
     // v1: only chars — 'abab' segments to 4 pieces
-    Sinks.publishUnigramTokenizer(spark, path,
-      Seq(("a", 1, 5L, 300000L), ("b", 1, 5L, 300000L)))
+    Sinks.publishTokenizer(spark, path, graft.text.Tokenizer.Unigram(
+      Seq(("a", 1, 5L, 300000L), ("b", 1, 5L, 300000L))))
     val input = MemoryStream[(Long, String, String)]
     val mon1 = TrainingPipeline.fertilityMonitorFromArtifact(
       input.toDF().toDF("doc_id", "source", "text"), path)
@@ -649,12 +680,13 @@ class StreamingSpec extends SparkSpec {
       input.addData((1L, "srcA", "abab"))
       q.processAllAvailable()
       // v2 lands mid-stream: 'ab' piece added — 'abab' would be 2 pieces
-      Sinks.publishUnigramTokenizer(spark, path,
+      Sinks.publishTokenizer(spark, path, graft.text.Tokenizer.Unigram(
         Seq(("a", 1, 2L, 150000L), ("b", 1, 2L, 150000L),
-          ("ab", 0, 4L, 400000L)))
+          ("ab", 0, 4L, 400000L))))
       input.addData((2L, "srcA", "abab"))
       q.processAllAvailable()
-      val rows = spark.table("tokswap_out").collect()
+      val rows = spark.table("tokswap_out")
+        .select("source", "n_tokens", "syms_total").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
       // the RUNNING monitor keeps v1's lattice for both batches (its
       // plan captured the loaded version — the gate restart contract):
@@ -1998,13 +2030,14 @@ class StreamingSpec extends SparkSpec {
 
   test("byte fertility monitor: stream cumulative equals the batch aggregate, with NO vocabulary and NO fallback branch") {
     implicit val sq = spark.sqlContext
-    val mergeSeq = Seq(("116", "104", "116-104"), ("105", "110", "105-110"))
+    val mergeSeq = graft.text.Tokenizer.ByteBpe(Seq(
+      (0L, "116", "104", "116-104", 0L), (1L, "105", "110", "105-110", 0L)))
     val d1 = Doc(1, "web", "en", "the thin thing")
     val d2 = Doc(2, "web", "en", "in the bin")
     val d3 = Doc(3, "books", "en", "unseen thorn word")
     val input = MemoryStream[Doc]
     val out = graft.streaming.TrainingPipeline
-      .fertilityMonitorBytes(input.toDF(), mergeSeq)
+      .tokenizerMonitor(input.toDF(), mergeSeq)
     val q = out.toDF().writeStream.format("memory")
       .queryName("bytefert_out").outputMode(OutputMode.Append()).start()
     try {
@@ -2021,7 +2054,7 @@ class StreamingSpec extends SparkSpec {
         .select(col("source"), col("m.n_tokens"), col("m.syms_total"))
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
       val want = graft.streaming.TrainingPipeline
-        .fertilityMonitorBytes(
+        .tokenizerMonitor(
           Seq(d1, d2, d3).map(d => (d.doc_id, d.source, d.lang, d.text))
             .toDF("doc_id", "source", "lang", "text"), mergeSeq)
         .toDF().select("source", "n_tokens", "syms_total")
@@ -2175,4 +2208,11 @@ class StreamingSpec extends SparkSpec {
     }
     assert(err.getMessage.contains("config missing"))
   }
+}
+
+/** The local filesystem under a second scheme, `alt:`, so a test can put
+  * a table on a filesystem other than the session's default one. */
+class AltSchemeFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("alt:///")
+  override def getScheme: String = "alt"
 }
